@@ -96,9 +96,8 @@ def spread_if_narrow(df: DataFrame, parallelism: int | None = None) -> DataFrame
     the scan reads local files: the exact probe (`df.rdd.getNumPartitions`)
     forces full physical planning and costs ~0.2-0.3 s of driver time per
     call — pure plan-construction overhead on every query build. The
-    estimate mirrors Spark's split math closely enough for an
-    under-partitioned? yes/no decision; non-local schemes fall back to the
-    exact probe.
+    estimate repeats Spark's split-then-pack math (unit-pinned equal to
+    the probe); non-local schemes fall back to the exact probe.
     """
     if df.isStreaming:
         return df
@@ -112,15 +111,17 @@ def spread_if_narrow(df: DataFrame, parallelism: int | None = None) -> DataFrame
 
 
 def _scan_partition_estimate(df: DataFrame) -> int | None:
-    """Approximate scan partition count from leaf-file sizes (local files
-    only — returns None otherwise, including post-shuffle/non-scan plans
-    where inputFiles is empty). Mirrors FilePartition packing INCLUDING
-    the bytesPerCore clamp: Spark's maxSplitBytes is
-    min(maxPartitionBytes, max(openCost, totalBytes/defaultParallelism)),
-    so tables smaller than maxPartitionBytes × cores already split near
-    core count — without the clamp the estimate undercounts and
-    spread_if_narrow would ADD a repartition shuffle the exact probe
-    avoided. Config values come from the session, not hardcoded."""
+    """Scan partition count from leaf-file sizes (local files only —
+    returns None otherwise, including post-shuffle/non-scan plans where
+    inputFiles is empty). Mirrors Spark's split-then-pack math
+    (FilePartition.getFilePartitions): maxSplitBytes is
+    min(maxPartitionBytes, max(openCost, Σ(size + openCost) / minPartNum)),
+    each file splits into maxSplitBytes chunks, and the chunks, largest
+    first, pack into a partition until the next one would push it past
+    maxSplitBytes — every packed chunk charging its size plus openCost.
+    The open-cost padding only decides where partitions close; it is
+    never data to divide (a lone 126 KB file is one partition, not
+    two). Config values come from the session, not hardcoded."""
     import os
     from urllib.parse import unquote, urlparse
 
@@ -130,20 +131,22 @@ def _scan_partition_estimate(df: DataFrame) -> int | None:
         return None
     if not files:
         return None
-    total = 0
+    sizes = []
     for uri in files:
         p = urlparse(uri)
         if p.scheme not in ("file", ""):
             return None
         try:
-            total += os.path.getsize(unquote(p.path))
+            sizes.append(os.path.getsize(unquote(p.path)))
         except OSError:
             return None
 
-    def _bytes_conf(key: str, default: int) -> int:
+    def _conf(key: str, default: int) -> int:
         try:
             v = df.sparkSession.conf.get(key)
         except Exception:
+            return default
+        if v is None:
             return default
         v = v.lower().rstrip("b")
         for suf, mul in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
@@ -151,13 +154,21 @@ def _scan_partition_estimate(df: DataFrame) -> int | None:
                 return int(float(v[:-1]) * mul)
         return int(v)
 
-    open_cost = _bytes_conf("spark.sql.files.openCostInBytes", 4 << 20)
-    max_part = _bytes_conf("spark.sql.files.maxPartitionBytes", 128 << 20)
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    padded = total + len(files) * open_cost
-    bytes_per_core = padded // max(1, cores)
+    open_cost = _conf("spark.sql.files.openCostInBytes", 4 << 20)
+    max_part = _conf("spark.sql.files.maxPartitionBytes", 128 << 20)
+    min_parts = _conf("spark.sql.files.minPartitionNum", _conf(
+        "spark.sql.leafNodeDefaultParallelism",
+        df.sparkSession.sparkContext.defaultParallelism))
+    bytes_per_core = sum(s + open_cost for s in sizes) // max(1, min_parts)
     max_split = min(max_part, max(open_cost, bytes_per_core))
-    return max(1, -(-padded // max(1, max_split)))
+    chunks = sorted((min(max_split, s - off) for s in sizes
+                     for off in range(0, s, max_split)), reverse=True)
+    parts, filled = 0, 0
+    for c in chunks:
+        if filled and filled + c > max_split:
+            parts, filled = parts + 1, 0
+        filled += c + open_cost
+    return max(1, parts + (filled > 0))
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> dict[str, DataFrame]:

@@ -394,6 +394,111 @@ def tf_idf_top_terms_cached(df: DataFrame, stats_path: str, k: int = 3,
     return _tfidf_rank_tail(scored, id_col, k, round_digits)
 
 
+def _bm25_sql(df: DataFrame, terms: list[str], text_col: str,
+              id_col: str | None = None, bags: list[list[int]] | None = None,
+              qids: list[int] | None = None, k: int = 10, k1: float = 1.2,
+              b: float = 0.75, n_docs: int | None = None, quantize: int = 9,
+              stats: tuple[int, list[int]] | None = None) -> DataFrame:
+    """The one BM25 pipeline, built as SQL text and parsed by ONE
+    `spark.sql` call (a Column tree of the same plan costs ~3k py4j
+    round trips to build): tokenize once, keep the union-term hits,
+    count each term in the hits, then score with a fixed-order chain.
+
+    `terms` are the tf columns (`tf0`…, and the order of `stats`' df
+    list); each bag lists indices into them. `bags=None` returns the
+    corpus-stats row (sdl, df0…) and needs no `id_col`; one bag with
+    `qids=None` is the single-query filter + TakeOrdered; otherwise the
+    batched posexplode_outer + keyed-window top-k.
+
+    The oracles replay the score bit for bit, so its arithmetic stays
+    IEEE double in a fixed order: every double is a `D` literal (a bare
+    `1.2` would parse as DECIMAL), the term chain is left-associative,
+    and `k1 + 1`, `1 - b` are folded in Python. Terms are escaped
+    literals and identifiers are backquoted, both with `{`/`}` doubled
+    for the DataFrame-placeholder formatting.
+
+    Tokens come from their own projection (`_toks`, referenced twice,
+    so Catalyst keeps it un-collapsed): the row is split ONCE for both
+    `dl` and the hits. Counting terms in the hits only, not the whole
+    document, keeps |union| per-term walks off the full token array
+    (SCALE.md, batched BM25 row); counts are the same either way."""
+    def fmt(s: str) -> str:
+        return s.replace("{", "{{").replace("}", "}}")
+
+    def ident(name: str) -> str:
+        return fmt("`" + name.replace("`", "``") + "`")
+
+    def dbl(v: float) -> str:
+        return f"{float(v)!r}D"
+
+    lits = [fmt(_sql_str(t)) for t in terms]
+    idc = ident(id_col) if id_col else ""
+    key = f"{idc}, " if idc else ""
+    tfs = "".join(f", size(filter(_hits, x -> x = {lit})) AS tf{i}"
+                  for i, lit in enumerate(lits))
+    sql = f"""WITH per AS (
+  SELECT {key}dl{tfs}
+  FROM (SELECT {key}size(_toks) AS dl,
+               filter(_toks, x -> array_contains(array({", ".join(lits)}), x))
+                 AS _hits
+        FROM (SELECT {key}filter(split(lower(trim(coalesce(
+                       {ident(text_col)}, ''))), {fmt(_sql_str(TOKEN_RE))}),
+                       x -> x != '') AS _toks
+              FROM {{df}})))"""
+    st = ("SELECT SUM(dl) AS sdl"
+          + "".join(f", SUM(CAST(tf{i} > 0 AS BIGINT)) AS df{i}"
+                    for i in range(len(terms))))
+    if bags is None:
+        return df.sparkSession.sql(f"{sql}\n{st} FROM per", df=df)
+    if n_docs is None:
+        n_docs = df.count()
+    if stats is None:
+        sql += f", st AS ({st} FROM per)"
+        hint, src = "/*+ BROADCAST(st) */ ", "per CROSS JOIN st"
+        sdl, dfs = "sdl", [f"df{i}" for i in range(len(terms))]
+    else:
+        hint, src = "", "per"
+        sdl, dfs = str(int(stats[0])), [str(int(d)) for d in stats[1]]
+    # try_divide: an all-blank (or empty) corpus has avgdl = 0 (or N =
+    # 0), which ANSI division raises on; NULL scores match nothing there
+    norm = (f"{dbl(k1)} * ({dbl(1.0 - b)} + {dbl(b)} * try_divide(CAST(dl"
+            f" AS DOUBLE), try_divide(CAST({sdl} AS DOUBLE), {dbl(n_docs)})))")
+    grid = dbl(10.0 ** quantize)
+
+    def contrib(i: int) -> str:
+        df_d, tf_d = f"CAST({dfs[i]} AS DOUBLE)", f"CAST(tf{i} AS DOUBLE)"
+        idf = (f"ln({dbl(1.0)} + ({dbl(n_docs)} - {df_d} + {dbl(0.5)})"
+               f" / ({df_d} + {dbl(0.5)}))")
+        return f"({idf} * ({tf_d} * {dbl(k1 + 1.0)}) / ({tf_d} + {norm}))"
+
+    scores = [f"FLOOR(({' + '.join(contrib(i) for i in bag)}) * {grid}"
+              f" + {dbl(0.5)}) / {grid}" for bag in bags]
+    hits = [" OR ".join(f"tf{i} > 0" for i in bag) for bag in bags]
+    if qids is None:
+        return df.sparkSession.sql(f"""{sql}
+SELECT {hint}{idc}, {scores[0]} AS bm25 FROM {src} WHERE {hits[0]}
+ORDER BY bm25 DESC, {idc} LIMIT {int(k)}""", df=df)
+    # posexplode_OUTER: for this CreateArray input (never null,
+    # never empty — one slot per query) the outer form emits identical
+    # rows, but the inner form lets InferFiltersFromGenerate push a
+    # size(_scores) > 0 guard below the projections — and with the
+    # alias substituted, that filter re-evaluated the ENTIRE tokenize +
+    # tf + score pipeline per row INSIDE the scan's Filter, below the
+    # spread repartition (~70% of the query's wall).
+    return df.sparkSession.sql(f"""{sql}
+SELECT query_id, {idc}, bm25 FROM (
+  SELECT *, row_number() OVER (PARTITION BY query_id
+                               ORDER BY bm25 DESC, {idc}) AS _rn
+  FROM (SELECT CAST(element_at(array({", ".join(str(int(q)) for q in qids)}),
+                               _qi + 1) AS BIGINT) AS query_id, {idc}, bm25
+        FROM (SELECT {idc}, posexplode_outer(_scores) AS (_qi, bm25), _qhits
+              FROM (SELECT {hint}{idc}, array({", ".join(scores)}) AS _scores,
+                           array({", ".join(hits)}) AS _qhits
+                    FROM {src}))
+        WHERE element_at(_qhits, _qi + 1)))
+WHERE _rn <= {int(k)}""", df=df)
+
+
 def bm25_corpus_stats(df: DataFrame, query_terms: list[str],
                       text_col: str = "text") -> tuple[int, list[int]]:
     """(Σ dl, [df_t per query term]) — the EXACT-INTEGER corpus
@@ -404,20 +509,7 @@ def bm25_corpus_stats(df: DataFrame, query_terms: list[str],
     scan. Integers are engine-exact, so literal-embedding them cannot
     perturb oracle parity."""
     terms = list(query_terms)
-    t = F.trim(F.coalesce(F.col(text_col), F.lit("")))
-    toks = F.filter(F.split(F.lower(t), TOKEN_RE),
-                    lambda x: x != F.lit(""))
-
-    def _tf(term):
-        return F.size(F.filter(toks, lambda x: x == F.lit(term)))
-
-    row = df.select(
-        F.size(toks).alias("dl"),
-        *[_tf(term).alias(f"tf{i}") for i, term in enumerate(terms)]
-    ).agg(
-        F.sum("dl").alias("sdl"),
-        *[F.sum((F.col(f"tf{i}") > 0).cast("bigint")).alias(f"df{i}")
-          for i in range(len(terms))]).first()
+    row = _bm25_sql(df, terms, text_col).first()
     return int(row["sdl"]), [int(row[f"df{i}"]) for i in range(len(terms))]
 
 
@@ -436,7 +528,7 @@ def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 10,
     Scale shape — ZERO wide shuffles: per-row expressions compute dl
     and the per-query-term tf from one tokenization (no explode —
     query terms are a literal handful, so tf_t is
-    `size(filter(toks, = t))` per row); corpus statistics (df_t, Σdl)
+    `size(filter(hits, = t))` per row); corpus statistics (df_t, Σdl)
     are ingest artifacts — pass the cached `bm25_corpus_stats` tuple
     via `stats` and the whole query is ONE scan + distributed
     TakeOrdered (the stats ride as exact-integer literals). Without
@@ -455,64 +547,9 @@ def bm25_topk(df: DataFrame, query_terms: list[str], k: int = 10,
     grid boundary. N rides the parquet footer when the caller passes
     `n_docs` (no count() job)."""
     terms = list(query_terms)
-    t = F.trim(F.coalesce(F.col(text_col), F.lit("")))
-    toks = F.filter(F.split(F.lower(t), TOKEN_RE),
-                    lambda x: x != F.lit(""))
-    # one pass keeps only query-term matches; per-term counts walk the
-    # tiny match list instead of the whole document (the batched-path
-    # finding, SCALE.md r10 — counts are bit-identical either way)
-    qset = F.array(*[F.lit(x) for x in terms])
-    hits_arr = F.filter(toks, lambda x: F.array_contains(qset, x))
-
-    def _tf(term):
-        # NOTE: a two-parameter lambda would be read by F.filter as the
-        # (element, index) form — the closure must stay single-arg
-        return F.size(F.filter(F.col("_hits"),
-                               lambda x: x == F.lit(term)))
-
-    per = df.select(
-        F.col(id_col),
-        F.size(toks).alias("dl"),
-        hits_arr.alias("_hits"),
-    ).select(
-        F.col(id_col), "dl",
-        *[_tf(term).alias(f"tf{i}") for i, term in enumerate(terms)])
-    if n_docs is None:
-        n_docs = df.count()
-    if stats is None:
-        st = per.agg(
-            F.sum("dl").alias("sdl"),
-            *[F.sum((F.col(f"tf{i}") > 0).cast("bigint")).alias(f"df{i}")
-              for i in range(len(terms))])
-        scored = per.crossJoin(F.broadcast(st))
-        sdl_col = F.col("sdl")
-        df_cols = [F.col(f"df{i}") for i in range(len(terms))]
-    else:
-        sdl, dfs = stats
-        scored = per
-        sdl_col = F.lit(int(sdl))
-        df_cols = [F.lit(int(d)) for d in dfs]
-    avgdl = sdl_col.cast("double") / F.lit(float(n_docs))
-    dl_d = F.col("dl").cast("double")
-    norm = (F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * (dl_d / avgdl)))
-    score = None
-    hit = None
-    for i in range(len(terms)):
-        tf_d = F.col(f"tf{i}").cast("double")
-        df_d = df_cols[i].cast("double")
-        idf = F.log(F.lit(1.0)
-                    + (F.lit(float(n_docs)) - df_d + F.lit(0.5))
-                    / (df_d + F.lit(0.5)))
-        contrib = idf * (tf_d * F.lit(k1 + 1.0)) / (tf_d + norm)
-        score = contrib if score is None else score + contrib
-        h = F.col(f"tf{i}") > 0
-        hit = h if hit is None else (hit | h)
-    grid = float(10.0 ** quantize)
-    bm25 = F.floor(score * F.lit(grid) + F.lit(0.5)) / F.lit(grid)
-    return (scored.filter(hit)
-            .select(F.col(id_col), bm25.alias("bm25"))
-            .orderBy(F.desc("bm25"), F.asc(id_col)).limit(k))
+    return _bm25_sql(df, terms, text_col, id_col, [list(range(len(terms)))],
+                     k=k, k1=k1, b=b, n_docs=n_docs, quantize=quantize,
+                     stats=stats)
 
 
 def bm25_topk_multi(df: DataFrame, queries: dict[int, list[str]],
@@ -541,94 +578,10 @@ def bm25_topk_multi(df: DataFrame, queries: dict[int, list[str]],
     qids = sorted(queries)
     terms = sorted({t for q in qids for t in queries[q]})
     tidx = {t: i for i, t in enumerate(terms)}
-    t = F.trim(F.coalesce(F.col(text_col), F.lit("")))
-    toks = F.filter(F.split(F.lower(t), TOKEN_RE),
-                    lambda x: x != F.lit(""))
-    # ONE pass over the token array keeps only union-set matches; the
-    # per-term counts then walk the (tiny) match list instead of the
-    # whole document — without this, |union| separate
-    # size(filter(toks, =t)) expressions each materialize a filtered
-    # array over EVERY token, and the sf10 decade run showed that per-
-    # row cost eating the batching win (SCALE.md r10). Counts are
-    # bit-identical either way.
-    union_lit = F.array(*[F.lit(x) for x in terms])
-    hits_arr = F.filter(toks,
-                        lambda x: F.array_contains(union_lit, x))
-
-    def _tf(term):
-        # single-arg closure — the (element, index) two-param trap
-        return F.size(F.filter(F.col("_hits"),
-                               lambda x: x == F.lit(term)))
-
-    per = df.select(
-        F.col(id_col),
-        F.size(toks).alias("dl"),
-        hits_arr.alias("_hits"),
-    ).select(
-        F.col(id_col), "dl",
-        *[_tf(term).alias(f"tf{i}") for i, term in enumerate(terms)])
-    if n_docs is None:
-        n_docs = df.count()
-    if stats is None:
-        st = per.agg(
-            F.sum("dl").alias("sdl"),
-            *[F.sum((F.col(f"tf{i}") > 0).cast("bigint")).alias(f"df{i}")
-              for i in range(len(terms))])
-        scored = per.crossJoin(F.broadcast(st))
-        sdl_col = F.col("sdl")
-        df_cols = [F.col(f"df{i}") for i in range(len(terms))]
-    else:
-        sdl, dfs = stats
-        scored = per
-        sdl_col = F.lit(int(sdl))
-        df_cols = [F.lit(int(d)) for d in dfs]
-    avgdl = sdl_col.cast("double") / F.lit(float(n_docs))
-    norm = (F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b)
-               * (F.col("dl").cast("double") / avgdl)))
-    grid = float(10.0 ** quantize)
-    q_scores, q_hits = [], []
-    for q in qids:
-        score = None
-        hit = None
-        for term in queries[q]:
-            i = tidx[term]
-            tf_d = F.col(f"tf{i}").cast("double")
-            df_d = df_cols[i].cast("double")
-            idf = F.log(F.lit(1.0)
-                        + (F.lit(float(n_docs)) - df_d + F.lit(0.5))
-                        / (df_d + F.lit(0.5)))
-            contrib = idf * (tf_d * F.lit(k1 + 1.0)) / (tf_d + norm)
-            score = contrib if score is None else score + contrib
-            h = F.col(f"tf{i}") > 0
-            hit = h if hit is None else (hit | h)
-        q_scores.append(F.floor(score * F.lit(grid) + F.lit(0.5))
-                        / F.lit(grid))
-        q_hits.append(hit)
-    qid_lit = F.array(*[F.lit(int(q)) for q in qids])
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("bm25"), F.asc(id_col))
-    # posexplode_OUTER (r12): for a CreateArray input (never null, never
-    # empty — one slot per query) the outer form emits identical rows,
-    # but the inner form lets InferFiltersFromGenerate push a
-    # size(_scores) > 0 guard below the projections — and with the alias
-    # substituted, that filter re-evaluated the ENTIRE tokenize + tf +
-    # score pipeline per row INSIDE the scan's Filter, below the spread
-    # repartition (single-core) — measured as ~70% of the query's wall
-    # (force 0.65 s → 2.3 s the moment the explode stage was added).
-    return (scored
-            .select(F.col(id_col),
-                    F.array(*q_scores).alias("_scores"),
-                    F.array(*q_hits).alias("_hits"))
-            .select(F.col(id_col),
-                    F.posexplode_outer("_scores").alias("_qi", "bm25"),
-                    F.col("_hits"))
-            .filter(F.element_at("_hits", F.col("_qi") + 1))
-            .select(F.element_at(qid_lit, F.col("_qi") + 1)
-                    .cast("bigint").alias("query_id"),
-                    id_col, "bm25")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k).drop("_rn"))
+    return _bm25_sql(df, terms, text_col, id_col,
+                     [[tidx[t] for t in queries[q]] for q in qids], qids,
+                     k=k, k1=k1, b=b, n_docs=n_docs, quantize=quantize,
+                     stats=stats)
 
 
 def bm25_stats_sink(state_dir: str, text_col: str = "text",

@@ -56,6 +56,19 @@ def test_cdc_decode_parses_each_record_once(spark):
         assert p.count("from_json") == 1, name
 
 
+def test_bm25_multi_tokenizes_once_outside_filters(spark):
+    """Batched BM25 splits each document exactly once, and no Filter
+    carries the tokenize pipeline. The inner `posexplode` form lets
+    InferFiltersFromGenerate push a size(_scores) > 0 guard below the
+    projections, where the substituted alias re-runs tokenize + tf +
+    score inside the scan's Filter; a collapsed tokenize projection
+    would split twice per row."""
+    p = plan_of(spark, "bm25_topk_multi_docs")
+    assert p.count("split(") == 1, p
+    assert not [line for line in p.splitlines()
+                if "Filter" in line and "split(" in line], p
+
+
 def test_broadcast_dim_in_argmax(spark):
     p = plan_of(spark, "argmax_order_per_segment")
     assert p.count("BroadcastHashJoin") >= 1
@@ -66,6 +79,40 @@ def test_range_join_is_equi_join_not_nested_loop(spark):
     p = plan_of(spark, "range_join_recent_views")
     # bucketing turns the interval predicate into a hash-joinable key
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
+
+
+def _estimate_vs_spark(spark, path):
+    from felixzh_flink_spark.catalog import _scan_partition_estimate
+    df = spark.read.parquet(path)
+    return _scan_partition_estimate(df), df.rdd.getNumPartitions()
+
+
+def test_scan_partition_estimate_matches_spark(spark, tmp_path):
+    """The driver-side estimate behind `spread_if_narrow` equals Spark's
+    own scan partition count for one small file, many small files, and
+    one file above a lowered maxPartitionBytes — open-cost padding must
+    not be divided as if it were data (it made a lone small file two
+    partitions, so at ≤2 cores the spread repartition was skipped)."""
+    est, real = _estimate_vs_spark(spark, f"{SF}/documents.parquet")
+    assert est == real == 1
+    many = str(tmp_path / "many")
+    spark.range(0, 20000, numPartitions=12).selectExpr(
+        "id", "sha2(CAST(id AS STRING), 256) AS h").write.parquet(many)
+    est, real = _estimate_vs_spark(spark, many)
+    assert est == real
+    lowered = {"spark.sql.files.maxPartitionBytes": "16k",
+               "spark.sql.files.openCostInBytes": "1k"}
+    old = {k: spark.conf.get(k) for k in lowered}
+    try:
+        for k, v in lowered.items():
+            spark.conf.set(k, v)
+        est, real = _estimate_vs_spark(spark, f"{SF}/lineitem.parquet")
+        assert est == real > 1
+        est, real = _estimate_vs_spark(spark, many)
+        assert est == real > 1
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

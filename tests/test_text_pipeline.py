@@ -578,6 +578,93 @@ def test_bm25_topk_multi_equals_single_query_runs(spark):
         assert got[q] == single, q
 
 
+def test_bm25_terms_and_identifiers_are_escaped(spark):
+    """Terms and column names reach the SQL text as escaped literals and
+    quoted identifiers: a quote, a backslash, braces (the DataFrame-
+    placeholder formatter's syntax) and a backquote must score exactly as
+    the plain-float reference of `test_bm25_matches_hand_reference`, in
+    the single-query, batched and stats paths."""
+    import math
+
+    from felixzh_flink_spark.operators.text import (
+        bm25_corpus_stats, bm25_topk, bm25_topk_multi)
+
+    docs = [
+        (1, "o'neil met o'neil at a\\b"),
+        (2, "path a\\b and {x} then a\\b again"),
+        (3, "plain words only here"),
+        (4, "{x} `tick` o'neil"),
+        (5, "oneil ab a\\\\b x"),
+    ]
+    df = spark.createDataFrame(docs, "`doc id` long, `the {text}` string")
+    terms, k1, b = ["o'neil", "a\\b", "{x}", "`tick`"], 1.2, 0.75
+    kw = dict(text_col="the {text}", id_col="doc id")
+    toks = {i: t.lower().split() for i, t in docs}
+    n = len(docs)
+    avgdl = sum(len(v) for v in toks.values()) / n
+
+    def score(i):
+        s = 0.0
+        for t in terms:
+            tf = toks[i].count(t)
+            dfr = sum(1 for v in toks.values() if t in v)
+            idf = math.log(1 + (n - dfr + 0.5) / (dfr + 0.5))
+            s += idf * (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * len(toks[i]) / avgdl))
+        return s
+
+    ref = sorted(((score(i), i) for i in toks if score(i) > 0),
+                 key=lambda x: (-x[0], x[1]))
+    assert sorted(i for _, i in ref) == [1, 2, 4]
+    stats = bm25_corpus_stats(df, terms, text_col="the {text}")
+    assert stats == (sum(len(v) for v in toks.values()),
+                     [sum(1 for v in toks.values() if t in v) for t in terms])
+    for got in (bm25_topk(df, terms, k=5, k1=k1, b=b, n_docs=n, **kw),
+                bm25_topk(df, terms, k=5, k1=k1, b=b, stats=stats, **kw)):
+        rows = [(r["doc id"], r.bm25) for r in got.collect()]
+        assert [i for i, _ in rows] == [i for _, i in ref]
+        for (i, got_s), (ref_s, _) in zip(rows, ref):
+            assert abs(got_s - ref_s) < 1e-9, (i, got_s, ref_s)
+    multi = bm25_topk_multi(df, {7: terms, 8: ["{x}"]}, k=5, **kw)
+    by_q = {}
+    for r in multi.collect():
+        by_q.setdefault(r.query_id, []).append((r["doc id"], r.bm25))
+    assert sorted(by_q[7], key=lambda p: (-p[1], p[0])) == [
+        (r["doc id"], r.bm25)
+        for r in bm25_topk(df, terms, k=5, **kw).collect()]
+    assert sorted(i for i, _ in by_q[8]) == [2, 4]
+
+
+def test_bm25_multi_null_and_empty_texts(spark):
+    """The batched path's posexplode_outer relies on `_scores` never
+    being null or empty (one slot per query, whatever the text). NULL
+    and '' documents tokenize to zero tokens: they count in N and add
+    nothing to Σdl, never match, and never surface as rows — in
+    particular no (NULL query_id, NULL bm25) row from an outer explode.
+    A corpus of only such documents (avgdl = 0) returns no rows instead
+    of an ANSI division-by-zero error."""
+    from felixzh_flink_spark.operators.text import (
+        bm25_corpus_stats, bm25_topk, bm25_topk_multi)
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "  "), (4, "hash join"), (5, "hash"),
+         (6, None)], "doc_id long, text string")
+    bags = {0: ["hash"], 1: ["join", "hash"], 2: ["absent"]}
+    assert bm25_corpus_stats(docs, ["hash", "join"]) == (3, [2, 1])
+    rows = bm25_topk_multi(docs, bags, k=10).collect()
+    assert all(r.query_id is not None and r.bm25 is not None for r in rows)
+    got = {}
+    for r in rows:
+        got.setdefault(r.query_id, []).append((r.doc_id, r.bm25))
+    assert set(got) == {0, 1}
+    for q in (0, 1):
+        assert sorted(got[q], key=lambda p: (-p[1], p[0])) == [
+            (r.doc_id, r.bm25) for r in bm25_topk(docs, bags[q]).collect()]
+        assert {i for i, _ in got[q]} <= {4, 5}
+    blank = docs.filter("doc_id IN (1, 2, 3, 6)")
+    assert bm25_topk_multi(blank, bags, k=10).collect() == []
+    assert bm25_topk(blank, ["hash"]).collect() == []
+
+
 # ---------------------------------------------------------------- PII
 
 

@@ -2,23 +2,29 @@
 sf0.1, with a one-line summary of its scale-relevant properties (shuffles,
 broadcasts, pushdown, Python stages). Regenerate after plan-affecting
 changes: python tools/gen_plans.py
+
+Round mode dumps `.explain("formatted")` of chosen queries, as built by
+the engine checkout at REPO, to plans/<ROUND>/<query>_<TAG>.txt — run
+once on a copy of the pre-round code with --tag before and once on this
+checkout with --tag after:
+
+    python tools/gen_plans.py --round r13 --repo /tmp/before --tag before q1 q2
+    python tools/gen_plans.py --round r13 --tag after q1 q2
+
+Round-mode plans use a bench.py-shaped session (local[$SPARK_GRAFT_CPUS],
+data from $SPARK_GRAFT_SF_DIR, default sf0.1).
 """
 
 from __future__ import annotations
 
+import argparse
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-from bench import HEADLINE  # noqa: E402
-from felixzh_flink_spark.queries import PROBES, QUERIES  # noqa: E402
-
-RUNNABLE = {**QUERIES, **PROBES}
-from felixzh_flink_spark.session import get_spark  # noqa: E402
-
+ROOT = Path(__file__).resolve().parent.parent
 SF_DIR = "/root/testdata/sf0.1"
 
 #: non-headline queries whose PLANS are themselves the evidence: Catalyst
@@ -115,7 +121,54 @@ def _count_nodes(root) -> dict[str, int]:
     return counts
 
 
+def dump_round(round_name: str, repo: str, tag: str,
+               names: list[str]) -> None:
+    """Round mode: the queries come from REPO's `__spark_entry__` (its
+    package shadows this checkout's, so a before-copy plans its own
+    code); each plan is written under this checkout's plans/<round>/."""
+    import importlib.util
+
+    from pyspark.sql import SparkSession
+
+    sys.path.insert(0, repo)
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__", os.path.join(repo, "__spark_entry__.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
+    spark = (SparkSession.builder.master(f"local[{cpus}]")
+             .config("spark.sql.session.timeZone", "UTC")
+             .config("spark.ui.enabled", "false")
+             # match get_spark's driver sizing: PQ-family plan construction
+             # (literal codebook trees) OOMs the default 1g driver heap
+             .config("spark.driver.memory",
+                     os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+             .appName(f"plans-{round_name}-{tag}").getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    out_dir = ROOT / "plans" / round_name
+    out_dir.mkdir(parents=True, exist_ok=True)
+    qs = mod.queries()
+    for name in names:
+        try:
+            df = qs[name](spark, sf_dir)
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain("formatted")
+            (out_dir / f"{name}_{tag}.txt").write_text(buf.getvalue())
+            print(f"ok {name}")
+        except Exception as e:  # noqa: BLE001 - record and continue
+            print(f"FAIL {name}: {e}")
+    spark.stop()
+
+
 def main() -> None:
+    sys.path.insert(0, str(ROOT))
+    from bench import HEADLINE
+    from felixzh_flink_spark.queries import PROBES, QUERIES
+    from felixzh_flink_spark.session import get_spark
+
+    runnable = {**QUERIES, **PROBES}
     spark = get_spark("plans")
     out = [
         "# PLANS — physical plans of the headline queries (sf0.1)\n",
@@ -132,7 +185,7 @@ def main() -> None:
         # can't read as "nothing ran before this"
         group = f"plans-construct-{name}"
         sc.setJobGroup(group, f"construction of {name}")
-        df = RUNNABLE[name](spark, SF_DIR)
+        df = runnable[name](spark, SF_DIR)
         sc.setJobGroup("plans-idle", "idle")
         constr_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
         nodes = _count_nodes(df._jdf.queryExecution().executedPlan())
@@ -162,4 +215,14 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--round", help="dump QUERIES to plans/<ROUND>/")
+    ap.add_argument("--repo", default=str(ROOT),
+                    help="engine checkout that builds the plans")
+    ap.add_argument("--tag", default="after", help="file-name suffix")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if args.round:
+        dump_round(args.round, args.repo, args.tag, args.queries)
+    else:
+        main()
