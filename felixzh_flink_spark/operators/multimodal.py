@@ -63,31 +63,83 @@ _JPEG_SOF_MARKERS = frozenset(
 
 
 
-def _id_payloads(pdf, id_col: str, payload_col: str, synth,
-                 text_col=None):
-    """(id, payload) pairs for a media stats kernel batch.
+def _decode_rows(df: DataFrame, schema: T.StructType, decode,
+                 id_col: str, payload_col: str, synth,
+                 synth_cols=None) -> DataFrame:
+    """The one Arrow-batched decode stage every media stats kernel runs:
+    `decode(payload)` returns the kernel's row tails WITHOUT the id — a
+    tuple for projection kernels, an iterable of tuples for fan-out
+    kernels — and this runner prefixes the id and names the columns
+    from `schema`. Quarantine policy: a payload's rows are emitted only
+    if its WHOLE decode succeeds; any exception (bad magic, truncated
+    stream, NULL payload) yields exactly one `(id, None, …)` row, so
+    media pipelines quarantine bad payloads instead of crashing or
+    emitting half a fan-out.
 
-    With `synth` (a per-id payload builder, e.g. `_png_payload`) the
-    fixture bytes are generated INSIDE the same Arrow stage as the
-    decode: the encoded payload never crosses the JVM<->Python boundary
-    at all, collapsing the encode-UDF -> JVM -> decode-kernel pipeline
-    (two Python stages, payload serialized out and back in) into ONE
-    mapInPandas stage. Identical bytes reach the decoder either way --
-    the synth functions are the SAME closed-form builders the
-    `synthesize_*_column` UDFs delegate to, so oracles cannot drift.
-    Production corpora (stored payload columns) keep `synth=None` and
-    read `payload_col` exactly as before."""
-    if synth is not None:
-        if isinstance(text_col, (list, tuple)):
-            # multi-column fixtures (e.g. the crawl WARC: html + URI)
-            cols = [pdf[c] for c in text_col]
-            return ((int(i), synth(int(i), *vals))
-                    for i, *vals in zip(pdf[id_col], *cols))
-        if text_col is not None:       # text-derived fixtures (gzip/warc/…)
-            return ((int(i), synth(int(i), t))
-                    for i, t in zip(pdf[id_col], pdf[text_col]))
-        return ((int(i), synth(int(i))) for i in pdf[id_col])
-    return ((int(i), p) for i, p in zip(pdf[id_col], pdf[payload_col]))
+    With `synth` (a per-id payload builder, e.g. `_png_payload`, called
+    as `synth(id, *synth_cols values)`) the fixture bytes are generated
+    INSIDE the same Arrow stage as the decode: the encoded payload never
+    crosses the JVM<->Python boundary at all, collapsing the encode-UDF
+    -> JVM -> decode-kernel pipeline (two Python stages, payload
+    serialized out and back in) into ONE mapInPandas stage. Identical
+    bytes reach the decoder either way -- the synth functions are the
+    SAME closed-form builders the `synthesize_*_column` UDFs delegate
+    to (`_synth_column`), so oracles cannot drift. Production corpora
+    (stored payload columns) keep `synth=None` and read `payload_col`."""
+    names = schema.fieldNames()
+    null_tail = (None,) * (len(names) - 1)
+    arg_cols = ([synth_cols] if isinstance(synth_cols, str)
+                else list(synth_cols or ()))
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if synth is None:
+                pairs = zip(pdf[id_col], pdf[payload_col])
+            else:
+                pairs = ((i, synth(int(i), *vals)) for i, *vals in
+                         zip(pdf[id_col], *(pdf[c] for c in arg_cols)))
+            rows = []
+            for i, p in pairs:
+                try:
+                    out = decode(p)
+                    tails = [out] if isinstance(out, tuple) else list(out)
+                except Exception:  # ValueError / zlib.error / struct.error / …
+                    tails = [null_tail]
+                rows.extend((int(i), *t) for t in tails)
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(kernel, schema=schema)
+
+
+def _synth_column(df: DataFrame, payload_fn, id_col: str, payload_col: str,
+                  *arg_cols) -> DataFrame:
+    """Attach `payload_fn(id, *arg values)` as a binary column — the one
+    Arrow-batched fixture UDF behind every `synthesize_*_column`, so the
+    column path and the fused `synth=` kernel path run the SAME builder.
+    `arg_cols` are extra column names or Columns (e.g. a doc's text)."""
+    @F.pandas_udf("binary")
+    def _make(ids: pd.Series, *args: pd.Series) -> pd.Series:
+        return pd.Series([payload_fn(int(i), *vals)
+                          for i, *vals in zip(ids, *args)])
+
+    return df.withColumn(payload_col, _make(
+        F.col(id_col), *(F.col(c) if isinstance(c, str) else c
+                         for c in arg_cols)))
+
+
+def _wsum(values) -> int:
+    """Order-sensitive position-weighted sum Σ (j+1)·vⱼ — the stat that
+    catches a decoder which reorders, drops or duplicates values."""
+    return sum((j + 1) * v for j, v in enumerate(values))
+
+
+def _require_positive(**params) -> None:
+    """Validate kernel parameters on the driver, before any job runs: a
+    non-positive step never ends a sampling loop, and a non-positive
+    size would fail inside every decode and quarantine valid payloads."""
+    for name, value in params.items():
+        if int(value) <= 0:
+            raise ValueError(f"{name} must be positive, got {value!r}")
 
 
 def png_dims(col) -> "F.Column":
@@ -426,11 +478,7 @@ def synthesize_png_column(df: DataFrame, id_col: str = "doc_id",
     encode→decode pipeline be driver-verified (`png_pixel_stats`).
     Arrow-batched pandas UDF; the zlib work is the honest per-row cost
     a real thumbnail fixture pipeline pays."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_png_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _png_payload, id_col, payload_col)
 
 
 def _image_envelope_bits(doc_id: int, grid: int = 8) -> list[int]:
@@ -499,11 +547,7 @@ def synthesize_png_large_column(df: DataFrame, id_col: str = "doc_id",
     across groups (selective 16-bit band buckets at any corpus size).
     Closed form end-to-end: the oracle replays envelope → byte value →
     luminance → floor cell map → bit rule without decoding a PNG."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_png_large_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _png_large_payload, id_col, payload_col)
 
 
 PNG_STATS_SCHEMA = T.StructType([
@@ -533,21 +577,12 @@ def png_pixel_stats(df: DataFrame, id_col: str = "doc_id",
     tasks) and nothing shuffles."""
     from felixzh_flink_spark.functions.png_codec import decode_png
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    w, h, ch, px = decode_png(p)
-                    rows.append((int(i), w, h, ch, sum(px),
-                                 sum((j + 1) * b for j, b in enumerate(px))))
-                except Exception:  # ValueError / zlib.error / struct.error
-                    rows.append((int(i), None, None, None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "channels",
-                "pixel_sum", "pixel_wsum"])
+    def decode(p):
+        w, h, ch, px = decode_png(p)
+        return (w, h, ch, sum(px), _wsum(px))
 
-    return df.mapInPandas(kernel, schema=PNG_STATS_SCHEMA)
+    return _decode_rows(df, PNG_STATS_SCHEMA, decode, id_col, payload_col,
+                        synth)
 
 
 AHASH_SCHEMA = T.StructType([
@@ -579,38 +614,29 @@ def image_ahash_cells(df: DataFrame, id_col: str = "doc_id",
     Undecodable payloads yield null rows (quarantine, don't crash)."""
     from felixzh_flink_spark.functions.png_codec import decode_png
 
+    _require_positive(grid=grid)
     g = int(grid)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    w, h, ch, px = decode_png(p)
-                    sums = [0] * (g * g)
-                    counts = [0] * (g * g)
-                    for y in range(h):
-                        row_off = y * w * ch
-                        cy = y * g // h
-                        for x in range(w):
-                            o = row_off + x * ch
-                            if ch <= 2:   # gray / gray+alpha: drop alpha
-                                lum = 3 * px[o]
-                            else:         # rgb / rgba: alpha dropped
-                                lum = px[o] + px[o + 1] + px[o + 2]
-                            c = cy * g + (x * g // w)
-                            sums[c] += lum
-                            counts[c] += 1
-                    rows.append((int(i), w, h, sums, counts,
-                                 sum(sums), w * h))
-                except Exception:   # truncated / non-png payloads
-                    rows.append((int(i), None, None, None, None,
-                                 None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "cell_sums", "cell_counts",
-                "lum_total", "npx"])
+    def decode(p):
+        w, h, ch, px = decode_png(p)
+        sums = [0] * (g * g)
+        counts = [0] * (g * g)
+        for y in range(h):
+            row_off = y * w * ch
+            cy = y * g // h
+            for x in range(w):
+                o = row_off + x * ch
+                if ch <= 2:   # gray / gray+alpha: drop alpha
+                    lum = 3 * px[o]
+                else:         # rgb / rgba: alpha dropped
+                    lum = px[o] + px[o + 1] + px[o + 2]
+                c = cy * g + (x * g // w)
+                sums[c] += lum
+                counts[c] += 1
+        return (w, h, sums, counts, sum(sums), w * h)
 
-    return df.mapInPandas(kernel, schema=AHASH_SCHEMA)
+    return _decode_rows(df, AHASH_SCHEMA, decode, id_col, payload_col,
+                        synth)
 
 
 def audio_fingerprint_cells(df: DataFrame, id_col: str = "doc_id",
@@ -633,35 +659,26 @@ def audio_fingerprint_cells(df: DataFrame, id_col: str = "doc_id",
     dedup through one discipline. Undecodable payloads yield nulls."""
     from felixzh_flink_spark.functions.wav_codec import decode_wav
 
+    _require_positive(windows=windows)
     nw = int(windows)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    rate, ch, bits, samples = decode_wav(p)
-                    frames = len(samples) // ch
-                    sums = [0] * nw
-                    counts = [0] * nw
-                    total = 0
-                    for f in range(frames):
-                        mono = sum(samples[f * ch:(f + 1) * ch])
-                        e = mono * mono
-                        w = f * nw // frames
-                        sums[w] += e
-                        counts[w] += 1
-                        total += e
-                    rows.append((int(i), None, None, sums, counts,
-                                 total, frames))
-                except Exception:   # truncated / non-wav payloads
-                    rows.append((int(i), None, None, None, None,
-                                 None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "cell_sums", "cell_counts",
-                "lum_total", "npx"])
+    def decode(p):
+        _rate, ch, _bits, samples = decode_wav(p)
+        frames = len(samples) // ch
+        sums = [0] * nw
+        counts = [0] * nw
+        total = 0
+        for f in range(frames):
+            mono = sum(samples[f * ch:(f + 1) * ch])
+            e = mono * mono
+            w = f * nw // frames
+            sums[w] += e
+            counts[w] += 1
+            total += e
+        return (None, None, sums, counts, total, frames)
 
-    return df.mapInPandas(kernel, schema=AHASH_SCHEMA)
+    return _decode_rows(df, AHASH_SCHEMA, decode, id_col, payload_col,
+                        synth)
 
 
 def image_ahash_bits(cells_df: DataFrame, grid: int = 4) -> DataFrame:
@@ -773,11 +790,7 @@ def synthesize_wav_column(df: DataFrame, id_col: str = "doc_id",
     oracle can predict any statistic of the DECODED samples, which is
     what lets the encode→decode audio pipeline be driver-verified
     (`wav_pcm_stats`)."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_wav_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _wav_payload, id_col, payload_col)
 
 
 def _envelope_bits(doc_id: int, windows: int = 16) -> list[int]:
@@ -856,13 +869,9 @@ def synthesize_wav_envelope_column(df: DataFrame, id_col: str = "doc_id",
     replays decoded frames → window energies → bits without decoding
     a byte, while Spark runs the REAL encode→decode chain — a decoder
     or mixdown bug changes energies and fails the hash."""
-    synth = _wav_envelope_payload_fn(windows, frames_per_window, amp)
-
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(
+        df, _wav_envelope_payload_fn(windows, frames_per_window, amp),
+        id_col, payload_col)
 
 
 WAV_STATS_SCHEMA = T.StructType([
@@ -888,23 +897,12 @@ def wav_pcm_stats(df: DataFrame, id_col: str = "doc_id",
     mapInPandas projection, no shuffle."""
     from felixzh_flink_spark.functions.wav_codec import decode_wav
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    rate, ch, _bits, samples = decode_wav(p)
-                    rows.append((int(i), rate, ch, len(samples),
-                                 sum(samples),
-                                 sum((j + 1) * s
-                                     for j, s in enumerate(samples))))
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "sample_rate", "channels", "n_samples",
-                "sample_sum", "sample_wsum"])
+    def decode(p):
+        rate, ch, _bits, samples = decode_wav(p)
+        return (rate, ch, len(samples), sum(samples), _wsum(samples))
 
-    return df.mapInPandas(kernel, schema=WAV_STATS_SCHEMA)
+    return _decode_rows(df, WAV_STATS_SCHEMA, decode, id_col, payload_col,
+                        synth)
 
 
 def parse_mp4_duration(payload) -> "int | None":
@@ -997,20 +995,20 @@ def synthesize_mp4_header(duration_ms: int, timescale: int = 1000,
     return ftyp + moov
 
 
+def _mp4_payload(i: int) -> bytes:
+    """The closed-form MP4 header fixture recipe (see
+    `synthesize_mp4_column`)."""
+    return synthesize_mp4_header(i % 120000 + 1000, 1000 * (i % 3 + 1),
+                                 i % 2)
+
+
 def synthesize_mp4_column(df: DataFrame, id_col: str = "doc_id",
                           payload_col: str = "mp4") -> DataFrame:
     """Deterministic MP4 header fixture generator: duration_ms =
     id%120000 + 1000, timescale = 1000·(id%3+1), mvhd version = id%2 —
     timescales are multiples of 1000, so the ms round-trip is exact and
     a SQL oracle can predict the parsed duration in closed form."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([
-            synthesize_mp4_header(int(i) % 120000 + 1000,
-                                  1000 * (int(i) % 3 + 1), int(i) % 2)
-            for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _mp4_payload, id_col, payload_col)
 
 
 THUMB_STATS_SCHEMA = T.StructType([
@@ -1042,29 +1040,19 @@ def png_thumbnail_stats(df: DataFrame, out_w: int, out_h: int,
     Arrow-batched mapInPandas projection, no shuffle."""
     from felixzh_flink_spark.functions.png_codec import decode_png
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    w, h, ch, px = decode_png(p)
-                    out = []
-                    for y in range(out_h):
-                        sy = y * h // out_h
-                        for x in range(out_w):
-                            sx = x * w // out_w
-                            base = (sy * w + sx) * ch
-                            out.extend(px[base:base + ch])
-                    rows.append((int(i), out_w, out_h, ch, sum(out),
-                                 sum((j + 1) * v
-                                     for j, v in enumerate(out))))
-                except Exception:  # ValueError / zlib.error
-                    rows.append((int(i), None, None, None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "out_w", "out_h", "channels",
-                "thumb_sum", "thumb_wsum"])
+    def decode(p):
+        w, h, ch, px = decode_png(p)
+        out = []
+        for y in range(out_h):
+            sy = y * h // out_h
+            for x in range(out_w):
+                sx = x * w // out_w
+                base = (sy * w + sx) * ch
+                out.extend(px[base:base + ch])
+        return (out_w, out_h, ch, sum(out), _wsum(out))
 
-    return df.mapInPandas(kernel, schema=THUMB_STATS_SCHEMA)
+    return _decode_rows(df, THUMB_STATS_SCHEMA, decode, id_col,
+                        payload_col, synth)
 
 
 def synthesize_gif_column(df: DataFrame, id_col: str = "doc_id",
@@ -1077,11 +1065,7 @@ def synthesize_gif_column(df: DataFrame, id_col: str = "doc_id",
     = ((3e)%256, (5e+1)%256, (7e+2)%256). Closed-form recipe → a SQL
     oracle predicts any statistic of the DECODED indices/RGB without
     decoding (`gif_pixel_stats`). Arrow-batched pandas UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_gif_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _gif_payload, id_col, payload_col)
 
 
 GIF_STATS_SCHEMA = T.StructType([
@@ -1109,25 +1093,13 @@ def gif_pixel_stats(df: DataFrame, id_col: str = "doc_id",
     stats. One Arrow-batched mapInPandas projection, no shuffle."""
     from felixzh_flink_spark.functions.gif_codec import decode_gif
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    w, h, pal, idx = decode_gif(p)
-                    rgb = sum(pal[3 * b] + pal[3 * b + 1] + pal[3 * b + 2]
-                              for b in idx)
-                    rows.append((int(i), w, h, len(pal) // 3, sum(idx),
-                                 sum((j + 1) * b for j, b in enumerate(idx)),
-                                 rgb))
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None, None, None,
-                                 None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "palette_size",
-                "idx_sum", "idx_wsum", "rgb_sum"])
+    def decode(p):
+        w, h, pal, idx = decode_gif(p)
+        rgb = sum(pal[3 * b] + pal[3 * b + 1] + pal[3 * b + 2] for b in idx)
+        return (w, h, len(pal) // 3, sum(idx), _wsum(idx), rgb)
 
-    return df.mapInPandas(kernel, schema=GIF_STATS_SCHEMA)
+    return _decode_rows(df, GIF_STATS_SCHEMA, decode, id_col, payload_col,
+                        synth)
 
 
 def _jpeg_payload(i: int) -> bytes:
@@ -1154,11 +1126,7 @@ def synthesize_jpeg_column(df: DataFrame, id_col: str = "doc_id",
     lossy pipeline is bit-lossless on this recipe and a SQL oracle can
     predict the DECODED pixels (`jpeg_pixel_stats` /
     `jpeg_decode_stats`). Arrow-batched pandas UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_jpeg_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _jpeg_payload, id_col, payload_col)
 
 
 JPEG_STATS_SCHEMA = T.StructType([
@@ -1183,20 +1151,12 @@ def jpeg_pixel_stats(df: DataFrame, id_col: str = "doc_id",
     shuffle — the same scale shape as the PNG/GIF/WAV kernels."""
     from felixzh_flink_spark.functions.jpeg_codec import decode_jpeg_gray
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    w, h, px = decode_jpeg_gray(p)
-                    rows.append((int(i), w, h, sum(px),
-                                 sum((j + 1) * b for j, b in enumerate(px))))
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "pixel_sum", "pixel_wsum"])
+    def decode(p):
+        w, h, px = decode_jpeg_gray(p)
+        return (w, h, sum(px), _wsum(px))
 
-    return df.mapInPandas(kernel, schema=JPEG_STATS_SCHEMA)
+    return _decode_rows(df, JPEG_STATS_SCHEMA, decode, id_col, payload_col,
+                        synth)
 
 
 def _jpeg_color_fixture_payload(i: int) -> bytes:
@@ -1218,14 +1178,8 @@ def synthesize_jpeg_color_column(df: DataFrame, id_col: str = "doc_id",
     so the decoded YCbCr planes are bit-exact and the decoded RGB is
     the closed-form floor(x+0.5) conversion of the recipe — a SQL
     oracle predicts every decoded byte. Arrow-batched pandas UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([
-            _jpeg_color_payload(
-                int(i), restart_interval=2 if int(i) % 5 == 0 else 0)
-            for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _jpeg_color_fixture_payload, id_col,
+                         payload_col)
 
 
 JPEG_COLOR_STATS_SCHEMA = T.StructType([
@@ -1255,27 +1209,15 @@ def jpeg_color_stats(df: DataFrame, id_col: str = "doc_id",
 
     from felixzh_flink_spark.functions.jpeg_codec import decode_jpeg_color
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    w, h, rgb = decode_jpeg_color(p)
-                    a = np.frombuffer(rgb, np.uint8).astype(np.int64)
-                    a = a.reshape(-1, 3)
-                    wsum = int(((np.arange(len(a)) + 1)
-                                * a.sum(axis=1)).sum())
-                    rows.append((int(i), w, h, int(a[:, 0].sum()),
-                                 int(a[:, 1].sum()), int(a[:, 2].sum()),
-                                 wsum))
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None, None, None,
-                                 None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "r_sum", "g_sum", "b_sum",
-                "rgb_wsum"])
+    def decode(p):
+        w, h, rgb = decode_jpeg_color(p)
+        a = np.frombuffer(rgb, np.uint8).astype(np.int64).reshape(-1, 3)
+        wsum = int(((np.arange(len(a)) + 1) * a.sum(axis=1)).sum())
+        return (w, h, int(a[:, 0].sum()), int(a[:, 1].sum()),
+                int(a[:, 2].sum()), wsum)
 
-    return df.mapInPandas(kernel, schema=JPEG_COLOR_STATS_SCHEMA)
+    return _decode_rows(df, JPEG_COLOR_STATS_SCHEMA, decode, id_col,
+                        payload_col, synth)
 
 
 #: the 4-color fixture palette shared by the animated/composited GIFs
@@ -1311,11 +1253,7 @@ def synthesize_gif_animation_column(df: DataFrame, id_col: str = "doc_id",
     Closed-form recipe → a SQL oracle predicts any statistic of any
     SAMPLED frame without decoding (`gif_frame_sample_stats`).
     Arrow-batched pandas UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_gif_anim_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _gif_anim_payload, id_col, payload_col)
 
 
 GIF_FRAME_SAMPLE_SCHEMA = T.StructType([
@@ -1344,47 +1282,36 @@ def gif_frame_sample_stats(df: DataFrame, every_ms: int = 100,
     no shuffle — frames scale the OUTPUT rows, not driver memory."""
     from felixzh_flink_spark.functions.gif_codec import decode_gif_frames
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    _, _, _, frames = decode_gif_frames(p)
-                    starts = []
-                    t = 0
-                    for delay, _idx in frames:
-                        starts.append(t)
-                        t += delay
-                    total = t
-                    if total == 0:
-                        # all-zero GCE delays (or a plain single-image
-                        # GIF): the clip has no duration, but the doc
-                        # must not vanish from the output — emit the
-                        # t=0 sample showing the final frame (the one
-                        # "on screen" after zero-delay flips)
-                        idx = frames[-1][1]
-                        rows.append((int(i), 0, len(frames) - 1,
-                                     sum(idx),
-                                     sum((j + 1) * b
-                                         for j, b in enumerate(idx))))
-                        continue
-                    k = 0
-                    fi = 0
-                    while k * every_ms < total:
-                        s = k * every_ms
-                        while fi + 1 < len(frames) and starts[fi + 1] <= s:
-                            fi += 1
-                        idx = frames[fi][1]
-                        rows.append((int(i), s, fi, sum(idx),
-                                     sum((j + 1) * b
-                                         for j, b in enumerate(idx))))
-                        k += 1
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "sample_ms", "frame_idx", "idx_sum", "idx_wsum"])
+    _require_positive(every_ms=every_ms)
 
-    return df.mapInPandas(kernel, schema=GIF_FRAME_SAMPLE_SCHEMA)
+    def decode(p):
+        _, _, _, frames = decode_gif_frames(p)
+        starts = []
+        t = 0
+        for delay, _idx in frames:
+            starts.append(t)
+            t += delay
+        total = t
+        if total == 0:
+            # all-zero GCE delays (or a plain single-image GIF): the
+            # clip has no duration, but the doc must not vanish from
+            # the output — emit the t=0 sample showing the final frame
+            # (the one "on screen" after zero-delay flips)
+            idx = frames[-1][1]
+            yield (0, len(frames) - 1, sum(idx), _wsum(idx))
+            return
+        k = 0
+        fi = 0
+        while k * every_ms < total:
+            s = k * every_ms
+            while fi + 1 < len(frames) and starts[fi + 1] <= s:
+                fi += 1
+            idx = frames[fi][1]
+            yield (s, fi, sum(idx), _wsum(idx))
+            k += 1
+
+    return _decode_rows(df, GIF_FRAME_SAMPLE_SCHEMA, decode, id_col,
+                        payload_col, synth)
 
 
 def _gif_comp_payload(i: int) -> bytes:
@@ -1424,11 +1351,7 @@ def synthesize_gif_composited_column(df: DataFrame, id_col: str = "doc_id",
     recipe exercises LEAVE, RESTORE-BACKGROUND and RESTORE-PREVIOUS.
     Closed-form recipe → the SQL oracle replays the compositing fold
     per pixel (`gif_composite_stats`). Arrow-batched pandas UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_gif_comp_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _gif_comp_payload, id_col, payload_col)
 
 
 GIF_COMPOSITE_SCHEMA = T.StructType([
@@ -1462,22 +1385,13 @@ def gif_composite_stats(df: DataFrame, id_col: str = "doc_id",
     from felixzh_flink_spark.functions.gif_codec import \
         composite_gif_frames
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    _, _, _, _, frames = composite_gif_frames(p)
-                    for fi, (_delay, canvas) in enumerate(frames):
-                        rows.append((int(i), fi, sum(canvas),
-                                     sum((j + 1) * b
-                                         for j, b in enumerate(canvas))))
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "frame_idx", "comp_sum", "comp_wsum"])
+    def decode(p):
+        _, _, _, _, frames = composite_gif_frames(p)
+        return [(fi, sum(canvas), _wsum(canvas))
+                for fi, (_delay, canvas) in enumerate(frames)]
 
-    return df.mapInPandas(kernel, schema=GIF_COMPOSITE_SCHEMA)
+    return _decode_rows(df, GIF_COMPOSITE_SCHEMA, decode, id_col,
+                        payload_col, synth)
 
 
 def _avi_payload(i: int) -> bytes:
@@ -1510,11 +1424,7 @@ def synthesize_mjpeg_avi_column(df: DataFrame, id_col: str = "doc_id",
     entropy data. Closed-form recipe → a SQL oracle predicts the
     sampled frames' decoded RGB (`avi_frame_sample_stats`).
     Arrow-batched pandas UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_avi_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _avi_payload, id_col, payload_col)
 
 
 AVI_FRAME_SAMPLE_SCHEMA = T.StructType([
@@ -1542,48 +1452,39 @@ def avi_frame_sample_stats(df: DataFrame, every_ms: int = 30,
     per-channel sums. Sampling before decoding matters at scale: a
     1-frame-per-second sample of 30 fps video decodes 1/30th of the
     frames — the kernel touches exactly the sampled payload bytes.
-    Undecodable containers/frames yield a null-stats quarantine row.
+    An undecodable container or ANY undecodable sampled frame yields
+    one null-stats quarantine row and no sample rows for that clip.
     One Arrow-batched mapInPandas fan-out, no shuffle."""
     import numpy as np
 
     from felixzh_flink_spark.functions.avi_codec import parse_mjpeg_avi
     from felixzh_flink_spark.functions.jpeg_codec import decode_jpeg_color
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    w, h, usec, frames = parse_mjpeg_avi(p)
-                    # timeline math stays in MICROSECONDS: real MJPEG
-                    # runs at e.g. 30 fps = 33333 us/frame, where
-                    # whole-ms truncation would mis-assign frames (and
-                    # sub-ms durations would silently emit nothing)
-                    total_usec = usec * len(frames)
-                    decoded: dict[int, tuple] = {}
-                    k = 0
-                    while k * every_ms * 1000 < total_usec:
-                        s = k * every_ms
-                        fi = (s * 1000) // usec
-                        if fi not in decoded:
-                            dw, dh, rgb = decode_jpeg_color(frames[fi])
-                            a = np.frombuffer(rgb, np.uint8)
-                            a = a.astype(np.int64).reshape(-1, 3)
-                            decoded[fi] = (dw, dh, int(a[:, 0].sum()),
-                                           int(a[:, 1].sum()),
-                                           int(a[:, 2].sum()))
-                        dw, dh, rs, gs, bs = decoded[fi]
-                        rows.append((int(i), s, int(fi), dw, dh,
-                                     rs, gs, bs))
-                        k += 1
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None, None,
-                                 None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "sample_ms", "frame_idx", "width", "height",
-                "r_sum", "g_sum", "b_sum"])
+    _require_positive(every_ms=every_ms)
 
-    return df.mapInPandas(kernel, schema=AVI_FRAME_SAMPLE_SCHEMA)
+    def decode(p):
+        _w, _h, usec, frames = parse_mjpeg_avi(p)
+        # timeline math stays in MICROSECONDS: real MJPEG runs at e.g.
+        # 30 fps = 33333 us/frame, where whole-ms truncation would
+        # mis-assign frames (and sub-ms durations would silently emit
+        # nothing)
+        total_usec = usec * len(frames)
+        decoded: dict[int, tuple] = {}
+        k = 0
+        while k * every_ms * 1000 < total_usec:
+            s = k * every_ms
+            fi = (s * 1000) // usec
+            if fi not in decoded:
+                dw, dh, rgb = decode_jpeg_color(frames[fi])
+                a = np.frombuffer(rgb, np.uint8)
+                a = a.astype(np.int64).reshape(-1, 3)
+                decoded[fi] = (dw, dh, int(a[:, 0].sum()),
+                               int(a[:, 1].sum()), int(a[:, 2].sum()))
+            yield (s, int(fi), *decoded[fi])
+            k += 1
+
+    return _decode_rows(df, AVI_FRAME_SAMPLE_SCHEMA, decode, id_col,
+                        payload_col, synth)
 
 
 WAV_RESAMPLE_SCHEMA = T.StructType([
@@ -1613,23 +1514,15 @@ def wav_resample_stats(df: DataFrame, target_rate: int = 16_000,
     from felixzh_flink_spark.functions.wav_codec import (decode_wav,
                                                          resample_linear)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    rate, ch, _bits, samples = decode_wav(p)
-                    out = resample_linear(samples, ch, rate, target_rate)
-                    rows.append((int(i), rate, ch, len(out), sum(out),
-                                 sum((j + 1) * s
-                                     for j, s in enumerate(out))))
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "src_rate", "channels", "n_out", "out_sum",
-                "out_wsum"])
+    _require_positive(target_rate=target_rate)
 
-    return df.mapInPandas(kernel, schema=WAV_RESAMPLE_SCHEMA)
+    def decode(p):
+        rate, ch, _bits, samples = decode_wav(p)
+        out = resample_linear(samples, ch, rate, target_rate)
+        return (rate, ch, len(out), sum(out), _wsum(out))
+
+    return _decode_rows(df, WAV_RESAMPLE_SCHEMA, decode, id_col,
+                        payload_col, synth)
 
 
 def _mixed_media_payload(i: int) -> bytes:
@@ -1648,11 +1541,7 @@ def synthesize_mixed_media_column(df: DataFrame, id_col: str = "doc_id",
     per-format oracles compose into one mixed-lake oracle. This is the
     shape of a real document store's media column: the format is a
     per-row fact discovered from magic bytes, not a table property."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_mixed_media_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _mixed_media_payload, id_col, payload_col)
 
 
 IMAGE_FEATURE_SCHEMA = T.StructType([
@@ -1689,77 +1578,61 @@ def image_feature_stats(df: DataFrame, id_col: str = "doc_id",
     from felixzh_flink_spark.functions.png_codec import decode_png
     from felixzh_flink_spark.functions.tiff_codec import decode_tiff
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    head = bytes(p[:6])
-                    if head.startswith(b"\x89PNG"):
-                        fmt = "png"
-                        w, h, ch, px = decode_png(p)
-                        if ch == 1:
-                            trip = [(v, v, v) for v in px]
-                        elif ch == 2:                # gray+alpha: drop A
-                            trip = [(px[2 * j],) * 3
-                                    for j in range(w * h)]
-                        elif ch == 3:
-                            trip = [(px[3 * j], px[3 * j + 1],
-                                     px[3 * j + 2])
-                                    for j in range(w * h)]
-                        else:                        # RGBA: drop alpha
-                            trip = [(px[4 * j], px[4 * j + 1],
-                                     px[4 * j + 2])
-                                    for j in range(w * h)]
-                        ch_out = 1 if ch == 2 else min(ch, 3)
-                    elif head.startswith(b"GIF8"):
-                        fmt = "gif"
-                        w, h, pal, idx = decode_gif(p)
-                        trip = [(pal[3 * e], pal[3 * e + 1],
-                                 pal[3 * e + 2]) for e in idx]
-                        ch_out = 3
-                    elif head.startswith(b"\xff\xd8"):
-                        fmt = "jpeg"
-                        w, h, ch, px = decode_jpeg(p)
-                        if ch == 1:
-                            trip = [(v, v, v) for v in px]
-                        else:
-                            trip = [(px[3 * j], px[3 * j + 1],
-                                     px[3 * j + 2])
-                                    for j in range(w * h)]
-                        ch_out = ch
-                    elif head.startswith(b"BM"):
-                        fmt = "bmp"
-                        w, h, px = decode_bmp(p)
-                        trip = [(px[3 * j], px[3 * j + 1], px[3 * j + 2])
-                                for j in range(w * h)]
-                        ch_out = 3
-                    elif head.startswith(b"II*\x00") or \
-                            head.startswith(b"MM\x00*"):
-                        fmt = "tiff"
-                        w, h, px = decode_tiff(p)
-                        trip = [(px[3 * j], px[3 * j + 1], px[3 * j + 2])
-                                for j in range(w * h)]
-                        ch_out = 3
-                    else:
-                        raise ValueError("unknown magic bytes")
-                    n = w * h
-                    lum = [r + g + b for r, g, b in trip]
-                    lum_sum = sum(lum)
-                    lum_sumsq = sum(v * v for v in lum)
-                    mean_rgb = lum_sum / (3.0 * n)
-                    var_lum = (float(lum_sumsq)
-                               - float(lum_sum) * lum_sum / n) / n
-                    rows.append((int(i), fmt, w, h, ch_out, mean_rgb,
-                                 var_lum))
-                except Exception:  # ValueError / zlib.error / struct.error
-                    rows.append((int(i), None, None, None, None, None,
-                                 None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "fmt", "width", "height", "channels",
-                "mean_rgb", "var_lum"])
+    def decode(p):
+        head = bytes(p[:6])
+        if head.startswith(b"\x89PNG"):
+            fmt = "png"
+            w, h, ch, px = decode_png(p)
+            if ch == 1:
+                trip = [(v, v, v) for v in px]
+            elif ch == 2:                # gray+alpha: drop A
+                trip = [(px[2 * j],) * 3 for j in range(w * h)]
+            elif ch == 3:
+                trip = [(px[3 * j], px[3 * j + 1], px[3 * j + 2])
+                        for j in range(w * h)]
+            else:                        # RGBA: drop alpha
+                trip = [(px[4 * j], px[4 * j + 1], px[4 * j + 2])
+                        for j in range(w * h)]
+            ch_out = 1 if ch == 2 else min(ch, 3)
+        elif head.startswith(b"GIF8"):
+            fmt = "gif"
+            w, h, pal, idx = decode_gif(p)
+            trip = [(pal[3 * e], pal[3 * e + 1], pal[3 * e + 2])
+                    for e in idx]
+            ch_out = 3
+        elif head.startswith(b"\xff\xd8"):
+            fmt = "jpeg"
+            w, h, ch, px = decode_jpeg(p)
+            if ch == 1:
+                trip = [(v, v, v) for v in px]
+            else:
+                trip = [(px[3 * j], px[3 * j + 1], px[3 * j + 2])
+                        for j in range(w * h)]
+            ch_out = ch
+        elif head.startswith(b"BM"):
+            fmt = "bmp"
+            w, h, px = decode_bmp(p)
+            trip = [(px[3 * j], px[3 * j + 1], px[3 * j + 2])
+                    for j in range(w * h)]
+            ch_out = 3
+        elif head.startswith(b"II*\x00") or head.startswith(b"MM\x00*"):
+            fmt = "tiff"
+            w, h, px = decode_tiff(p)
+            trip = [(px[3 * j], px[3 * j + 1], px[3 * j + 2])
+                    for j in range(w * h)]
+            ch_out = 3
+        else:
+            raise ValueError("unknown magic bytes")
+        n = w * h
+        lum = [r + g + b for r, g, b in trip]
+        lum_sum = sum(lum)
+        lum_sumsq = sum(v * v for v in lum)
+        mean_rgb = lum_sum / (3.0 * n)
+        var_lum = (float(lum_sumsq) - float(lum_sum) * lum_sum / n) / n
+        return (fmt, w, h, ch_out, mean_rgb, var_lum)
 
-    return df.mapInPandas(kernel, schema=IMAGE_FEATURE_SCHEMA)
+    return _decode_rows(df, IMAGE_FEATURE_SCHEMA, decode, id_col,
+                        payload_col, synth)
 
 
 WAV_SEGMENT_SCHEMA = T.StructType([
@@ -1788,28 +1661,22 @@ def wav_segment_stats(df: DataFrame, seg_frames: int = 8,
     OUTPUT rows, not driver memory."""
     from felixzh_flink_spark.functions.wav_codec import decode_wav
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    _rate, ch, _bits, samples = decode_wav(p)
-                    step = seg_frames * ch
-                    if not samples:
-                        # a silent/empty (but valid) file must stay
-                        # visible downstream — one zero-segment row
-                        rows.append((int(i), 0, 0, 0, 0))
-                        continue
-                    for s in range(0, (len(samples) + step - 1) // step):
-                        seg = samples[s * step:(s + 1) * step]
-                        rows.append((int(i), s, len(seg), sum(seg),
-                                     sum(v * v for v in seg)))
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "seg_idx", "n_values", "seg_sum", "seg_energy"])
+    _require_positive(seg_frames=seg_frames)
 
-    return df.mapInPandas(kernel, schema=WAV_SEGMENT_SCHEMA)
+    def decode(p):
+        _rate, ch, _bits, samples = decode_wav(p)
+        if not samples:
+            # a silent/empty (but valid) file must stay visible
+            # downstream — one zero-segment row
+            yield (0, 0, 0, 0)
+            return
+        step = seg_frames * ch
+        for s in range((len(samples) + step - 1) // step):
+            seg = samples[s * step:(s + 1) * step]
+            yield (s, len(seg), sum(seg), sum(v * v for v in seg))
+
+    return _decode_rows(df, WAV_SEGMENT_SCHEMA, decode, id_col,
+                        payload_col, synth)
 
 
 AUDIO_PCM_STATS_SCHEMA = T.StructType([
@@ -1840,11 +1707,20 @@ def synthesize_adpcm_wav_column(df: DataFrame, id_col: str = "doc_id",
     recipe → the SQL oracle re-runs the decoder's predictor/step-index
     recurrence as a recursive CTE (`adpcm_decode_stats`).
     Arrow-batched pandas UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_adpcm_payload(int(i)) for i in ids])
+    return _synth_column(df, _adpcm_payload, id_col, payload_col)
 
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+
+def _pcm_stats(df: DataFrame, decode_samples, id_col: str,
+               payload_col: str, synth) -> DataFrame:
+    """The compressed-audio stats tail shared by the ADPCM and µ-law
+    kernels: `decode_samples(payload)` → linear PCM samples → (count,
+    sum, order-sensitive weighted sum) per doc."""
+    def decode(p):
+        samples = decode_samples(p)
+        return (len(samples), sum(samples), _wsum(samples))
+
+    return _decode_rows(df, AUDIO_PCM_STATS_SCHEMA, decode, id_col,
+                        payload_col, synth)
 
 
 def wav_adpcm_stats(df: DataFrame, id_col: str = "doc_id",
@@ -1863,21 +1739,8 @@ def wav_adpcm_stats(df: DataFrame, id_col: str = "doc_id",
     shuffle."""
     from felixzh_flink_spark.functions.wav_codec import decode_wav_adpcm
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    _rate, samples = decode_wav_adpcm(p)
-                    rows.append((int(i), len(samples), sum(samples),
-                                 sum((k + 1) * s
-                                     for k, s in enumerate(samples))))
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_samples", "pcm_sum", "pcm_wsum"])
-
-    return df.mapInPandas(kernel, schema=AUDIO_PCM_STATS_SCHEMA)
+    return _pcm_stats(df, lambda p: decode_wav_adpcm(p)[1], id_col,
+                      payload_col, synth)
 
 
 def _mulaw_payload(i: int) -> bytes:
@@ -1896,11 +1759,7 @@ def synthesize_mulaw_wav_column(df: DataFrame, id_col: str = "doc_id",
     bytes, byte k = (id·11+5k) mod 256. Closed-form recipe → the SQL
     oracle states the µ-law expansion directly
     (`mulaw_decode_stats`). Arrow-batched pandas UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_mulaw_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _mulaw_payload, id_col, payload_col)
 
 
 def wav_mulaw_stats(df: DataFrame, id_col: str = "doc_id",
@@ -1916,21 +1775,8 @@ def wav_mulaw_stats(df: DataFrame, id_col: str = "doc_id",
     projection, no shuffle."""
     from felixzh_flink_spark.functions.wav_codec import decode_wav_mulaw
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    _rate, _ch, samples = decode_wav_mulaw(p)
-                    rows.append((int(i), len(samples), sum(samples),
-                                 sum((k + 1) * s
-                                     for k, s in enumerate(samples))))
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_samples", "pcm_sum", "pcm_wsum"])
-
-    return df.mapInPandas(kernel, schema=AUDIO_PCM_STATS_SCHEMA)
+    return _pcm_stats(df, lambda p: decode_wav_mulaw(p)[2], id_col,
+                      payload_col, synth)
 
 
 WEBDATASET_SCHEMA = T.StructType([
@@ -1989,15 +1835,36 @@ def synthesize_webdataset_column(df: DataFrame, id_col: str = "doc_id",
     captions — the scraped-web reality (the same image recaptioned
     across pages) that paired-modality dedup exists to clean up
     (`webdataset_pair_dedup`)."""
-    synth = _webdataset_payload_fn(image_group)
+    return _synth_column(df, _webdataset_payload_fn(image_group), id_col,
+                         payload_col, text_col)
 
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        return pd.Series([synth(int(i), t)
-                          for i, t in zip(ids, texts)])
 
-    return df.withColumn(payload_col, _make(F.col(id_col),
-                                            F.col(text_col)))
+def _webdataset_sample(p) -> dict:
+    """The shard walk shared by the WebDataset kernels: gunzip
+    (CRC-verified), walk the tar, group file members into samples by
+    name-up-to-first-dot, and return the ONE sample's {ext: bytes}
+    parts — raising on a multi-sample shard or a sample without both a
+    `.txt` and a `.png` part (the caller quarantines)."""
+    import io
+    import tarfile
+
+    from felixzh_flink_spark.functions.gzip_codec import \
+        decode_gzip_members
+
+    raw = b"".join(r for _m, r in decode_gzip_members(p))
+    samples: dict = {}
+    with tarfile.open(fileobj=io.BytesIO(raw)) as tf:
+        for m in tf.getmembers():
+            if not m.isfile():
+                continue
+            key, _, ext = m.name.partition(".")
+            samples.setdefault(key, {})[ext] = tf.extractfile(m).read()
+    if len(samples) != 1:
+        raise ValueError("expected one sample per shard")
+    parts = next(iter(samples.values()))
+    if "txt" not in parts or "png" not in parts:
+        raise ValueError("sample missing txt/png part")
+    return parts
 
 
 WEBDATASET_PAIR_SCHEMA = T.StructType([
@@ -2021,40 +1888,12 @@ def webdataset_pairs(df: DataFrame, id_col: str = "doc_id",
     Malformed shards (bad gzip, missing part, multi-sample) quarantine
     as null rows. One mapInPandas projection, no shuffle; at scale the
     parallel unit is the shard file."""
-    import io
-    import tarfile
+    def decode(p):
+        parts = _webdataset_sample(p)
+        return (len(parts["txt"].decode("utf-8")), parts["png"])
 
-    from felixzh_flink_spark.functions.gzip_codec import \
-        decode_gzip_members
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth,
-                                          synth_text_col):
-                try:
-                    raw = b"".join(r for _m, r in decode_gzip_members(p))
-                    samples: dict = {}
-                    with tarfile.open(fileobj=io.BytesIO(raw)) as tf:
-                        for m in tf.getmembers():
-                            if not m.isfile():
-                                continue
-                            key, _, ext = m.name.partition(".")
-                            samples.setdefault(key, {})[ext] = \
-                                tf.extractfile(m).read()
-                    if len(samples) != 1:
-                        raise ValueError("expected one sample per shard")
-                    parts = next(iter(samples.values()))
-                    if "txt" not in parts or "png" not in parts:
-                        raise ValueError("sample missing txt/png part")
-                    cap = parts["txt"].decode("utf-8")
-                    rows.append((int(i), len(cap), parts["png"]))
-                except Exception:  # ValueError / tarfile / zlib errors
-                    rows.append((int(i), None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "caption_len", "png"])
-
-    return df.mapInPandas(kernel, schema=WEBDATASET_PAIR_SCHEMA)
+    return _decode_rows(df, WEBDATASET_PAIR_SCHEMA, decode, id_col,
+                        payload_col, synth, synth_text_col)
 
 
 def webdataset_sample_stats(df: DataFrame, id_col: str = "doc_id",
@@ -2072,44 +1911,17 @@ def webdataset_sample_stats(df: DataFrame, id_col: str = "doc_id",
     Arrow-batched mapInPandas projection, no shuffle; at scale the
     parallel unit is the SHARD FILE (same partition-per-file split as
     the `felixzh_warc` source)."""
-    import io
-    import tarfile
-
-    from felixzh_flink_spark.functions.gzip_codec import \
-        decode_gzip_members
     from felixzh_flink_spark.functions.png_codec import decode_png
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth,
-                                          synth_text_col):
-                try:
-                    raw = b"".join(r for _m, r in decode_gzip_members(p))
-                    samples: dict = {}
-                    with tarfile.open(fileobj=io.BytesIO(raw)) as tf:
-                        for m in tf.getmembers():
-                            if not m.isfile():
-                                continue
-                            key, _, ext = m.name.partition(".")
-                            data = tf.extractfile(m).read()
-                            samples.setdefault(key, {})[ext] = data
-                    if len(samples) != 1:
-                        raise ValueError("expected one sample per shard")
-                    parts = next(iter(samples.values()))
-                    txt = parts.get("txt")
-                    png = parts.get("png")
-                    if txt is None or png is None:
-                        raise ValueError("sample missing txt/png part")
-                    txt.decode("utf-8")
-                    _w, _h, _ch, px = decode_png(png)
-                    rows.append((int(i), len(parts), len(txt), sum(px)))
-                except Exception:  # ValueError / tarfile / zlib errors
-                    rows.append((int(i), None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_parts", "txt_len", "png_pixel_sum"])
+    def decode(p):
+        parts = _webdataset_sample(p)
+        txt = parts["txt"]
+        txt.decode("utf-8")
+        _w, _h, _ch, px = decode_png(parts["png"])
+        return (len(parts), len(txt), sum(px))
 
-    return df.mapInPandas(kernel, schema=WEBDATASET_SCHEMA)
+    return _decode_rows(df, WEBDATASET_SCHEMA, decode, id_col, payload_col,
+                        synth, synth_text_col)
 
 
 def _media_census_payload(i: int) -> bytes:
@@ -2137,11 +1949,7 @@ def synthesize_media_census_column(df: DataFrame, id_col: str = "doc_id",
     builder) or deliberate junk bytes (`JUNK<id>`) — the full dispatch
     surface plus the quarantine path in one column. Arrow-batched
     pandas UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_media_census_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _media_census_payload, id_col, payload_col)
 
 
 def media_format_census(df: DataFrame, id_col: str = "doc_id",
@@ -2196,13 +2004,7 @@ def synthesize_gzip_column(df: DataFrame, id_col: str = "doc_id",
     independently instead of joining bytes first breaks); odd ids get
     one member carrying an FNAME field and a header CRC16 the walker
     must verify and skip. Arrow-batched pandas UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        return pd.Series([_gzip_payload(int(i), t)
-                          for i, t in zip(ids, texts)])
-
-    return df.withColumn(payload_col, _make(F.col(id_col),
-                                            F.col(text_col)))
+    return _synth_column(df, _gzip_payload, id_col, payload_col, text_col)
 
 
 def gzip_roundtrip_stats(df: DataFrame, id_col: str = "doc_id",
@@ -2220,22 +2022,13 @@ def gzip_roundtrip_stats(df: DataFrame, id_col: str = "doc_id",
     from felixzh_flink_spark.functions.gzip_codec import \
         decode_gzip_members
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth,
-                                          synth_text_col):
-                try:
-                    members = decode_gzip_members(p)
-                    raw = b"".join(r for _m, r in members)
-                    rows.append((int(i), len(members),
-                                 raw.decode("utf-8")))
-                except Exception:  # ValueError / UnicodeDecodeError
-                    rows.append((int(i), None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_members", "text"])
+    def decode(p):
+        members = decode_gzip_members(p)
+        raw = b"".join(r for _m, r in members)
+        return (len(members), raw.decode("utf-8"))
 
-    return df.mapInPandas(kernel, schema=GZIP_ROUNDTRIP_SCHEMA)
+    return _decode_rows(df, GZIP_ROUNDTRIP_SCHEMA, decode, id_col,
+                        payload_col, synth, synth_text_col)
 
 
 COMPRESSED_TEXT_SCHEMA = T.StructType([
@@ -2274,13 +2067,8 @@ def synthesize_compressed_text_column(df: DataFrame,
     heterogeneous-codec lake a long-lived ingestion pipeline actually
     accumulates (WET dumps gzipped, archives bzip2'd, cold storage
     xz'd). Arrow-batched pandas UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series, texts: pd.Series) -> pd.Series:
-        return pd.Series([_compressed_text_payload(int(i), t)
-                          for i, t in zip(ids, texts)])
-
-    return df.withColumn(payload_col, _make(F.col(id_col),
-                                            F.col(text_col)))
+    return _synth_column(df, _compressed_text_payload, id_col, payload_col,
+                         text_col)
 
 
 def compressed_text_stats(df: DataFrame, id_col: str = "doc_id",
@@ -2301,31 +2089,23 @@ def compressed_text_stats(df: DataFrame, id_col: str = "doc_id",
     from felixzh_flink_spark.functions.gzip_codec import \
         decode_gzip_members
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth,
-                                          synth_text_col):
-                try:
-                    head = bytes(p[:6])
-                    if head.startswith(b"\x1f\x8b"):
-                        codec = "gzip"
-                        raw = b"".join(
-                            r for _m, r in decode_gzip_members(p))
-                    elif head.startswith(b"BZh"):
-                        codec = "bz2"
-                        raw = bz2.decompress(bytes(p))
-                    elif head.startswith(b"\xfd7zXZ"):
-                        codec = "xz"
-                        raw = lzma.decompress(bytes(p))
-                    else:
-                        raise ValueError("unknown compression magic")
-                    rows.append((int(i), codec, raw.decode("utf-8")))
-                except Exception:  # ValueError / OSError / LZMAError
-                    rows.append((int(i), None, None))
-            yield pd.DataFrame(rows, columns=["doc_id", "codec", "text"])
+    def decode(p):
+        head = bytes(p[:6])
+        if head.startswith(b"\x1f\x8b"):
+            codec = "gzip"
+            raw = b"".join(r for _m, r in decode_gzip_members(p))
+        elif head.startswith(b"BZh"):
+            codec = "bz2"
+            raw = bz2.decompress(bytes(p))
+        elif head.startswith(b"\xfd7zXZ"):
+            codec = "xz"
+            raw = lzma.decompress(bytes(p))
+        else:
+            raise ValueError("unknown compression magic")
+        return (codec, raw.decode("utf-8"))
 
-    return df.mapInPandas(kernel, schema=COMPRESSED_TEXT_SCHEMA)
+    return _decode_rows(df, COMPRESSED_TEXT_SCHEMA, decode, id_col,
+                        payload_col, synth, synth_text_col)
 
 
 WARC_RECORD_SCHEMA = T.StructType([
@@ -2367,16 +2147,9 @@ def synthesize_warc_column(df: DataFrame, id_col: str = "doc_id",
     through the container) — each record its OWN gzip member (the
     canonical crawl layout readers split on). Arrow-batched pandas
     UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series, texts: pd.Series,
-              uris: pd.Series) -> pd.Series:
-        return pd.Series([_warc_payload(int(i), t, u)
-                          for i, t, u in zip(ids, texts, uris)])
-
-    uri = (F.col(uri_col) if uri_col is not None
-           else F.lit(None).cast("string"))
-    return df.withColumn(payload_col, _make(F.col(id_col),
-                                            F.col(text_col), uri))
+    uri = uri_col if uri_col is not None else F.lit(None).cast("string")
+    return _synth_column(df, _warc_payload, id_col, payload_col, text_col,
+                         uri)
 
 
 def warc_record_stats(df: DataFrame, id_col: str = "doc_id",
@@ -2394,28 +2167,18 @@ def warc_record_stats(df: DataFrame, id_col: str = "doc_id",
     projection, no shuffle."""
     from felixzh_flink_spark.functions.warc_codec import decode_warc
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth,
-                                          synth_text_col):
-                try:
-                    records = decode_warc(p)
-                    responses = [(h, b) for h, b in records
-                                 if h.get("WARC-Type") == "response"]
-                    if len(responses) != 1:
-                        raise ValueError("expected one response record")
-                    h, b = responses[0]
-                    rows.append((int(i), len(records),
-                                 h.get("WARC-Target-URI"), len(b),
-                                 b.decode("utf-8")))
-                except Exception:  # ValueError / UnicodeDecodeError
-                    rows.append((int(i), None, None, None, None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "n_records", "target_uri", "response_len",
-                "text"])
+    def decode(p):
+        records = decode_warc(p)
+        responses = [(h, b) for h, b in records
+                     if h.get("WARC-Type") == "response"]
+        if len(responses) != 1:
+            raise ValueError("expected one response record")
+        h, b = responses[0]
+        return (len(records), h.get("WARC-Target-URI"), len(b),
+                b.decode("utf-8"))
 
-    return df.mapInPandas(kernel, schema=WARC_RECORD_SCHEMA)
+    return _decode_rows(df, WARC_RECORD_SCHEMA, decode, id_col,
+                        payload_col, synth, synth_text_col)
 
 
 def _bmp_payload(i: int) -> bytes:
@@ -2435,12 +2198,7 @@ def synthesize_bmp_column(df: DataFrame, id_col: str = "doc_id",
     real 24-bit bottom-up BGR files with 4-byte row padding, built from
     a closed-form recipe so a SQL oracle predicts the DECODED bytes
     (`bmp_pixel_stats`). Arrow-batched pandas UDF."""
-
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_bmp_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _bmp_payload, id_col, payload_col)
 
 
 BMP_STATS_SCHEMA = T.StructType([
@@ -2452,6 +2210,20 @@ BMP_STATS_SCHEMA = T.StructType([
     T.StructField("b_sum", T.LongType(), True),
     T.StructField("pixel_wsum", T.LongType(), True),
 ])
+
+
+def _rgb_stats(df: DataFrame, decode_rgb, id_col: str, payload_col: str,
+               synth) -> DataFrame:
+    """The RGB stats tail shared by the BMP and TIFF kernels:
+    `decode_rgb(payload)` → (w, h, top-down row-major RGB bytes) →
+    geometry, per-channel sums and Σ (k+1)·byteₖ."""
+    def decode(p):
+        w, h, rgb = decode_rgb(p)
+        return (w, h, sum(rgb[0::3]), sum(rgb[1::3]), sum(rgb[2::3]),
+                _wsum(rgb))
+
+    return _decode_rows(df, BMP_STATS_SCHEMA, decode, id_col, payload_col,
+                        synth)
 
 
 def bmp_pixel_stats(df: DataFrame, id_col: str = "doc_id",
@@ -2466,24 +2238,7 @@ def bmp_pixel_stats(df: DataFrame, id_col: str = "doc_id",
     mapInPandas projection, no shuffle."""
     from felixzh_flink_spark.functions.bmp_codec import decode_bmp
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    w, h, rgb = decode_bmp(p)
-                    rows.append((int(i), w, h, sum(rgb[0::3]),
-                                 sum(rgb[1::3]), sum(rgb[2::3]),
-                                 sum((k + 1) * b
-                                     for k, b in enumerate(rgb))))
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None, None, None,
-                                 None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "r_sum", "g_sum", "b_sum",
-                "pixel_wsum"])
-
-    return df.mapInPandas(kernel, schema=BMP_STATS_SCHEMA)
+    return _rgb_stats(df, decode_bmp, id_col, payload_col, synth)
 
 
 def _tiff_payload(i: int) -> bytes:
@@ -2513,11 +2268,7 @@ def synthesize_tiff_column(df: DataFrame, id_col: str = "doc_id",
     REAL baseline-RGB TIFFs mixing both byte orders, PackBits and
     uncompressed strips, and multi-strip layouts. Arrow-batched
     pandas UDF."""
-    @F.pandas_udf("binary")
-    def _make(ids: pd.Series) -> pd.Series:
-        return pd.Series([_tiff_payload(int(i)) for i in ids])
-
-    return df.withColumn(payload_col, _make(F.col(id_col)))
+    return _synth_column(df, _tiff_payload, id_col, payload_col)
 
 
 def tiff_pixel_stats(df: DataFrame, id_col: str = "doc_id",
@@ -2534,21 +2285,4 @@ def tiff_pixel_stats(df: DataFrame, id_col: str = "doc_id",
     mapInPandas projection, no shuffle."""
     from felixzh_flink_spark.functions.tiff_codec import decode_tiff
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in _id_payloads(pdf, id_col, payload_col, synth):
-                try:
-                    w, h, rgb = decode_tiff(p)
-                    rows.append((int(i), w, h, sum(rgb[0::3]),
-                                 sum(rgb[1::3]), sum(rgb[2::3]),
-                                 sum((k + 1) * b
-                                     for k, b in enumerate(rgb))))
-                except Exception:  # ValueError / struct.error
-                    rows.append((int(i), None, None, None, None, None,
-                                 None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "r_sum", "g_sum", "b_sum",
-                "pixel_wsum"])
-
-    return df.mapInPandas(kernel, schema=BMP_STATS_SCHEMA)
+    return _rgb_stats(df, decode_tiff, id_col, payload_col, synth)

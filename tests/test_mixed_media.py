@@ -1,6 +1,7 @@
 """Mixed-format media lake: magic-byte dispatch + real per-format
 decode + exact float feature math (multimodal.image_feature_stats)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from felixzh_flink_spark.operators import multimodal as MM
@@ -352,6 +353,18 @@ def test_fused_synth_kernels_match_column_path(spark):
          MM._png_payload, {"grid": 4}),
         (MM.audio_fingerprint_cells, MM.synthesize_wav_envelope_column,
          MM._wav_envelope_payload_fn(), {"windows": 16}),
+        (MM.png_thumbnail_stats, MM.synthesize_png_column,
+         MM._png_payload, {"out_w": 3, "out_h": 2}),
+        (MM.gif_frame_sample_stats, MM.synthesize_gif_animation_column,
+         MM._gif_anim_payload, {}),
+        (MM.gif_composite_stats, MM.synthesize_gif_composited_column,
+         MM._gif_comp_payload, {}),
+        (MM.wav_resample_stats, MM.synthesize_wav_column,
+         MM._wav_payload, {}),
+        (MM.wav_segment_stats, MM.synthesize_wav_column,
+         MM._wav_payload, {}),
+        (MM.image_ahash_cells, MM.synthesize_png_large_column,
+         MM._png_large_payload, {"grid": 8}),
     ]
     for stats, synth_col, payload_fn, kw in cases:
         # the synth column names differ per family; detect from defaults
@@ -396,3 +409,90 @@ def test_fused_text_synth_kernels_match_column_path(spark):
         a = sorted(map(tuple, two_stage.collect()))
         b = sorted(map(tuple, fused.collect()))
         assert a == b, stats.__name__
+
+
+#: every per-payload decode kernel with its declared output schema and
+#: the extra arguments it needs
+_DECODE_KERNELS = [
+    (MM.png_pixel_stats, MM.PNG_STATS_SCHEMA, {}),
+    (MM.image_ahash_cells, MM.AHASH_SCHEMA, {}),
+    (MM.audio_fingerprint_cells, MM.AHASH_SCHEMA, {}),
+    (MM.wav_pcm_stats, MM.WAV_STATS_SCHEMA, {}),
+    (MM.png_thumbnail_stats, MM.THUMB_STATS_SCHEMA, {"out_w": 3, "out_h": 2}),
+    (MM.gif_pixel_stats, MM.GIF_STATS_SCHEMA, {}),
+    (MM.jpeg_pixel_stats, MM.JPEG_STATS_SCHEMA, {}),
+    (MM.jpeg_color_stats, MM.JPEG_COLOR_STATS_SCHEMA, {}),
+    (MM.gif_frame_sample_stats, MM.GIF_FRAME_SAMPLE_SCHEMA, {}),
+    (MM.gif_composite_stats, MM.GIF_COMPOSITE_SCHEMA, {}),
+    (MM.avi_frame_sample_stats, MM.AVI_FRAME_SAMPLE_SCHEMA, {}),
+    (MM.wav_resample_stats, MM.WAV_RESAMPLE_SCHEMA, {}),
+    (MM.image_feature_stats, MM.IMAGE_FEATURE_SCHEMA, {}),
+    (MM.wav_segment_stats, MM.WAV_SEGMENT_SCHEMA, {}),
+    (MM.wav_adpcm_stats, MM.AUDIO_PCM_STATS_SCHEMA, {}),
+    (MM.wav_mulaw_stats, MM.AUDIO_PCM_STATS_SCHEMA, {}),
+    (MM.webdataset_pairs, MM.WEBDATASET_PAIR_SCHEMA, {}),
+    (MM.webdataset_sample_stats, MM.WEBDATASET_SCHEMA, {}),
+    (MM.gzip_roundtrip_stats, MM.GZIP_ROUNDTRIP_SCHEMA, {}),
+    (MM.compressed_text_stats, MM.COMPRESSED_TEXT_SCHEMA, {}),
+    (MM.warc_record_stats, MM.WARC_RECORD_SCHEMA, {}),
+    (MM.bmp_pixel_stats, MM.BMP_STATS_SCHEMA, {}),
+    (MM.tiff_pixel_stats, MM.BMP_STATS_SCHEMA, {}),
+]
+
+
+def test_decode_kernels_quarantine_garbage_and_null_payloads(spark):
+    """The shared quarantine policy, on every decode kernel: a garbage
+    payload and a NULL payload each yield exactly ONE row that keeps
+    the id with every other column NULL (projection and fan-out kernels
+    alike), under exactly the declared output schema."""
+    bad = spark.createDataFrame([(1, b"\x00not-media"), (2, None)],
+                                "doc_id long, p binary")
+    for kernel, schema, kw in _DECODE_KERNELS:
+        out = kernel(bad, payload_col="p", **kw)
+        assert out.schema == schema, kernel.__name__
+        rows = sorted(map(tuple, out.collect()))
+        null_tail = (None,) * (len(schema) - 1)
+        assert rows == [(1, *null_tail), (2, *null_tail)], kernel.__name__
+
+
+@pytest.mark.parametrize("kernel,param", [
+    (MM.gif_frame_sample_stats, "every_ms"),
+    (MM.avi_frame_sample_stats, "every_ms"),
+    (MM.wav_segment_stats, "seg_frames"),
+    (MM.image_ahash_cells, "grid"),
+    (MM.audio_fingerprint_cells, "windows"),
+    (MM.wav_resample_stats, "target_rate"),
+])
+def test_non_positive_kernel_parameter_raises_on_driver(spark, kernel,
+                                                        param):
+    """A non-positive step or size is rejected when the kernel is
+    called, before any job runs: a zero step would spin a sampling loop
+    until the Python worker runs out of memory, and a zero size would
+    fail inside every decode and quarantine every VALID payload."""
+    ids = spark.range(0, 4).selectExpr("id AS doc_id")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match=param):
+            kernel(ids, **{param: bad})
+
+
+def test_avi_corrupt_later_frame_quarantines_whole_clip(spark):
+    """A clip whose SECOND sampled frame is corrupt emits exactly one
+    quarantine row — never the earlier frame's sample rows next to a
+    null row. Clip 0 has two 20 ms frames, so the default 30 ms
+    sampling reads frame 0 at t=0 and frame 1 at t=30."""
+    from felixzh_flink_spark.functions.avi_codec import parse_mjpeg_avi
+
+    clip = MM._avi_payload(0)
+    _w, _h, usec, frames = parse_mjpeg_avi(clip)
+    assert usec == 20_000 and len(frames) == 2
+    at = clip.index(frames[1])
+    broken = clip[:at] + b"\x00" * len(frames[1]) + clip[at + len(frames[1]):]
+    assert len(parse_mjpeg_avi(broken)[3]) == 2   # container still parses
+
+    df = spark.createDataFrame([(7, broken), (8, clip)],
+                               "doc_id long, video binary")
+    rows = [tuple(r) for r in MM.avi_frame_sample_stats(df).collect()]
+    assert [r for r in rows if r[0] == 7] == [(7,) + (None,) * 7]
+    intact = [r for r in rows if r[0] == 8]       # intact clip: 2 samples
+    assert len(intact) == 2
+    assert all(v is not None for r in intact for v in r)

@@ -176,6 +176,37 @@ def test_headline_queries_have_no_python_stages(spark):
         assert not any(n in p for n in PY_NODES), f"python stage in {name}"
 
 
+def test_media_queries_keep_one_python_stage_per_kernel(spark):
+    """Each media query's Python plan-node count is pinned: one
+    MapInPandas per decode kernel, with fixture synthesis fused into
+    the same stage (`synth=`), so no second Python stage appears. The
+    near-dup families show 0 because their cell kernels run inside an
+    eager checkpoint during construction."""
+    PY_NODES = ("ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas",
+                "BatchEvalPython")
+    expected = {
+        "image_ahash_neardup": 0, "audio_fingerprint_neardup": 0,
+        "image_ahash_neardup_grid8": 0, "audio_fingerprint_neardup_w64": 0,
+        "webdataset_pair_dedup": 2,
+        "png_decode_stats": 1, "wav_decode_stats": 1,
+        "png_thumbnail_stats": 1, "gif_decode_stats": 1,
+        "jpeg_decode_stats": 1, "jpeg_color_decode_stats": 1,
+        "gif_frame_sample_stats": 1, "avi_frame_sample_stats": 1,
+        "wav_resample_stats": 1, "image_feature_stats": 1,
+        "wav_segment_stats": 1, "bmp_decode_stats": 1,
+        "gif_composite_stats": 1, "adpcm_decode_stats": 1,
+        "mulaw_decode_stats": 1, "tiff_decode_stats": 1,
+        "gzip_roundtrip_docs": 1, "warc_extract_stats": 1,
+        "media_format_census": 1, "webdataset_sample_stats": 1,
+        "compressed_text_census": 1,
+    }
+    got = {}
+    for name in expected:
+        p = plan_of(spark, name)
+        got[name] = sum(p.count(n) for n in PY_NODES)
+    assert got == expected
+
+
 def test_tfidf_cached_stats_single_corpus_scan(spark):
     """tfidf_top_terms serves against the materialized df artifact
     (write_tfidf_stats): query time scans the documents table exactly
