@@ -22,6 +22,13 @@ import math
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from felixzh_flink_spark.functions.changelog import (
+    OP_INSERT,
+    changelog_upsert_sink,
+    read_upsert_state,
+)
+from felixzh_flink_spark.functions.stateio import state_fs
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -296,6 +303,131 @@ def rp_rerank_topk(df: DataFrame, query_vec: list[float], k: int = 10,
         .orderBy(F.desc("cosine_sim"), F.asc("id")).limit(k))
 
 
+# ------------------------------------------- maintained-index lifecycle
+
+#: the generation column of every maintained index (rp and IVF)
+_EPOCH = "ingest_epoch"
+
+
+def _index_epochs(spark, path: str) -> list[int]:
+    """Committed generations of a maintained index, from a DIRECTORY
+    LISTING (StateFS: file:/hdfs:/s3a: alike), never a data scan; []
+    when nothing is committed."""
+    pre = _EPOCH + "="
+    return sorted(int(n[len(pre):])
+                  for n in state_fs(spark, path).listdir(path)
+                  if n.startswith(pre))
+
+
+class _Lifecycle:
+    """The one maintained-index lifecycle of the rp and IVF indexes.
+    `encode` is the pure per-row ingest encoder (identity for rows
+    already encoded); `part` the layout column under each generation.
+    Layout `path/ingest_epoch=E[/part=C]`, so epoch checks, compaction
+    triggers and the single-generation read are directory listings. A
+    delete is a row whose payload (`part`, else `proj`; never NULL on
+    an encoded row) is NULL. Read rule: a row is alive iff its payload
+    is non-null and no NEWER generation holds its id."""
+
+    def __init__(self, encode=None, part: str | None = None):
+        self.encode = encode or (lambda rows: rows)
+        self.layout = [_EPOCH] + ([part] if part else [])
+        self.payload = part or "proj"
+
+    def _commit(self, rows: DataFrame, path: str, epoch: int,
+                mode: str = "append") -> None:
+        (rows.withColumn(_EPOCH, F.lit(int(epoch))).write.mode(mode)
+         .partitionBy(*self.layout).parquet(path))
+
+    @staticmethod
+    def _target(spark, path: str, epoch: int | None):
+        """(generation to write into, committed generations), checked
+        BEFORE any write; no `epoch` joins the latest generation."""
+        epochs = _index_epochs(spark, path)
+        if epoch is None:
+            return (epochs or [0])[-1], epochs
+        if epochs and int(epoch) <= epochs[-1]:
+            raise ValueError(
+                f"epoch {epoch} is not newer than committed epochs "
+                f"{epochs} under {path}; latest-wins would discard it")
+        return int(epoch), epochs
+
+    def write(self, df: DataFrame, path: str, epoch: int | None) -> None:
+        self._commit(self.encode(df), path, epoch or 0, "overwrite")
+
+    def append(self, df: DataFrame, path: str, epoch: int | None,
+               id_col: str = "vec_id", compact_after: int | None = None):
+        target, epochs = self._target(df.sparkSession, path, epoch)
+        self._commit(self.encode(df), path, target)
+        n = len(set(epochs) | {target})
+        if compact_after is not None and n >= compact_after:
+            self.compact(df.sparkSession, path, id_col)
+
+    def delete(self, ids_df: DataFrame, path: str, epoch: int,
+               id_col: str) -> None:
+        spark = ids_df.sparkSession
+        target, _ = self._target(spark, path, epoch)
+        fields = spark.read.parquet(path).schema.fields   # footer read
+        self._commit(ids_df.select(F.col(id_col), *[
+            F.lit(None).cast(f.dataType).alias(f.name) for f in fields
+            if f.name not in (id_col, _EPOCH)]), path, target)
+
+    def alive(self, spark, path: str, id_col: str,
+              where: Column | None = None) -> DataFrame:
+        """One generation: a filtered scan. Several: a broadcast join
+        against the per-id newest epoch over every generation but the
+        oldest (which supersedes nothing) — O(delta), no window."""
+        idx = spark.read.parquet(path)
+        rows = idx.filter(F.col(self.payload).isNotNull())
+        if where is not None:
+            rows = rows.filter(where)
+        epochs = _index_epochs(spark, path)
+        if len(epochs) > 1:
+            newest = (idx.filter(F.col(_EPOCH) > epochs[0])
+                      .groupBy(id_col).agg(F.max(_EPOCH).alias("_new")))
+            rows = (rows.join(F.broadcast(newest), id_col, "left")
+                    .filter(F.col("_new").isNull()
+                            | (F.col(_EPOCH) >= F.col("_new")))
+                    .drop("_new"))
+        return rows.drop(_EPOCH)
+
+    def compact(self, spark, path: str, id_col: str) -> None:
+        epochs = _index_epochs(spark, path)
+        if len(epochs) > 1:
+            self._commit(self.alive(spark, path, id_col)
+                         .localCheckpoint(eager=True), path, epochs[-1] + 1)
+            fs = state_fs(spark, path)
+            for e in epochs:                        # oldest first
+                fs.delete(fs.join(path, f"{_EPOCH}={e}"))
+
+    def stream_sink(self, state_dir: str, id_col: str, vec_col: str,
+                    n_buckets: int):
+        inner = changelog_upsert_sink(state_dir, pk=[id_col],
+                                      order_col=_EPOCH, n_buckets=n_buckets)
+
+        def sink(batch_df: DataFrame, epoch_id: int) -> None:
+            op = (F.col("op") if "op" in batch_df.columns
+                  else F.lit(OP_INSERT))
+            rows = self.encode(batch_df.select(id_col, vec_col,
+                                               op.alias("op")))
+            inner(rows.withColumn(_EPOCH, F.lit(int(epoch_id))), epoch_id)
+
+        return sink
+
+
+_RP = _Lifecycle()
+_IVF = _Lifecycle(part="ivf_cell")
+
+
+def _rp_lifecycle(out_dim: int, in_dim: int, id_col: str, vec_col: str):
+    """The rp lifecycle, encoding (id, vec, …) → (id, proj, vec, …):
+    the JL projection as its own top-level column."""
+    proj = F.expr(random_projection_sql(vec_col, out_dim, in_dim))
+    return _Lifecycle(lambda df: df.select(
+        F.col(id_col), proj.alias("proj"),
+        *[c for c in df.columns if c != id_col]))
+
+
 def write_rp_index(df: DataFrame, path: str, out_dim: int = 16,
                    in_dim: int = 64, id_col: str = "vec_id",
                    vec_col: str = "embedding",
@@ -312,51 +444,19 @@ def write_rp_index(df: DataFrame, path: str, out_dim: int = 16,
     `random_projection_sql`'s exact left-fold doubles (parquet
     round-trips bits), so index-path results stay hash-oracle-able.
 
-    With `epoch`, the index is PARTITIONED BY `ingest_epoch` (one
-    directory per committed generation — the LSM-ish layout of an
+    The index is PARTITIONED BY `ingest_epoch`, one directory per
+    committed generation; the write replaces the index with generation
+    `epoch` (0 without it). This is the LSM-ish layout of an
     INCREMENTALLY MAINTAINED index: `append_rp_index` adds later
     epoch directories, `delete_from_rp_index` adds tombstones,
     `rp_index_latest` reads latest-wins, `compact_rp_index` folds the
-    generations back to one). Epoch membership living in DIRECTORY
+    generations back to one. Epoch membership living in DIRECTORY
     NAMES, not row data, is what makes maintenance decisions
-    filesystem-cheap at 100 TB: epoch counting, compaction triggers,
+    filesystem-cheap at 100 TB: epoch checks, compaction triggers,
     and the single-generation fast path all run on a directory
-    listing, never a data scan. Without `epoch` the layout is the
-    plain immutable form."""
-    w = _rp_index_rows(df, out_dim, in_dim, id_col, vec_col, epoch) \
-        .write.mode("overwrite")
-    if epoch is not None:
-        w = w.partitionBy("ingest_epoch")
-    w.parquet(path)
-
-
-def _rp_index_rows(df: DataFrame, out_dim: int, in_dim: int,
-                   id_col: str, vec_col: str,
-                   epoch: int | None) -> DataFrame:
-    sel = [
-        F.col(id_col),
-        F.expr(random_projection_sql(vec_col, out_dim, in_dim))
-        .alias("proj"),
-        F.col(vec_col),
-    ]
-    if epoch is not None:
-        sel.append(F.lit(int(epoch)).alias("ingest_epoch"))
-    return df.select(*sel)
-
-
-def _rp_epochs(spark, path: str) -> list[int]:
-    """Committed epoch generations of an epoch-partitioned rp index —
-    a pure DIRECTORY LISTING (StateFS, so file:/hdfs:/s3a: alike), no
-    data scan: the listing is how `append_rp_index` validates epoch
-    monotonicity, decides compaction, and how `rp_index_latest` takes
-    the window-free single-generation fast path. [] for the plain
-    (epoch-free) layout."""
-    from felixzh_flink_spark.functions.stateio import state_fs
-
-    fs = state_fs(spark, path)
-    pre = "ingest_epoch="
-    return sorted(int(n[len(pre):]) for n in fs.listdir(path)
-                  if n.startswith(pre))
+    listing, never a data scan."""
+    _rp_lifecycle(out_dim, in_dim, id_col, vec_col).write(
+        df.select(id_col, vec_col), path, epoch)
 
 
 def append_rp_index(df: DataFrame, path: str, out_dim: int = 16,
@@ -376,37 +476,26 @@ def append_rp_index(df: DataFrame, path: str, out_dim: int = 16,
     delta, never the corpus.
 
     Two regimes:
-    - new-ids-only (no `epoch` anywhere): plain append; the combined
-      index serves bit-identical to a full rebuild by construction.
-    - upserts (`epoch` on bulk AND every delta, strictly increasing —
-      enforced against the committed directory listing so a replayed
-      or out-of-order epoch fails loudly instead of silently losing to
-      latest-wins): re-embedded ids SUPERSEDE earlier rows via
-      `rp_index_latest`'s latest-epoch-wins read.
+    - new-ids-only (no `epoch`): the rows join the latest generation;
+      the combined index serves bit-identical to a full rebuild by
+      construction.
+    - upserts (`epoch` strictly newer than every committed generation
+      — checked against the directory listing BEFORE the write, so a
+      replayed or out-of-order epoch fails loudly and commits nothing
+      instead of silently losing to latest-wins): re-embedded ids
+      SUPERSEDE earlier rows via `rp_index_latest`'s latest-epoch-wins
+      read.
 
     AUTO-COMPACTION (the round-10 scale finding: an uncompacted index
-    window-shuffles O(index) per serving read, measured 8.8→87.8 MB
-    linear from sf1→sf10): once the append commits, if the live epoch
-    directories reach `compact_after`, `compact_rp_index` folds them
-    into one generation INSIDE the append call — the LSM write-amp ≤
-    index/compact_after trade that keeps serving reads permanently
-    window-free. The threshold check is a directory listing, so a
-    no-op append decision costs zero data IO."""
-    _rp_index_rows(df, out_dim, in_dim, id_col, vec_col, epoch) \
-        .write.mode("append") \
-        .partitionBy(*(["ingest_epoch"] if epoch is not None else [])) \
-        .parquet(path)
-    if epoch is not None:
-        spark = df.sparkSession
-        epochs = _rp_epochs(spark, path)
-        prior = [e for e in epochs if e != int(epoch)]
-        if prior and int(epoch) <= max(prior):
-            raise ValueError(
-                f"append epoch {epoch} is not newer than committed "
-                f"epochs {prior} under {path}; latest-wins would "
-                "silently discard this delta")
-        if len(epochs) >= int(compact_after):
-            compact_rp_index(spark, path, id_col)
+    paid a latest-wins resolution per serving read, measured growing
+    linearly with the index): once the append commits, if the live
+    epoch directories reach `compact_after`, `compact_rp_index` folds
+    them into one generation INSIDE the append call — the LSM
+    write-amp ≤ index/compact_after trade that keeps serving reads
+    join-free. The threshold check is a directory listing, so a no-op
+    append decision costs zero data IO."""
+    _rp_lifecycle(out_dim, in_dim, id_col, vec_col).append(
+        df.select(id_col, vec_col), path, epoch, id_col, compact_after)
 
 
 def delete_from_rp_index(ids_df: DataFrame, path: str, epoch: int,
@@ -415,80 +504,51 @@ def delete_from_rp_index(ids_df: DataFrame, path: str, epoch: int,
     """DELETION tombstones for the incrementally maintained index —
     the op=-D of the batch upsert path (the streaming sink already
     handles it via the changelog machinery): each deleted id appends a
-    row with NULL proj/vec at `epoch`. A real index row can never
-    carry a NULL projection (the JL fold of any vector is non-null),
-    so NULL-proj IS the tombstone marker — no schema change, and the
-    tombstone wins the latest-epoch window then drops out of the
-    served view (`rp_index_latest` filters post-window, so a
-    tombstoned id vanishes from BOTH serving stages). Compaction
-    applies tombstones physically; a later re-insert of the id at a
-    higher epoch resurrects it, exactly upsert semantics. The write
-    scans only the id relation — O(deletes), never O(index); the
-    NULL columns are typed off the committed index schema (a parquet
-    footer read), so mixed-precision vector layouts stay mergeable."""
-    idx_schema = ids_df.sparkSession.read.parquet(path).schema
-    types = {f.name: f.dataType for f in idx_schema.fields}
-    tomb = ids_df.select(
-        F.col(id_col),
-        F.lit(None).cast(types["proj"]).alias("proj"),
-        F.lit(None).cast(types[vec_col]).alias(vec_col),
-        F.lit(int(epoch)).alias("ingest_epoch"))
-    tomb.write.mode("append").partitionBy("ingest_epoch").parquet(path)
+    row with NULL proj/vec at `epoch` (strictly newer, checked before
+    the write). A real index row can never carry a NULL projection (the
+    JL fold of any vector is non-null), so NULL-proj IS the tombstone
+    marker — no schema change: as the newest holder of its id the
+    tombstone kills every earlier version and is itself never served,
+    so the id vanishes from BOTH serving stages. Compaction applies
+    tombstones physically; a later re-insert of the id at a higher
+    epoch resurrects it, exactly upsert semantics. The write scans
+    only the id relation — O(deletes), never O(index); the NULL
+    columns are typed off the committed index schema (a parquet footer
+    read), so mixed-precision vector layouts stay mergeable."""
+    _RP.delete(ids_df, path, epoch, id_col)
 
 
 def rp_index_latest(spark, path: str,
                     id_col: str = "vec_id") -> DataFrame:
-    """Read view of an incrementally maintained rp index. Three
-    shapes, decided by a DIRECTORY LISTING (never a data scan):
+    """Read view of an incrementally maintained rp index: a row is
+    served iff its projection is non-null and no NEWER generation holds
+    its id. Two shapes, decided by a DIRECTORY LISTING (never a data
+    scan):
 
-    - plain (epoch-free) layout: zero-cost passthrough — delta appends
-      of genuinely new ids never need a window;
-    - ONE live epoch generation (a compacted index, or a bulk that
-      never saw an upsert): window-FREE read — drop the partition
-      column and serve; this is the shape `append_rp_index`'s
-      auto-compaction maintains, so steady-state serving never pays a
-      latest-wins shuffle no matter how many upsert batches ran;
+    - ONE live epoch generation (a compacted index, or a bulk plus
+      new-id appends): join-FREE read — drop the partition column and
+      serve; this is the shape `append_rp_index`'s auto-compaction
+      maintains, so steady-state serving never pays a latest-wins
+      resolution no matter how many upsert batches ran;
     - multiple live generations (uncompacted merge-on-read): the
-      latest-epoch-wins resolution is DELTA-PRUNED — the bulk (oldest)
-      generation's rows pass through untouched unless their id appears
-      in a delta (a broadcast anti-join: no shuffle), and only the
-      contested slice (bulk rows superseded or deleted by a delta,
-      plus the deltas themselves) pays the window. Serving an
-      uncompacted index therefore shuffles O(delta), never O(index) —
-      the between-compactions cost is proportional to what changed,
-      bounded by compact_after generations of deltas. (The delta id
-      set is distinct'd and broadcast; deltas between compactions are
-      bounded by compact_after × batch size, the same smallness
-      assumption every merge-on-read table makes.)
+      per-id newest epoch is aggregated over the DELTA generations
+      only (every generation but the oldest, partition-pruned) and
+      BROADCAST onto the index scan — no window and no shuffle of the
+      index, so serving an uncompacted index costs O(delta), never
+      O(index). (Deltas between compactions are bounded by
+      compact_after × batch size, the same smallness assumption every
+      merge-on-read table makes.)
 
-    Tombstones (`delete_from_rp_index`'s NULL-proj rows) are filtered
-    AFTER latest-wins, so a deletion hides every earlier version of
-    its id while a later re-insert resurrects it."""
-    idx = spark.read.parquet(path)
-    if "ingest_epoch" not in idx.columns:
-        return idx
-    alive = F.col("proj").isNotNull()
-    epochs = _rp_epochs(spark, path)
-    if len(epochs) <= 1:
-        return idx.filter(alive).drop("ingest_epoch")
-    bulk = idx.filter(F.col("ingest_epoch") == epochs[0])  # pruned scan
-    deltas = idx.filter(F.col("ingest_epoch") != epochs[0])
-    delta_ids = deltas.select(id_col).distinct()
-    settled = (bulk.join(F.broadcast(delta_ids), id_col, "left_anti")
-               .filter(alive).drop("ingest_epoch"))
-    contested = (bulk.join(F.broadcast(delta_ids), id_col, "left_semi")
-                 .unionByName(deltas))
-    w = Window.partitionBy(id_col).orderBy(F.desc("ingest_epoch"))
-    resolved = (contested.withColumn("_rn", F.row_number().over(w))
-                .filter((F.col("_rn") == 1) & alive)
-                .drop("_rn", "ingest_epoch"))
-    return settled.unionByName(resolved)
+    Tombstones (`delete_from_rp_index`'s NULL-proj rows) are never
+    served yet still hold their id, so a deletion hides every earlier
+    version of its id while a later re-insert resurrects it."""
+    return _RP.alive(spark, path, id_col)
 
 
 def compact_rp_index(spark, path: str, id_col: str = "vec_id") -> None:
     """Compaction: fold an epoch-partitioned index's generations into
     ONE (latest-wins applied, tombstones dropped), restoring the
-    window-free serving scan while KEEPING the epoch layout so later
+    join-free serving scan while KEEPING the epoch layout so later
     appends keep working (the pre-r11 version rewrote to the plain
     layout, which dead-ended the append lifecycle it existed to
     serve). CRASH-SAFE at every step, no manifest needed:
@@ -498,29 +558,18 @@ def compact_rp_index(spark, path: str, id_col: str = "vec_id") -> None:
     2. append it as a FRESH generation `ingest_epoch = max+1` — a
        crash mid-write leaves either invisible staging files
        (`_temporary`, underscore-hidden from reads) or a committed
-       generation whose rows are value-identical duplicates of the
-       latest view, and duplicates are exactly what the latest-wins
-       window dedups, so every intermediate state reads correctly;
-    3. delete the superseded generations — a crash mid-delete leaves
-       a multi-generation layout the merge-on-read path still serves
-       correctly; the next compaction finishes the sweep.
+       generation that is the newest holder of every alive id, which
+       the latest-wins read then serves alone, so every intermediate
+       state reads correctly;
+    3. delete the superseded generations, oldest first — a crash
+       mid-delete leaves a multi-generation layout the merge-on-read
+       path still serves correctly; the next compaction finishes the
+       sweep.
 
     On a real cluster this is the background job an LSM-ish index
     runs between epochs; `append_rp_index(compact_after=)` invokes it
     inline once enough generations accumulate."""
-    from felixzh_flink_spark.functions.stateio import state_fs
-
-    epochs = _rp_epochs(spark, path)
-    if len(epochs) <= 1:
-        return
-    latest = (rp_index_latest(spark, path, id_col)
-              .withColumn("ingest_epoch", F.lit(max(epochs) + 1))
-              .localCheckpoint(eager=True))
-    latest.write.mode("append").partitionBy("ingest_epoch").parquet(path)
-    fs = state_fs(spark, path)
-    for e in epochs:
-        fs.delete(fs.join(path, f"ingest_epoch={e}"))
-
+    _RP.compact(spark, path, id_col)
 
 def rp_rerank_topk_prefiltered(idx: DataFrame, allowed_ids: DataFrame,
                                query_vec: list[float], k: int = 10,
@@ -590,33 +639,14 @@ def rp_index_stream_sink(state_dir: str, out_dim: int = 16,
     re-embeddings, and (via an `op` column carrying -D) deletions all
     maintain the served layout. Storage/merge/commit ride the changelog
     library's crash-atomic bucketed machinery (`changelog_upsert_sink` —
-    a batch rewrites O(touched buckets), not O(index); upsert replays
-    are idempotent, so no epoch guard is needed, unlike the additive
-    BM25-stats sink). Read back with `rp_index_stream_read` and serve
+    a batch rewrites O(touched buckets), not O(index); a replayed
+    `epoch_id` re-merges the same rows at the same epoch, so replays
+    are idempotent and, unlike the additive BM25-stats sink, need no
+    epoch guard). Read back with `rp_index_stream_read` and serve
     with `rp_rerank_topk_from_df` — the parity e2e pins streamed-index
     results ≡ the inline path over the latest corpus."""
-    from felixzh_flink_spark.functions.changelog import (
-        OP_INSERT,
-        changelog_upsert_sink,
-    )
-
-    inner = changelog_upsert_sink(state_dir, pk=[id_col],
-                                  order_col="ingest_epoch",
-                                  n_buckets=n_buckets)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        op = (F.col("op") if "op" in batch_df.columns
-              else F.lit(OP_INSERT))
-        delta = batch_df.select(
-            F.col(id_col),
-            F.expr(random_projection_sql(vec_col, out_dim, in_dim))
-            .alias("proj"),
-            F.col(vec_col),
-            F.lit(int(epoch_id)).alias("ingest_epoch"),
-            op.alias("op"))
-        inner(delta, epoch_id)
-
-    return sink
+    return _rp_lifecycle(out_dim, in_dim, id_col, vec_col).stream_sink(
+        state_dir, id_col, vec_col, n_buckets)
 
 
 def rp_index_stream_read(spark, state_dir: str,
@@ -624,12 +654,10 @@ def rp_index_stream_read(spark, state_dir: str,
                          vec_col: str = "embedding") -> DataFrame:
     """The continuously maintained index in the `write_rp_index` serving
     layout (id, proj, vec) — feed to `rp_rerank_topk_from_df`. Reading
-    the committed manifest state needs no latest-wins window: the sink
-    already merged per id at write time (that cost is paid per
+    the committed manifest state needs no latest-wins resolution: the
+    sink already merged per id at write time (that cost is paid per
     micro-batch over touched buckets, not per query — the streaming
     analog of a compacted index)."""
-    from felixzh_flink_spark.functions.changelog import read_upsert_state
-
     return read_upsert_state(spark, state_dir).select(
         id_col, "proj", vec_col)
 
@@ -1406,21 +1434,30 @@ LEFT JOIN (SELECT id, true AS _dup FROM dup) d ON s.id = d.id
 """, pairable=pairable, assigned=assigned)
 
 
+def _ivf_lifecycle(cents: list[list[float]], vec_col: str,
+                   books: list[list[list[float]]] | None):
+    """The IVF lifecycle, encoding rows → rows + `ivf_cell` (+ `pq_code`
+    with `books`) against the FROZEN codebooks."""
+    def encode(df: DataFrame) -> DataFrame:
+        cells = ivf_assign(df, cents, vec_col)
+        return cells if books is None else pq_encode(cells, books, vec_col)
+
+    return _Lifecycle(encode, "ivf_cell")
+
+
 def write_ivf_index(df: DataFrame, path: str, cents: list[list[float]],
                     vec_col: str = "embedding",
                     books: list[list[list[float]]] | None = None) -> None:
     """Materialize the IVF index: the table written directory-partitioned
-    by nearest-centroid cell. This is the ingest step the probe docstrings
-    promise — after it, `ivf_topk_from_index` probes become partition
-    pruning (only the probed cells' directories are opened), not a filter
-    over a full scan. With `books`, PQ codes are encoded into the layout
-    too (a `pq_code` column) — real IVF-PQ systems store codes in the
-    index, and `semantic_dedup_pq` then skips both assignment and
-    encoding at query time."""
-    assigned = ivf_assign(df, cents, vec_col)
-    if books is not None:
-        assigned = pq_encode(assigned, books, vec_col)
-    assigned.write.mode("overwrite").partitionBy("ivf_cell").parquet(path)
+    by nearest-centroid cell (`path/ingest_epoch=0/ivf_cell=C`, generation
+    0 of the lifecycle `write_rp_index` shares). This is the ingest step
+    the probe docstrings promise — after it, `ivf_topk_from_index` probes
+    become partition pruning (only the probed cells' directories are
+    opened), not a filter over a full scan. With `books`, PQ codes are
+    encoded into the layout too (a `pq_code` column) — real IVF-PQ
+    systems store codes in the index, and `semantic_dedup_pq` then skips
+    both assignment and encoding at query time."""
+    _ivf_lifecycle(cents, vec_col, books).write(df, path, None)
 
 
 def append_ivf_index(df: DataFrame, path: str, cents: list[list[float]],
@@ -1430,19 +1467,16 @@ def append_ivf_index(df: DataFrame, path: str, cents: list[list[float]],
     `append_rp_index`): assign ONLY the delta rows against the
     COMMITTED centroids (the codebook is frozen at bulk-build time —
     exactly how production IVF serves between retrains) and append
-    them into the cell-partitioned layout: each delta row lands as a
-    new file inside its cell's directory, bulk files untouched, so
-    partition-pruned probes keep working unchanged over bulk+delta.
-    With `books`, delta rows are PQ-encoded against the committed
-    codebooks too. Because assignment and encoding are pure functions
-    of (vector, committed codebooks), the appended layout is
+    them into the latest generation's cell directories: each delta row
+    lands as a new file inside its cell's directory, bulk files
+    untouched, so partition-pruned probes keep working unchanged over
+    bulk+delta. With `books`, delta rows are PQ-encoded against the
+    committed codebooks too. Because assignment and encoding are pure
+    functions of (vector, committed codebooks), the appended layout is
     row-for-row identical to what a full rebuild at the same codebooks
     would store — the assertion oracle `ann_ivf_delta_checks` pins
     exactly that equality."""
-    assigned = ivf_assign(df, cents, vec_col)
-    if books is not None:
-        assigned = pq_encode(assigned, books, vec_col)
-    assigned.write.mode("append").partitionBy("ivf_cell").parquet(path)
+    _ivf_lifecycle(cents, vec_col, books).append(df, path, None)
 
 
 def delete_from_ivf_index(ids_df: DataFrame, path: str, epoch: int,
@@ -1451,18 +1485,15 @@ def delete_from_ivf_index(ids_df: DataFrame, path: str, epoch: int,
     `delete_from_rp_index`, solving the problem cell partitioning
     creates: a deleted (or re-embedded) vector lives in SOME cell
     directory, and finding it to rewrite would need an id→cell lookup.
-    Instead each deleted id appends (id, tomb_epoch) to a SIDECAR
-    under `path/_tombstones` (the underscore prefix hides it from the
-    main parquet read, the same convention Spark uses for its own
-    metadata): O(deletes) write, no index data touched, probes stay
-    partition-pruned and apply the tombstone set as a broadcast
-    anti-condition (eval sets of deletions between compactions are
-    small — the same merge-on-read smallness assumption as the rp
-    delta set). A row survives a tombstone iff its ingest epoch is ≥
-    the tombstone's, so an `upsert_ivf_index` re-insert at the same
-    epoch (possibly in a DIFFERENT cell) wins over its own delete."""
-    (ids_df.select(F.col(id_col), F.lit(int(epoch)).alias("tomb_epoch"))
-        .write.mode("append").parquet(path + "/_tombstones"))
+    Instead each deleted id appends a NULL-payload row as generation
+    `epoch` (strictly newer, checked before the write): O(deletes)
+    write, no index data touched. Its NULL cell lands in a directory
+    no probe opens, so probes stay partition-pruned, while the row
+    still holds its id for the latest-wins read rule — every earlier
+    version of the id, in whatever cell, is dead (the per-id newest
+    epoch is broadcast; deletions between compactions are small, the
+    same merge-on-read smallness assumption as the rp delta set)."""
+    _IVF.delete(ids_df, path, epoch, id_col)
 
 
 def upsert_ivf_index(df: DataFrame, path: str, cents: list[list[float]],
@@ -1471,68 +1502,33 @@ def upsert_ivf_index(df: DataFrame, path: str, cents: list[list[float]],
                      books: list[list[list[float]]] | None = None) -> None:
     """RE-EMBEDDING upserts for the cell-partitioned IVF index: the new
     vector may belong to a DIFFERENT cell than the row it supersedes,
-    so an in-place latest-wins (the rp index's discipline) cannot work
-    per cell directory. The standard LSM move instead: tombstone the
-    ids at `epoch` (sidecar — no cell lookup needed), then assign the
-    NEW vectors against the committed centroids and append them
-    carrying `ingest_epoch = epoch` into their (possibly new) cells.
-    The survive-iff-epoch-≥-tombstone rule makes the pair atomic in
-    effect: the old row dies, the new one lives, wherever each sits.
-    Scans only the delta; bulk files immutable."""
-    delete_from_ivf_index(df.select(id_col), path, epoch, id_col)
-    assigned = ivf_assign(df, cents, vec_col)
-    if books is not None:
-        assigned = pq_encode(assigned, books, vec_col)
-    assigned.withColumn("ingest_epoch", F.lit(int(epoch))) \
-        .write.mode("append").partitionBy("ivf_cell").parquet(path)
-
-
-def _ivf_apply_tombstones(spark, path: str, rows: DataFrame,
-                          id_col: str) -> DataFrame:
-    """Filter an IVF index relation to its ALIVE rows: anti-join the
-    (broadcast) per-id max tombstone epoch, keeping rows whose ingest
-    epoch (0 for pre-upsert bulk rows) is ≥ it. Zero cost when the
-    sidecar doesn't exist — the check is a directory listing."""
-    from felixzh_flink_spark.functions.stateio import state_fs
-
-    fs = state_fs(spark, path)
-    if not fs.exists(fs.join(path, "_tombstones")):
-        return rows
-    tomb = (spark.read.parquet(path + "/_tombstones")
-            .groupBy(id_col).agg(F.max("tomb_epoch").alias("_te")))
-    re = (F.coalesce(F.col("ingest_epoch"), F.lit(0))
-          if "ingest_epoch" in rows.columns else F.lit(0))
-    return (rows.withColumn("_re", re.cast("long"))
-            .join(F.broadcast(tomb), id_col, "left")
-            .filter(F.col("_te").isNull() | (F.col("_re") >= F.col("_te")))
-            .drop("_te", "_re"))
+    so no per-cell-directory rewrite can replace it. The standard LSM
+    move instead: assign the NEW vectors against the committed
+    centroids and append them as generation `epoch` (strictly newer,
+    checked before the write) into their (possibly new) cells.
+    Latest-epoch-wins makes it atomic in effect: the old row dies
+    because a newer generation holds its id, the new one lives,
+    wherever each sits. Scans only the delta; bulk files immutable."""
+    _ivf_lifecycle(cents, vec_col, books).append(df, path, epoch, id_col)
 
 
 def compact_ivf_index(spark, path: str, id_col: str = "vec_id") -> None:
-    """Apply the tombstone sidecar physically: rewrite the cell layout
-    to alive rows only (epoch column dropped — the survivors are the
-    resolved state) and clear the sidecar, restoring the plain
-    tombstone-free probe path. Tombstone application is IDEMPOTENT, so
-    a crash after the rewrite but before the sidecar delete re-applies
-    a no-op on the next read/compaction; the rewrite itself stands in
-    for the transactional OPTIMIZE/MERGE a lakehouse table format
-    provides at production (the same note as the changelog sink —
-    serving correctness never depends on compaction, which is why the
-    read-path tombstone filter stays correct forever)."""
-    from felixzh_flink_spark.functions.stateio import state_fs
-
-    alive = ivf_read_alive(spark, path, id_col).drop("ingest_epoch") \
-        .localCheckpoint(eager=True)
-    alive.write.mode("overwrite").partitionBy("ivf_cell").parquet(path)
-    fs = state_fs(spark, path)
-    fs.delete(fs.join(path, "_tombstones"))
+    """Apply upserts and tombstones physically with `compact_rp_index`'s
+    crash-safe protocol: the alive rows become ONE fresh generation
+    `ingest_epoch = max+1` (cell layout kept), then the superseded
+    generations are deleted oldest first, restoring the join-free probe
+    path. The index path is never overwritten, so a crash at any step
+    leaves a layout the latest-wins read serves exactly (a fold
+    generation holding every alive id, or a partial sweep), and the
+    next compaction finishes the job — serving correctness never
+    depends on compaction, the same note as the changelog sink."""
+    _IVF.compact(spark, path, id_col)
 
 
 def ivf_read_alive(spark, path: str, id_col: str = "vec_id") -> DataFrame:
-    """The materialized IVF index's ALIVE rows (tombstones applied;
-    mergeSchema because pre-upsert bulk files lack `ingest_epoch`)."""
-    rows = spark.read.option("mergeSchema", "true").parquet(path)
-    return _ivf_apply_tombstones(spark, path, rows, id_col)
+    """The materialized IVF index's ALIVE rows (latest-wins read rule
+    applied, generation column dropped)."""
+    return _IVF.alive(spark, path, id_col)
 
 
 def ivf_topk_from_index(spark, path: str, cents: list[list[float]],
@@ -1541,16 +1537,14 @@ def ivf_topk_from_index(spark, path: str, cents: list[list[float]],
                         vec_col: str = "embedding") -> DataFrame:
     """IVF top-k against a materialized index: the `ivf_cell IN (probes)`
     predicate is a PARTITION filter on the index layout (plan-asserted in
-    tests), so non-probed cells are never read. Deletion tombstones
-    (`delete_from_ivf_index` / `upsert_ivf_index`), when present, are
-    applied AFTER the cell filter as a broadcast anti-condition — the
-    probe reads the same pruned directories either way, and the check
-    for the sidecar is a filesystem listing (zero cost on
-    tombstone-free indexes)."""
+    tests), so non-probed cells are never read. Upserts and deletion
+    tombstones (`upsert_ivf_index` / `delete_from_ivf_index`), when
+    present, resolve through the latest-wins read rule as a broadcast
+    per-id newest-epoch table — the probe reads the same pruned
+    directories either way, and the single-generation check is a
+    filesystem listing (zero cost on compacted indexes)."""
     probe = _probe_cells(cents, query_vec, n_probe)
-    cand = (spark.read.option("mergeSchema", "true").parquet(path)
-            .filter(F.col("ivf_cell").isin(probe)))
-    cand = _ivf_apply_tombstones(spark, path, cand, id_col)
+    cand = _IVF.alive(spark, path, id_col, F.col("ivf_cell").isin(probe))
     scored = cand.select(
         F.col(id_col).alias("id"),
         cosine_to_literal(vec_col, query_vec).alias("cosine_sim"),
@@ -1581,55 +1575,33 @@ def ivf_index_stream_sink(state_dir: str, cents: list[list[float]],
                           n_buckets: int = 8,
                           books: list[list[list[float]]] | None = None):
     """foreachBatch writer maintaining the IVF index CONTINUOUSLY — the
-    cell-partitioned twin of `rp_index_stream_sink`, completing the
-    {rp, ivf} × {batch, stream} maintenance matrix: each micro-batch is
-    assigned against the FROZEN centroids (only the batch is scanned;
-    centroids are the ingest artifact every real IVF deployment pins
-    between retrainings) and MERGED into the bucketed state keyed on
-    id, latest micro-batch wins per id. Because the state is keyed by
-    id — not laid out by cell — a re-embedding that MOVES CELLS is just
-    an ordinary upsert (the replaced row carries the new cell), and
-    op=-D deletions drop the row: the streaming path never needs the
-    batch layout's tombstone sidecar. Storage/merge/commit ride the
-    changelog library's crash-atomic bucketed machinery
-    (`changelog_upsert_sink` — O(touched buckets) per batch, idempotent
-    replays). Serve with `ivf_topk_from_df` over
-    `ivf_index_stream_read`; `materialize_ivf_index` hands the state
-    back to the partition-pruned batch layout."""
-    from felixzh_flink_spark.functions.changelog import (
-        OP_INSERT,
-        changelog_upsert_sink,
-    )
-
-    inner = changelog_upsert_sink(state_dir, pk=[id_col],
-                                  order_col="ingest_epoch",
-                                  n_buckets=n_buckets)
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        op = (F.col("op") if "op" in batch_df.columns
-              else F.lit(OP_INSERT))
-        assigned = ivf_assign(
-            batch_df.select(F.col(id_col), F.col(vec_col),
-                            op.alias("op")),
-            cents, vec_col)
-        if books is not None:
-            assigned = pq_encode(assigned, books, vec_col)
-        inner(assigned.withColumn("ingest_epoch", F.lit(int(epoch_id))),
-              epoch_id)
-
-    return sink
+    cell-partitioned twin of `rp_index_stream_sink` (the same sink with
+    the cell encoder), completing the {rp, ivf} × {batch, stream}
+    maintenance matrix: each micro-batch is assigned against the FROZEN
+    centroids (only the batch is scanned; centroids are the ingest
+    artifact every real IVF deployment pins between retrainings) and
+    MERGED into the bucketed state keyed on id, latest micro-batch wins
+    per id. Because the state is keyed by id — not laid out by cell — a
+    re-embedding that MOVES CELLS is just an ordinary upsert (the
+    replaced row carries the new cell), and op=-D deletions drop the
+    row. Storage/merge/commit ride the changelog library's
+    crash-atomic bucketed machinery (`changelog_upsert_sink` —
+    O(touched buckets) per batch, idempotent replays). Serve with
+    `ivf_topk_from_df` over `ivf_index_stream_read`;
+    `materialize_ivf_index` hands the state back to the
+    partition-pruned batch layout."""
+    return _ivf_lifecycle(cents, vec_col, books).stream_sink(
+        state_dir, id_col, vec_col, n_buckets)
 
 
 def ivf_index_stream_read(spark, state_dir: str,
                           id_col: str = "vec_id",
                           vec_col: str = "embedding") -> DataFrame:
     """The continuously maintained IVF state as an (id, ivf_cell, vec)
-    relation — feed to `ivf_topk_from_df`. No latest-wins window and no
-    tombstone filter: the sink merged per id at write time (per
+    relation — feed to `ivf_topk_from_df`. No latest-wins resolution
+    and no tombstone filter: the sink merged per id at write time (per
     micro-batch over touched buckets), so the committed state IS the
     resolved index."""
-    from felixzh_flink_spark.functions.changelog import read_upsert_state
-
     return read_upsert_state(spark, state_dir).select(
         id_col, "ivf_cell", vec_col)
 
@@ -1638,15 +1610,16 @@ def materialize_ivf_index(spark, state_dir: str, path: str,
                           id_col: str = "vec_id",
                           vec_col: str = "embedding") -> None:
     """Flush the streaming-maintained state into the cell-PARTITIONED
-    batch layout (`write_ivf_index`'s): the stream→batch handoff. The
-    streaming state is bucketed by pk hash (the crash-atomic merge
-    needs that layout), so its probes FILTER the state scan rather than
-    prune directories; a periodic materialize restores the
-    partition-pruned scan shape `ivf_topk_from_index` serves — the
-    background job that, on a real cluster, turns the live ingest tail
-    into the cold probe-optimal layout."""
-    idx = ivf_index_stream_read(spark, state_dir, id_col, vec_col)
-    idx.write.mode("overwrite").partitionBy("ivf_cell").parquet(path)
+    batch layout (`write_ivf_index`'s, as generation 0): the
+    stream→batch handoff. The streaming state is bucketed by pk hash
+    (the crash-atomic merge needs that layout), so its probes FILTER
+    the state scan rather than prune directories; a periodic
+    materialize restores the partition-pruned scan shape
+    `ivf_topk_from_index` serves — the background job that, on a real
+    cluster, turns the live ingest tail into the cold probe-optimal
+    layout."""
+    _IVF.write(ivf_index_stream_read(spark, state_dir, id_col, vec_col),
+               path, None)
 
 
 def cosine_topk_multi(df: DataFrame, queries: dict[int, list[float]],

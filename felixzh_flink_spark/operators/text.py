@@ -326,10 +326,11 @@ def append_tfidf_stats(delta_df: DataFrame, path: str,
     with `write_tfidf_stats` (df stats are corpus-global aggregates;
     there is no per-doc slice to tombstone).
 
-    Crash-safe generation commit (the `compact_rp_index` discipline):
-    the merged stats land COMPLETE in a fresh `gen=<n+1>` directory
-    (df + meta), then the `_CURRENT` pointer flips atomically
-    (`replace_text` — tmp file + overwrite-rename); readers
+    Crash-safe generation commit (the discipline of the maintained
+    indexes' `compact_rp_index`/`compact_ivf_index`: a fresh generation
+    first, the sweep after): the merged stats land COMPLETE in a fresh
+    `gen=<n+1>` directory (df + meta), then the `_CURRENT` pointer
+    flips atomically (`replace_text` — tmp file + overwrite-rename); readers
     (`tf_idf_top_terms_cached` via `_tfidf_stats_base`) resolve the
     pointer, so a crash at ANY step serves either the old complete
     generation or the new complete one — never a torn df/meta pair.

@@ -4263,17 +4263,17 @@ def rp_rerank_upsert_indexed(spark, sf_dir):
     `compact_after=2` threshold AUTO-COMPACTS the two generations into
     one inside the commit (`similarity.compact_rp_index`, the
     crash-safe fold — the round-10 verdict's top ask: serving an
-    uncompacted index paid a latest-wins window that shuffled O(index)
-    per read, measured 8.8→87.8 MB linear sf1→sf10). Serving
+    uncompacted index paid a latest-wins resolution per read, measured
+    8.8→87.8 MB of shuffle linear sf1→sf10). Serving
     (`rp_index_latest`) detects the single generation from a DIRECTORY
-    LISTING and reads window-free — the same narrow-scan plan as the
+    LISTING and reads join-free — the same narrow-scan plan as the
     bulk index, KB-grade shuffle at any corpus size. HARD oracle: the
     full-corpus two-stage replay over the TRUE vectors — a superseded
     row leaking through compaction into stage 1's candidate ranking or
     stage 2's re-score fails the hash (the stale vectors are reversed
     precisely so leakage is detectable, not cosine-invariant), so this
     row proves upsert + auto-compaction END-TO-END; the uncompacted
-    merge-on-read window is driver-proven by
+    merge-on-read path is driver-proven by
     `rp_rerank_tombstone_indexed` and unit-pinned equivalent."""
     idx = SIM.rp_index_latest(spark, _rp_upsert_index_path(spark, sf_dir))
     return SIM.rp_rerank_topk_from_df(
@@ -4284,8 +4284,8 @@ def rp_rerank_upsert_indexed(spark, sf_dir):
 #: per-sf_dir path of a TOMBSTONE-carrying rp index: epoch-0 bulk over
 #: the FULL corpus, epoch-1 deletion tombstones for every id ≡ 5
 #: (mod 11) — left UNCOMPACTED (two live generations) so serving
-#: exercises the merge-on-read latest-wins window + post-window
-#: tombstone drop.
+#: exercises the merge-on-read latest-wins read: the broadcast per-id
+#: newest-epoch join and the NULL-proj tombstone drop.
 _RP_TOMBSTONE_INDEX_PATH: dict[str, str] = {}
 
 
@@ -4311,9 +4311,11 @@ def rp_rerank_tombstone_indexed(spark, sf_dir):
     schema change, O(deletes) write) for every id ≡ 5 (mod 11), ~9% of
     the corpus including ids the full-corpus query would serve in its
     top-10. Serving reads the UNCOMPACTED two-generation layout, so
-    this row drives the merge-on-read path end-to-end: latest-wins
-    window (the tombstone outranks the bulk row), then the post-window
-    alive filter drops the id from BOTH retrieval stages. HARD oracle:
+    this row drives the merge-on-read path end-to-end: the tombstone is
+    the newest holder of its id (a broadcast per-id newest-epoch join,
+    no window), so the bulk row dies, and the NULL-proj tombstone
+    itself is never served — the id leaves BOTH retrieval stages. HARD
+    oracle:
     the two-stage replay with the deletion predicate injected into the
     candidate CTE — a tombstone leaking into stage 1's candidate set
     (e.g. filtering only at the final ranking) returns different
@@ -4850,9 +4852,9 @@ def ann_ivf_delta_checks(spark, sf_dir):
 
 #: per-sf_dir path of an UPSERT+DELETE-maintained IVF index: the bulk
 #: holds deliberately STALE (reversed) vectors for ids ≡ 3 (mod 7);
-#: epoch 1 upserts their true re-embeddings (tombstone + append — the
+#: epoch 1 upserts their true re-embeddings (a newer generation — the
 #: new vector may land in a DIFFERENT cell); epoch 2 deletes every id
-#: ≡ 5 (mod 11). Served through the tombstone-aware probe.
+#: ≡ 5 (mod 11). Served through the latest-wins probe.
 _IVF_TOMB_INDEX_PATH: dict[str, str] = {}
 
 
@@ -4885,20 +4887,22 @@ def ann_ivf_tombstone_checks(spark, sf_dir):
     (`similarity.upsert_ivf_index` / `delete_from_ivf_index` — the IVF
     face of the r11 rp tombstone work, solving the problem cell
     partitioning creates: a superseded vector lives in SOME cell and
-    may move cells on re-embedding, so maintenance uses a tombstone
-    SIDECAR + epoch rule instead of per-cell latest-wins). The fixture
-    plants all three lifecycles: stale reversed bulk vectors for ids ≡
-    3 (mod 7) upserted at epoch 1 (tombstone + append, cells can
-    move), ids ≡ 5 (mod 11) deleted at epoch 2, everything else
-    untouched bulk. Asserted against a FULL REBUILD at the same
-    centroids over (corpus minus deleted, true vectors):
+    may move cells on re-embedding, so maintenance uses the rp index's
+    index-wide latest-epoch-wins rule — a row dies once a NEWER
+    generation holds its id, in whatever cell — instead of per-cell
+    latest-wins). The fixture plants all three lifecycles: stale
+    reversed bulk vectors for ids ≡ 3 (mod 7) upserted at epoch 1
+    (cells can move), ids ≡ 5 (mod 11) deleted at epoch 2 (NULL-payload
+    rows), everything else untouched bulk. Asserted against a FULL
+    REBUILD at the same centroids over (corpus minus deleted, true
+    vectors):
 
-    - k_rows_ok: the tombstone-aware probe returns exactly k rows.
+    - k_rows_ok: the latest-wins probe returns exactly k rows.
     - alive_matches_rebuild: the alive (vec_id, ivf_cell) row multiset
       equals the rebuild's — every stale row is dead, every upserted
       row lives in its NEW cell, every deleted id is gone, nothing
       else moved.
-    - probe_matches_rebuild: the partition-pruned tombstone-aware
+    - probe_matches_rebuild: the partition-pruned latest-wins
       top-k is row-for-row the rebuild's (exact sims included) — a
       leaked stale vector, resurrected deletion, or lost upsert
       changes the rows.
@@ -4906,7 +4910,8 @@ def ann_ivf_tombstone_checks(spark, sf_dir):
     DuckDB oracle is the constant-true row (IVF is approximate by
     construction; the hard deletion oracle rides the rp path,
     `rp_rerank_tombstone_indexed`). Compaction (physical tombstone
-    application, probe unchanged) is unit-pinned."""
+    application, probe unchanged, crash states included) is
+    unit-pinned."""
     cents = _ivf_index(spark, sf_dir, 16)
     path = _ivf_tomb_index_path(spark, sf_dir)
     qv = _query_vec(spark, sf_dir)

@@ -253,6 +253,70 @@ def test_rp_index_stage1_scan_is_narrow(spark):
     assert "BroadcastHashJoin" in p and "LeftSemi" in p
 
 
+def test_uncompacted_ivf_probe_keeps_cell_partition_filter(spark, tmp_path):
+    """Over an UNCOMPACTED IVF index (bulk + cross-cell upsert +
+    delete) the probe's index scan still prunes on ivf_cell: the
+    latest-wins read rule joins a broadcast newest-epoch table onto the
+    probed scan and never widens it."""
+    from pyspark.sql import functions as F
+
+    from felixzh_flink_spark.operators import similarity as SIM
+    e = spark.read.parquet(f"{SF}/embeddings.parquet")
+    cents = SIM.ivf_centroids(e, 16)
+    stale = e.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") % 7 == 3, F.reverse("embedding"))
+        .otherwise(F.col("embedding")))
+    path = str(tmp_path / "ivf")
+    SIM.write_ivf_index(stale, path, cents)
+    SIM.upsert_ivf_index(e.filter(F.col("vec_id") % 7 == 3), path, cents,
+                         epoch=1)
+    SIM.delete_from_ivf_index(
+        e.filter(F.col("vec_id") % 11 == 5).select("vec_id"), path, epoch=2)
+    qv = [float(x)
+          for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
+    p = (SIM.ivf_topk_from_index(spark, path, cents, qv, k=10, n_probe=4)
+         ._jdf.queryExecution().executedPlan().toString())
+    probes = [ln for ln in p.split("\n") if "FileScan" in ln
+              and "embedding" in ln.split("ReadSchema:")[1]]
+    assert probes, p
+    for ln in probes:
+        assert "ivf_cell" in ln.split("PartitionFilters: [")[1].split("]")[0]
+    assert "BroadcastHashJoin" in p
+
+
+def test_latest_reads_plan_no_window(spark, tmp_path):
+    """The one latest-wins read rule (`rp_index_latest`,
+    `ivf_read_alive`) plans no Window: a single generation is a plain
+    filtered scan, several add one broadcast join against the per-id
+    newest epoch."""
+    from pyspark.sql import functions as F
+
+    from felixzh_flink_spark.operators import similarity as SIM
+    e = spark.read.parquet(f"{SF}/embeddings.parquet")
+    cents = SIM.ivf_centroids(e, 16)
+    rp, ivf = str(tmp_path / "rp"), str(tmp_path / "ivf")
+    SIM.write_rp_index(e, rp, epoch=0)
+    SIM.write_ivf_index(e, ivf, cents)
+
+    def plans():
+        return [df._jdf.queryExecution().executedPlan().toString()
+                for df in (SIM.rp_index_latest(spark, rp),
+                           SIM.ivf_read_alive(spark, ivf))]
+
+    one = plans()
+    changed = e.filter(F.col("vec_id") % 7 == 3)
+    SIM.append_rp_index(changed, rp, epoch=1)
+    SIM.delete_from_rp_index(changed.select("vec_id"), rp, epoch=2)
+    SIM.upsert_ivf_index(changed, ivf, cents, epoch=1)
+    SIM.delete_from_ivf_index(changed.select("vec_id"), ivf, epoch=2)
+    several = plans()
+    for p in one + several:
+        assert "Window" not in p, p
+    assert not any("Join" in p for p in one)
+    assert all("BroadcastHashJoin" in p for p in several)
+
+
 def test_time_partitioned_scan_prunes_directories(spark, tmp_path, sf_dir):
     """Directory partitioning by day: a one-day predicate reaches the scan
     as a PartitionFilter and only that day's files are read — the scan-side

@@ -263,7 +263,7 @@ def test_compact_rp_index_folds_to_one_generation(spark, tmp_path):
     because the epoch layout survives — a LATER append keeps working
     and serves correctly."""
     from felixzh_flink_spark.operators.similarity import (
-        _rp_epochs,
+        _index_epochs,
         append_rp_index,
         compact_rp_index,
         rp_index_latest,
@@ -284,7 +284,7 @@ def test_compact_rp_index_folds_to_one_generation(spark, tmp_path):
     n_ids = e.count()
     assert spark.read.parquet(path).count() > n_ids
     compact_rp_index(spark, path)
-    assert _rp_epochs(spark, path) == [2]
+    assert _index_epochs(spark, path) == [2]
     assert spark.read.parquet(path).count() == n_ids
     latest = rp_index_latest(spark, path)
     assert "Window" not in latest._jdf.queryExecution().toString()
@@ -313,7 +313,7 @@ def test_append_rp_index_auto_compacts_and_validates_epochs(spark,
     import pytest
 
     from felixzh_flink_spark.operators.similarity import (
-        _rp_epochs,
+        _index_epochs,
         append_rp_index,
         rp_index_latest,
         rp_rerank_topk_from_df,
@@ -330,10 +330,10 @@ def test_append_rp_index_auto_compacts_and_validates_epochs(spark,
     write_rp_index(stale, path, OUT, IN, epoch=0)
     append_rp_index(e.filter(F.col("vec_id") % 7 == 0), path, OUT, IN,
                     epoch=1, compact_after=3)
-    assert len(_rp_epochs(spark, path)) == 2      # below threshold
+    assert len(_index_epochs(spark, path)) == 2      # below threshold
     append_rp_index(e.filter(F.col("vec_id") % 7 == 1), path, OUT, IN,
                     epoch=2, compact_after=3)
-    assert len(_rp_epochs(spark, path)) == 1      # append compacted
+    assert len(_index_epochs(spark, path)) == 1      # append compacted
     assert spark.read.parquet(path).count() == e.count()
     inline = [(r.id, r.cosine_sim)
               for r in rp_rerank_topk(e, q, k=10, prek=50).collect()]
@@ -407,7 +407,7 @@ def test_compact_rp_index_crash_windows_read_correctly(spark, tmp_path):
     single-generation layout."""
     from felixzh_flink_spark.functions.stateio import state_fs
     from felixzh_flink_spark.operators.similarity import (
-        _rp_epochs,
+        _index_epochs,
         append_rp_index,
         compact_rp_index,
         rp_index_latest,
@@ -440,18 +440,58 @@ def test_compact_rp_index_crash_windows_read_correctly(spark, tmp_path):
               .withColumn("ingest_epoch", F.lit(2))
               .localCheckpoint(eager=True))
     latest.write.mode("append").partitionBy("ingest_epoch").parquet(path)
-    assert _rp_epochs(spark, path) == [0, 1, 2]
+    assert _index_epochs(spark, path) == [0, 1, 2]
     assert serve(path) == inline
     # crash state (b): one superseded generation swept, one left
     fs = state_fs(spark, path)
     fs.delete(fs.join(path, "ingest_epoch=0"))
-    assert _rp_epochs(spark, path) == [1, 2]
+    assert _index_epochs(spark, path) == [1, 2]
     assert serve(path) == inline
     # recovery: the next compaction converges to one generation
     compact_rp_index(spark, path)
-    assert len(_rp_epochs(spark, path)) == 1
+    assert len(_index_epochs(spark, path)) == 1
     assert spark.read.parquet(path).count() == e.count()
     assert serve(path) == inline
+
+
+def test_rejected_write_commits_nothing(spark, tmp_path):
+    """A write whose epoch is not newer than every committed generation
+    is rejected BEFORE anything is written: after a delete (epoch 5)
+    and a compaction (generation 6), re-inserting the deleted id at
+    epoch 4 raises, leaves the listing at [6] and keeps the id out of
+    the served view; a stale delete is rejected the same way."""
+    import os
+
+    from felixzh_flink_spark.operators.similarity import (
+        append_rp_index,
+        compact_rp_index,
+        delete_from_rp_index,
+        rp_index_latest,
+        write_rp_index,
+    )
+
+    def listing(p):
+        return sorted(int(n.split("=")[1]) for n in os.listdir(p)
+                      if n.startswith("ingest_epoch="))
+
+    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    one = e.filter(F.col("vec_id") == 1)
+    path = str(tmp_path / "rp_reject")
+    write_rp_index(e, path, OUT, IN, epoch=0)
+    delete_from_rp_index(one.select("vec_id"), path, epoch=5)
+    compact_rp_index(spark, path)
+    assert listing(path) == [6]
+    with pytest.raises(ValueError, match="not newer"):
+        append_rp_index(one, path, OUT, IN, epoch=4)
+    assert listing(path) == [6]
+    served = rp_index_latest(spark, path)
+    assert served.filter(F.col("vec_id") == 1).count() == 0
+    assert served.count() == e.count() - 1
+    with pytest.raises(ValueError, match="not newer"):
+        delete_from_rp_index(e.filter(F.col("vec_id") == 2)
+                             .select("vec_id"), path, epoch=6)
+    assert listing(path) == [6]
+    assert rp_index_latest(spark, path).count() == e.count() - 1
 
 
 def test_append_ivf_index_matches_full_rebuild(spark, tmp_path):
@@ -493,10 +533,10 @@ def test_append_ivf_index_matches_full_rebuild(spark, tmp_path):
 def test_ivf_tombstones_upserts_and_compaction(spark, tmp_path):
     """IVF deletion/upsert lifecycle: a stale bulk vector is superseded
     by an upsert whose re-embedding lands in a DIFFERENT cell (the
-    case per-cell latest-wins cannot handle — the tombstone sidecar +
-    epoch rule can), a deleted id vanishes from the probe, compaction
-    applies tombstones physically with the probe unchanged, and a
-    re-insert after deletion resurrects."""
+    case per-cell latest-wins cannot handle — the index-wide
+    latest-epoch-wins rule can), a deleted id vanishes from the probe,
+    compaction applies tombstones physically with the probe unchanged,
+    and a re-insert after deletion resurrects."""
     from felixzh_flink_spark.operators.similarity import (
         compact_ivf_index,
         delete_from_ivf_index,
@@ -556,9 +596,145 @@ def test_ivf_tombstones_upserts_and_compaction(spark, tmp_path):
     assert probe(path) == inline(kept)
     # resurrection: re-insert the deleted ids at a higher epoch
     upsert_ivf_index(e.filter(F.col("vec_id").isin(top_ids)), path,
-                     cents, epoch=3)
+                     cents, epoch=4)
     assert probe(path) == inline(e)
     assert ivf_read_alive(spark, path).count() == e.count()
+
+
+def test_compact_ivf_index_crash_windows_read_correctly(spark, tmp_path):
+    """IVF twin of the rp crash test: compaction never overwrites the
+    index path, so both states a crash can leave behind — (a) the fold
+    generation committed with nothing swept, (b) the oldest generation
+    swept — probe exactly like inline `ivf_topk` over the live corpus,
+    and a re-run of compaction converges to one generation. The
+    fixture holds a cross-cell upsert and a delete."""
+    from felixzh_flink_spark.functions.stateio import state_fs
+    from felixzh_flink_spark.operators.similarity import (
+        _index_epochs,
+        compact_ivf_index,
+        delete_from_ivf_index,
+        ivf_assign,
+        ivf_centroids,
+        ivf_read_alive,
+        ivf_topk,
+        ivf_topk_from_index,
+        upsert_ivf_index,
+        write_ivf_index,
+    )
+    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    q = [float(x) for x in
+         e.filter(F.col("vec_id") == 0).head()["embedding"]]
+    cents = ivf_centroids(e, 16)
+
+    def probe(p):
+        return [(r.id, r.cosine_sim)
+                for r in ivf_topk_from_index(spark, p, cents, q, k=10,
+                                             n_probe=4).collect()]
+
+    def inline(df):
+        return [(r.id, r.cosine_sim)
+                for r in ivf_topk(df, q, k=10, n_centroids=16,
+                                  n_probe=4, cents=cents).collect()]
+
+    stale = e.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") % 7 == 3, F.reverse("embedding"))
+        .otherwise(F.col("embedding")))
+    fixed = e.filter(F.col("vec_id") % 7 == 3)
+    old = {r.vec_id: r.ivf_cell for r in
+           ivf_assign(stale.filter(F.col("vec_id") % 7 == 3),
+                      cents).collect()}
+    new = {r.vec_id: r.ivf_cell for r in ivf_assign(fixed, cents).collect()}
+    assert any(old[i] != new[i] for i in old), "needs a cross-cell upsert"
+    path = str(tmp_path / "ivf_crash")
+    write_ivf_index(stale, path, cents)
+    upsert_ivf_index(fixed, path, cents, epoch=1)
+    top_ids = [i for i, _ in inline(e)[:3]]
+    delete_from_ivf_index(
+        e.filter(F.col("vec_id").isin(top_ids)).select("vec_id"),
+        path, epoch=2)
+    kept = e.filter(~F.col("vec_id").isin(top_ids))
+    want = inline(kept)
+    assert probe(path) == want
+    # crash state (a): fold generation committed, nothing swept —
+    # step 2 of the protocol by hand
+    fold = (ivf_read_alive(spark, path)
+            .withColumn("ingest_epoch", F.lit(3))
+            .localCheckpoint(eager=True))
+    fold.write.mode("append").partitionBy("ingest_epoch", "ivf_cell") \
+        .parquet(path)
+    assert _index_epochs(spark, path) == [0, 1, 2, 3]
+    assert probe(path) == want
+    # crash state (b): the oldest generation swept, the rest left
+    fs = state_fs(spark, path)
+    fs.delete(fs.join(path, "ingest_epoch=0"))
+    assert _index_epochs(spark, path) == [1, 2, 3]
+    assert probe(path) == want
+    # recovery: the next compaction converges to one generation
+    compact_ivf_index(spark, path)
+    assert _index_epochs(spark, path) == [4]
+    assert spark.read.parquet(path).count() == kept.count()
+    assert probe(path) == want
+
+
+#: parameter names and defaults of the public maintained-index API, as
+#: a literal table (a bare name has no default)
+_LIFECYCLE_API = {
+    "write_rp_index": ["df", "path", ("out_dim", 16), ("in_dim", 64),
+                       ("id_col", "vec_id"), ("vec_col", "embedding"),
+                       ("epoch", None)],
+    "append_rp_index": ["df", "path", ("out_dim", 16), ("in_dim", 64),
+                        ("id_col", "vec_id"), ("vec_col", "embedding"),
+                        ("epoch", None), ("compact_after", 4)],
+    "delete_from_rp_index": ["ids_df", "path", "epoch",
+                             ("id_col", "vec_id"),
+                             ("vec_col", "embedding")],
+    "compact_rp_index": ["spark", "path", ("id_col", "vec_id")],
+    "rp_index_latest": ["spark", "path", ("id_col", "vec_id")],
+    "rp_index_stream_sink": ["state_dir", ("out_dim", 16), ("in_dim", 64),
+                             ("id_col", "vec_id"), ("vec_col", "embedding"),
+                             ("n_buckets", 8)],
+    "rp_index_stream_read": ["spark", "state_dir", ("id_col", "vec_id"),
+                             ("vec_col", "embedding")],
+    "write_ivf_index": ["df", "path", "cents", ("vec_col", "embedding"),
+                        ("books", None)],
+    "append_ivf_index": ["df", "path", "cents", ("vec_col", "embedding"),
+                         ("books", None)],
+    "upsert_ivf_index": ["df", "path", "cents", "epoch",
+                         ("vec_col", "embedding"), ("id_col", "vec_id"),
+                         ("books", None)],
+    "delete_from_ivf_index": ["ids_df", "path", "epoch",
+                              ("id_col", "vec_id")],
+    "compact_ivf_index": ["spark", "path", ("id_col", "vec_id")],
+    "ivf_read_alive": ["spark", "path", ("id_col", "vec_id")],
+    "ivf_topk_from_index": ["spark", "path", "cents", "query_vec",
+                            ("k", 10), ("n_probe", 4), ("id_col", "vec_id"),
+                            ("vec_col", "embedding")],
+    "ivf_index_stream_sink": ["state_dir", "cents", ("id_col", "vec_id"),
+                              ("vec_col", "embedding"), ("n_buckets", 8),
+                              ("books", None)],
+    "ivf_index_stream_read": ["spark", "state_dir", ("id_col", "vec_id"),
+                              ("vec_col", "embedding")],
+    "materialize_ivf_index": ["spark", "state_dir", "path",
+                              ("id_col", "vec_id"),
+                              ("vec_col", "embedding")],
+}
+
+
+def test_lifecycle_public_api_is_pinned():
+    """The 17 public maintained-index names keep their parameter names,
+    order and defaults: refactors behind them may add no option."""
+    import inspect
+
+    from felixzh_flink_spark.operators import similarity
+
+    def shape(fn):
+        return [p.name if p.default is inspect.Parameter.empty
+                else (p.name, p.default)
+                for p in inspect.signature(fn).parameters.values()]
+
+    got = {n: shape(getattr(similarity, n)) for n in _LIFECYCLE_API}
+    assert got == _LIFECYCLE_API
 
 
 def test_rrf_fuse_semantics(spark):

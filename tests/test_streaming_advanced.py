@@ -2,6 +2,8 @@
 
 import datetime as dt
 
+import pytest
+
 from pyspark.sql import functions as F, types as T
 
 from felixzh_flink_spark.sources.builders import file_stream_source
@@ -1121,8 +1123,9 @@ def test_ivf_index_stream_sink_serves_like_inline(spark, tmp_path):
     """Streaming IVF index maintenance — the cell-partitioned twin of
     the rp stream sink, completing the {rp, ivf} × {batch, stream}
     matrix: micro-batches of inserts, a re-embedding upsert that MOVES
-    CELLS (the case the batch path needs a tombstone sidecar for; here
-    it is an ordinary keyed upsert), and an op=-D deletion must serve
+    CELLS (the case the batch path resolves by index-wide latest-epoch
+    wins; here it is an ordinary keyed upsert), and an op=-D deletion
+    must serve
     bit-identically to the inline IVF probe over the LATEST corpus,
     and materializing the state back to the cell-partitioned batch
     layout must serve identically through the partition-pruned path."""
@@ -1195,3 +1198,45 @@ def test_ivf_index_stream_sink_serves_like_inline(spark, tmp_path):
             ivf_topk_from_index(spark, batch_path, cents, q, k=10,
                                 n_probe=4).collect()]
     assert got2 == inline
+
+
+@pytest.mark.parametrize("kind", ["rp", "ivf"])
+def test_index_stream_sink_replay_is_idempotent(spark, tmp_path, kind):
+    """A replayed micro-batch (the same `epoch_id` delivered again, as
+    after a crash between the sink's commit and the offset commit)
+    leaves the maintained index unchanged — for the one shared index
+    sink with either encoder. The replayed batch holds an insert, a
+    re-embedding and a -D."""
+    from felixzh_flink_spark.operators.similarity import (
+        ivf_centroids,
+        ivf_index_stream_read,
+        ivf_index_stream_sink,
+        rp_index_stream_read,
+        rp_index_stream_sink,
+    )
+
+    e = (spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+         .select("vec_id", "embedding").filter(F.col("vec_id") < 200))
+    state = str(tmp_path / "state")
+    if kind == "rp":
+        sink = rp_index_stream_sink(state)
+        read = rp_index_stream_read
+    else:
+        sink = ivf_index_stream_sink(state, ivf_centroids(e, 4))
+        read = ivf_index_stream_read
+    sink(e.filter(F.col("vec_id") % 2 == 0)
+         .withColumn("op", F.lit("+I")), 0)
+    batch = (e.filter(F.col("vec_id") % 2 == 1)              # inserts
+             .unionByName(e.filter(F.col("vec_id") == 0)    # re-embedding
+                          .withColumn("embedding", F.reverse("embedding")))
+             .withColumn("op", F.lit("+I"))
+             .unionByName(e.filter(F.col("vec_id") == 2)    # delete
+                          .withColumn("op", F.lit("-D"))))
+    sink(batch, 1)
+    first = sorted(read(spark, state).collect())
+    sink(batch, 1)                                          # replay
+    assert sorted(read(spark, state).collect()) == first
+    ids = [r.vec_id for r in first]
+    assert 2 not in ids and len(ids) == len(set(ids)) == e.count() - 1
+    v0 = e.filter(F.col("vec_id") == 0).head()["embedding"]
+    assert [r.embedding for r in first if r.vec_id == 0] == [v0[::-1]]
