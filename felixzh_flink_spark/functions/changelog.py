@@ -452,7 +452,7 @@ def _commit_touched_buckets(state_dir: str, new_state: DataFrame,
                             touched: list[int], epoch_id: int,
                             man: dict, retain: int = 1) -> None:
     """Shared crash-atomic commit for bucketed state sinks
-    (`changelog_upsert_sink`, `incremental_agg_sink`): write `new_state`
+    (`changelog_upsert_sink` and every `_merge_state_sink`): write `new_state`
     (already carrying `_BUCKET_COL`) to a staging dir, move the touched
     buckets under fresh epoch dirs, commit by atomically renaming the
     manifest, then GC superseded epoch dirs. A crash at ANY point before
@@ -469,12 +469,12 @@ def _commit_touched_buckets(state_dir: str, new_state: DataFrame,
 
     Every filesystem operation here rides the Hadoop FileSystem resolved
     from `state_dir` (`functions.stateio.StateFS`) — the same-filesystem
-    contract the EOS file sink uses (sinks/writers.py `_hadoop_fs`) — so
-    the state layer works on HDFS/S3A exactly like the reference's
-    distributed sinks (HBaseSinkFunction.java:26-210), not just the
-    driver's local disk. The manifest commit is an overwrite-rename:
-    atomic on HDFS/local, last-writer-wins PUT on S3A (safe — single
-    writer, epochs serialized by foreachBatch)."""
+    contract the EOS file sink's markers use — so the state layer works
+    on HDFS/S3A exactly like the reference's distributed sinks
+    (HBaseSinkFunction.java:26-210), not just the driver's local disk.
+    The manifest commit is an overwrite-rename: atomic on HDFS/local,
+    last-writer-wins PUT on S3A (safe — single writer, epochs serialized
+    by foreachBatch)."""
     import json
 
     from felixzh_flink_spark.functions.stateio import state_fs
@@ -547,6 +547,53 @@ def _commit_touched_buckets(state_dir: str, new_state: DataFrame,
                 fs.delete(full)
 
 
+def _merge_state_sink(state_dir: str, delta_fn, keys: list[str], merge,
+                      n_buckets: int, retain: int = 1):
+    """foreachBatch body of the mergeable-state sinks (`incremental_agg_sink`,
+    `profiling.hll_sketch_sink`/`cms_sketch_sink`, `text.bm25_stats_sink`):
+    per-key state, bucketed by `keys` in the upsert sink's layout, that a
+    batch folds into as `merge(old, delta)`. Per micro-batch:
+
+    1. an epoch at or below the manifest's `last_epoch` is a post-commit
+       replay (crash between manifest and checkpoint commit) and is
+       skipped: an adding merge (counts, sums, df) would double-count;
+    2. `delta_fn(batch)` is bucketed and PERSISTED — the touched-bucket
+       collect and the state write both read it, so the batch is not
+       re-aggregated (and its source re-read) per action;
+    3. no touched buckets → no-op; otherwise `merge` sees only the
+       touched buckets' committed rows (`delta.limit(0)` before any
+       exist, which Catalyst folds away) and the result commits through
+       `_commit_touched_buckets` with the new `last_epoch`, so a crash
+       before the manifest commit re-applies the batch exactly once;
+    4. the delta is unpersisted on every exit path."""
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        spark = batch_df.sparkSession
+        man = _read_manifest(spark, state_dir)
+        if epoch_id <= man.get("last_epoch", -(2 ** 62)):
+            return
+        delta = (delta_fn(batch_df)
+                 .withColumn(_BUCKET_COL, _bucket_expr(keys, n_buckets))
+                 .persist())
+        try:
+            touched = sorted(
+                r[_BUCKET_COL]
+                for r in delta.select(_BUCKET_COL).distinct().collect())
+            if not touched:
+                return
+            man["last_epoch"] = epoch_id
+            old_paths = [man["buckets"][str(b)]["path"] for b in touched
+                         if man["buckets"].get(str(b), {}).get("path")]
+            fresh = delta.drop(_BUCKET_COL)
+            old = (spark.read.parquet(*old_paths).drop(_BUCKET_COL)
+                   if old_paths else fresh.limit(0))
+            new_state = merge(old, fresh).withColumn(
+                _BUCKET_COL, _bucket_expr(keys, n_buckets))
+            _commit_touched_buckets(state_dir, new_state, touched, epoch_id,
+                                    man, retain)
+        finally:
+            delta.unpersist()
+
+    return sink
 
 
 def cdc_bootstrap_state(snapshot: DataFrame, state_dir: str, pk: list[str],
@@ -718,50 +765,14 @@ def incremental_agg_sink(state_dir: str, keys: list[str], value_col: str,
     rewrite those buckets under a new epoch, commit the manifest. A batch
     costs O(touched buckets), not O(view size) — the property that makes a
     continuously-maintained 100 TB view affordable."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        man = _read_manifest(spark, state_dir)
-        # Replay guard: delta application is NOT idempotent (a replayed
-        # batch would add its deltas twice — unlike the upsert sink, whose
-        # per-key newest-wins merge absorbs replays). foreachBatch epochs
-        # are monotonic, so a batch at or below the committed high-water
-        # mark is a post-commit replay and must be skipped wholesale.
-        if epoch_id <= man.get("last_epoch", -(2 ** 62)):
-            return
-        # persist the delta: the touched-buckets collect AND the commit's
-        # state write both consume it — uncached, the whole per-batch
-        # groupBy (and source re-read) would execute twice per epoch
-        delta = (incremental_agg_delta(batch_df, keys, value_col,
-                                       sum_col, cnt_col)
-                 .withColumn(_BUCKET_COL, _bucket_expr(keys, n_buckets))
-                 .persist())
-        try:
-            touched = sorted(
-                r[_BUCKET_COL]
-                for r in delta.select(_BUCKET_COL).distinct().collect())
-            if not touched:
-                return
-            man["last_epoch"] = epoch_id
-            old_paths = [man["buckets"][str(b)]["path"] for b in touched
-                         if man["buckets"].get(str(b), {}).get("path")]
-            if old_paths:
-                state = spark.read.parquet(*old_paths).drop(_BUCKET_COL)
-            else:
-                state = spark.createDataFrame(
-                    [], materialized_agg(
-                        batch_df.limit(0), keys, value_col, sum_col, cnt_col
-                    ).schema)
-            new_state = (
-                incremental_agg_apply(state, delta.drop(_BUCKET_COL), keys,
-                                      sum_col, cnt_col)
-                .withColumn(_BUCKET_COL, _bucket_expr(keys, n_buckets)))
-            _commit_touched_buckets(state_dir, new_state, touched, epoch_id,
-                                    man, retain)
-        finally:
-            delta.unpersist()
-
-    return sink
+    return _merge_state_sink(
+        state_dir,
+        lambda batch: incremental_agg_delta(batch, keys, value_col,
+                                            sum_col, cnt_col),
+        keys,
+        lambda old, delta: incremental_agg_apply(old, delta, keys,
+                                                 sum_col, cnt_col),
+        n_buckets, retain)
 
 
 def encode_debezium_json(df: DataFrame, fields: list[str], op: str = "c") -> DataFrame:

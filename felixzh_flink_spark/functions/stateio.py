@@ -1,8 +1,13 @@
-"""Hadoop-FileSystem-backed state IO for the bucketed state sinks.
+"""Hadoop-FileSystem-backed IO for the state sinks and file sinks.
 
-The changelog/IVM/sketch sinks (`changelog.changelog_upsert_sink`,
-`changelog.incremental_agg_sink`, `profiling.hll_sketch_sink` /
-`cms_sketch_sink`) maintain a manifest + bucketed-parquet state layout.
+The changelog/IVM/sketch/retrieval-stats sinks
+(`changelog.changelog_upsert_sink`, and the mergeable-state sinks built on
+`changelog._merge_state_sink`: `changelog.incremental_agg_sink`,
+`profiling.hll_sketch_sink` / `cms_sketch_sink`, `text.bm25_stats_sink`)
+maintain a manifest + bucketed-parquet state layout; the exactly-once
+file sink (`sinks.writers.exactly_once_parquet_sink`) keeps its commit
+markers, and `operators.layout.compact_parquet` its directory swap, on
+the same layer.
 The reference's stateful sinks write to real distributed stores
 (felixzh-flink HBaseSinkFunction.java:26-210, DorisSink demos); this module
 gives our state layer the same property: every manifest/bucket operation

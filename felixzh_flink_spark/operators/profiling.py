@@ -285,41 +285,15 @@ def hll_sketch_sink(state_dir: str, ts_col: str, key_col: str,
     Read back with `read_upsert_state` + `hll_sketch_estimate`, or roll
     days up to any grain with `hll_rollup_estimate` — no raw-data rescan
     at any point."""
-    from felixzh_flink_spark.functions.changelog import (
-        _BUCKET_COL,
-        _bucket_expr,
-        _commit_touched_buckets,
-        _read_manifest,
-    )
+    from felixzh_flink_spark.functions.changelog import _merge_state_sink
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        man = _read_manifest(spark, state_dir)
-        # sketch-merge replays are NOT idempotent (re-unioning a batch
-        # sketch re-adds its keys' registers — harmless for HLL max-merge
-        # semantics, but epoch skipping keeps the contract uniform)
-        if epoch_id <= man.get("last_epoch", -(2 ** 62)):
-            return
-        delta = (hll_daily_sketches(batch_df, ts_col, key_col, lg_k)
-                 .withColumn(_BUCKET_COL, _bucket_expr(["day"], n_buckets)))
-        touched = sorted(r[_BUCKET_COL]
-                         for r in delta.select(_BUCKET_COL).distinct().collect())
-        if not touched:
-            return
-        man["last_epoch"] = epoch_id
-        old_paths = [man["buckets"][str(b)]["path"] for b in touched
-                     if man["buckets"].get(str(b), {}).get("path")]
-        merged = delta.drop(_BUCKET_COL)
-        if old_paths:
-            merged = merged.unionByName(
-                spark.read.parquet(*old_paths).drop(_BUCKET_COL))
-        new_state = (
-            merged.groupBy("day")
-            .agg(F.hll_union_agg("sketch").alias("sketch"))
-            .withColumn(_BUCKET_COL, _bucket_expr(["day"], n_buckets)))
-        _commit_touched_buckets(state_dir, new_state, touched, epoch_id, man)
-
-    return sink
+    return _merge_state_sink(
+        state_dir,
+        lambda batch: hll_daily_sketches(batch, ts_col, key_col, lg_k),
+        ["day"],
+        lambda old, delta: delta.unionByName(old).groupBy("day").agg(
+            F.hll_union_agg("sketch").alias("sketch")),
+        n_buckets)
 
 
 def cms_sketch_sink(state_dir: str, key_col: str, depth: int = 4,
@@ -337,38 +311,11 @@ def cms_sketch_sink(state_dir: str, key_col: str, depth: int = 4,
     Read back with `read_upsert_state` + `cms_estimate` — frequency
     questions over the whole stream history with O(depth × width) state.
     """
-    from felixzh_flink_spark.functions.changelog import (
-        _BUCKET_COL,
-        _bucket_expr,
-        _commit_touched_buckets,
-        _read_manifest,
-    )
+    from felixzh_flink_spark.functions.changelog import _merge_state_sink
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        man = _read_manifest(spark, state_dir)
-        if epoch_id <= man.get("last_epoch", -(2 ** 62)):
-            return
-        delta = (cms_build(batch_df, key_col, depth, width)
-                 .withColumn(_BUCKET_COL, _bucket_expr(["j"], n_buckets)))
-        touched = sorted(r[_BUCKET_COL]
-                         for r in delta.select(_BUCKET_COL).distinct().collect())
-        if not touched:
-            return
-        man["last_epoch"] = epoch_id
-        old_paths = [man["buckets"][str(b)]["path"] for b in touched
-                     if man["buckets"].get(str(b), {}).get("path")]
-        merged = delta.drop(_BUCKET_COL)
-        if old_paths:
-            merged = merged.unionByName(
-                spark.read.parquet(*old_paths).drop(_BUCKET_COL))
-        new_state = (
-            merged.groupBy("j", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-            .withColumn(_BUCKET_COL, _bucket_expr(["j"], n_buckets)))
-        _commit_touched_buckets(state_dir, new_state, touched, epoch_id, man)
-
-    return sink
+    return _merge_state_sink(
+        state_dir, lambda batch: cms_build(batch, key_col, depth, width),
+        ["j"], lambda old, delta: cms_merge(delta, old), n_buckets)
 
 
 def exact_percentiles_distributed(df: DataFrame, col: str,

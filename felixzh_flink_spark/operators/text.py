@@ -606,18 +606,9 @@ def bm25_stats_sink(state_dir: str, text_col: str = "text",
     bit-identically to the batch path (the parity e2e pins this).
     State size is O(vocabulary), never O(corpus); at 100 TB the
     per-batch delta is one partial-aggregated shuffle of the BATCH."""
-    from felixzh_flink_spark.functions.changelog import (
-        _BUCKET_COL,
-        _bucket_expr,
-        _commit_touched_buckets,
-        _read_manifest,
-    )
+    from felixzh_flink_spark.functions.changelog import _merge_state_sink
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        man = _read_manifest(spark, state_dir)
-        if epoch_id <= man.get("last_epoch", -(2 ** 62)):
-            return
+    def delta_fn(batch_df: DataFrame) -> DataFrame:
         t = F.trim(F.coalesce(F.col(text_col), F.lit("")))
         toks = F.filter(F.split(F.lower(t), TOKEN_RE),
                         lambda x: x != F.lit(""))
@@ -633,27 +624,14 @@ def bm25_stats_sink(state_dir: str, text_col: str = "text",
             F.lit(0).cast("bigint").alias("df"),
             F.coalesce(F.sum("dl").cast("bigint"), F.lit(0)).alias("sdl"),
             F.count("*").cast("bigint").alias("ndocs"))
-        delta = (df_delta.unionByName(tot_delta)
-                 .withColumn(_BUCKET_COL, _bucket_expr(["term"], n_buckets)))
-        touched = sorted(r[_BUCKET_COL]
-                         for r in delta.select(_BUCKET_COL).distinct().collect())
-        if not touched:
-            return
-        man["last_epoch"] = epoch_id
-        old_paths = [man["buckets"][str(b)]["path"] for b in touched
-                     if man["buckets"].get(str(b), {}).get("path")]
-        merged = delta.drop(_BUCKET_COL)
-        if old_paths:
-            merged = merged.unionByName(
-                spark.read.parquet(*old_paths).drop(_BUCKET_COL))
-        new_state = (
-            merged.groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("sdl").alias("sdl"),
-                 F.sum("ndocs").alias("ndocs"))
-            .withColumn(_BUCKET_COL, _bucket_expr(["term"], n_buckets)))
-        _commit_touched_buckets(state_dir, new_state, touched, epoch_id, man)
+        return df_delta.unionByName(tot_delta)
 
-    return sink
+    def merge(old: DataFrame, delta: DataFrame) -> DataFrame:
+        return delta.unionByName(old).groupBy("term").agg(
+            F.sum("df").alias("df"), F.sum("sdl").alias("sdl"),
+            F.sum("ndocs").alias("ndocs"))
+
+    return _merge_state_sink(state_dir, delta_fn, ["term"], merge, n_buckets)
 
 
 def bm25_stats_read(spark, state_dir: str,

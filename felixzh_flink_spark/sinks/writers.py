@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from felixzh_flink_spark.functions.stateio import state_fs
+
 
 def kafka_sink(df: DataFrame, bootstrap_servers: str, topic: str, *,
                checkpoint_location: str, key_col: str | None = None,
@@ -136,15 +138,13 @@ def exactly_once_parquet_sink(df: DataFrame, path: str, *,
     """
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fs, hpath = _hadoop_fs(batch_df.sparkSession, path)
-        marker = hpath(f"{path}/_committed_{batch_id}")
+        fs = state_fs(batch_df.sparkSession, path)
+        marker = fs.join(path, f"_committed_{batch_id}")
         if fs.exists(marker):            # replayed after successful commit
             return
         batch_df.write.mode("overwrite").parquet(
             f"{path}/batch_id={batch_id}")
-        out = fs.create(marker, True)    # flag-file commit point
-        out.write(bytearray(b"ok"))
-        out.close()
+        fs.write_text(marker, "ok")      # flag-file commit point
 
     return (
         df.writeStream.foreachBatch(write_batch)
@@ -153,26 +153,13 @@ def exactly_once_parquet_sink(df: DataFrame, path: str, *,
     )
 
 
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path-constructor) for `path`, via the JVM gateway —
-    the filesystem is resolved from the path's scheme + Hadoop conf, so
-    file:/, hdfs:/ and s3a:/ all behave identically. foreachBatch hooks
-    run on the driver, where the gateway is always available."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jvm.org.apache.hadoop.fs.Path
-
-
 def read_exactly_once_output(spark, path: str) -> DataFrame:
     """Committed-batches reader for `exactly_once_parquet_sink` output.
     Lists markers through the Hadoop FileSystem API (same-filesystem
     contract as the writer)."""
-    fs, hpath = _hadoop_fs(spark, path)
-    ids = sorted(
-        int(st.getPath().getName().rsplit("_", 1)[1])
-        for st in fs.listStatus(hpath(path))
-        if st.getPath().getName().startswith("_committed_"))
+    ids = sorted(int(name.rsplit("_", 1)[1])
+                 for name in state_fs(spark, path).listdir(path)
+                 if name.startswith("_committed_"))
     if not ids:
         raise FileNotFoundError(f"no committed batches under {path}")
     return spark.read.parquet(

@@ -8,7 +8,8 @@ debezium_json/MySqlCDC2Print.java:94-101).
 
 import json
 
-from pyspark.sql import types as T
+import pytest
+from pyspark.sql import functions as F, types as T
 
 from felixzh_flink_spark.sources.builders import file_stream_source
 from felixzh_flink_spark.functions.changelog import (
@@ -830,3 +831,148 @@ def test_temporal_join_version_selection_and_boundaries(spark):
     # inner mode drops the pre-history fact
     inner = temporal_join(facts, hist, ["user_id"], "ts", how="inner")
     assert {r["event_id"] for r in inner.collect()} == {11, 12, 13}
+
+
+# ------------------------------------------------ mergeable-state sinks
+# The four epoch-guarded sinks share `_merge_state_sink`. Each case is
+# (sink factory, id-frame -> sink input, state reader); batches are
+# shaped from `spark.range` ids so the same shapes feed the replay/crash
+# test and the evaluation-count test.
+
+def _hll_case():
+    from felixzh_flink_spark.functions.changelog import read_upsert_state
+    from felixzh_flink_spark.operators.profiling import hll_sketch_sink
+
+    def read(spark, state):
+        return sorted(
+            (r["day"], r["n"]) for r in read_upsert_state(spark, state)
+            .select("day", F.hll_sketch_estimate("sketch").alias("n"))
+            .collect())
+
+    return (lambda state: hll_sketch_sink(state, "ts", "user_id"),
+            lambda ids: ids.select(
+                F.timestamp_seconds(F.lit(1704067200)
+                                    + F.col("id") % 3 * 86400).alias("ts"),
+                F.col("id").alias("user_id")),
+            read)
+
+
+def _cms_case():
+    from felixzh_flink_spark.functions.changelog import read_upsert_state
+    from felixzh_flink_spark.operators.profiling import cms_sketch_sink
+
+    return (lambda state: cms_sketch_sink(state, "tok", depth=3, width=32),
+            lambda ids: ids.select(
+                F.concat(F.lit("t"), (F.col("id") % 17).cast("string"))
+                .alias("tok")),
+            lambda spark, state: sorted(
+                read_upsert_state(spark, state)
+                .select("j", "bucket", "cnt").collect()))
+
+
+def _bm25_case():
+    from felixzh_flink_spark.operators.text import (
+        bm25_stats_read, bm25_stats_sink)
+
+    words = F.concat_ws(
+        " ", F.concat(F.lit("w"), (F.col("id") % 5).cast("string")),
+        F.concat(F.lit("v"), (F.col("id") % 7).cast("string")),
+        F.lit("common"))
+    return (bm25_stats_sink,
+            lambda ids: ids.select(
+                F.col("id").alias("doc_id"),
+                F.when(F.col("id") % 11 != 0, words).alias("text")),
+            lambda spark, state: bm25_stats_read(
+                spark, state, ["w1", "v3", "common", "nosuchterm"]))
+
+
+def _incremental_agg_case():
+    from felixzh_flink_spark.functions.changelog import (
+        incremental_agg_sink, read_upsert_state)
+
+    return (lambda state: incremental_agg_sink(state, ["k"], "v"),
+            lambda ids: ids.select(
+                F.when(F.col("id") % 5 == 4, "-D").otherwise("+I")
+                .alias("op"),
+                (F.col("id") % 6).alias("k"),
+                F.col("id").cast("double").alias("v")),
+            lambda spark, state: sorted(
+                (r["k"], float(r["total"]), r["n"])
+                for r in read_upsert_state(spark, state).collect()))
+
+
+_MERGE_SINKS = {"hll": _hll_case, "cms": _cms_case, "bm25": _bm25_case,
+                "incremental_agg": _incremental_agg_case}
+
+
+def _cache_state(spark):
+    """(cache manager empty?, persisted RDD count) — a delta left
+    persisted by a failed batch moves at least the second."""
+    return (spark._jsparkSession.sharedState().cacheManager().isEmpty(),
+            spark.sparkContext._jsc.getPersistentRDDs().size())
+
+
+@pytest.mark.parametrize("case", sorted(_MERGE_SINKS))
+def test_merge_state_sink_replay_and_crash_recover_to_reference(
+        spark, tmp_path, monkeypatch, case):
+    """Exactly-once for every mergeable-state sink. A crash at the
+    manifest commit of batch 2 leaves the state of batch 1 readable and
+    unpersists the delta; re-running the epoch (recovery) and replaying
+    it once more (crash after commit, before the checkpoint) both end at
+    the no-fault two-batch reference. An adding merge (cms, bm25,
+    incremental-agg) double-counts on the replay without the epoch
+    skip; HLL's max-merge is idempotent, so only its crash half bites."""
+    from felixzh_flink_spark.functions import stateio
+
+    make, shape, read = _MERGE_SINKS[case]()
+    b1, b2 = shape(spark.range(0, 60)), shape(spark.range(40, 120))
+    ref, crash = str(tmp_path / "ref"), str(tmp_path / "crash")
+    make(ref)(b1, 0)
+    after_first = read(spark, ref)
+    make(ref)(b2, 1)
+    reference = read(spark, ref)
+    assert reference != after_first
+
+    make(crash)(b1, 0)
+    real = stateio.StateFS.replace_text
+    left = [1]
+
+    def flaky(self, path, text):
+        if left[0] and path.endswith("manifest.json"):
+            left[0] -= 1
+            raise IOError("injected crash before the manifest commit")
+        return real(self, path, text)
+
+    cached = _cache_state(spark)
+    with monkeypatch.context() as m:
+        m.setattr(stateio.StateFS, "replace_text", flaky)
+        with pytest.raises(IOError, match="injected"):
+            make(crash)(b2, 1)
+    assert left == [0]
+    assert _cache_state(spark) == cached
+    assert read(spark, crash) == after_first
+    make(crash)(b2, 1)            # recovery: the uncommitted epoch re-runs
+    assert read(spark, crash) == reference
+    make(crash)(b2, 1)            # post-commit replay: skipped
+    assert read(spark, crash) == reference
+
+
+@pytest.mark.parametrize("case,max_evals", [
+    ("cms", 1), ("hll", 1), ("incremental_agg", 1),
+    # bm25's delta unions two aggregates over one tokenization
+    ("bm25", 2)])
+def test_merge_state_sink_evaluates_batch_once_per_delta(
+        spark, tmp_path, case, max_evals):
+    """The delta is persisted: the touched-bucket collect and the state
+    write reuse it instead of re-running the batch. Counted with a
+    Python UDF filter over a 200-row batch."""
+    make, shape, _ = _MERGE_SINKS[case]()
+    acc = spark.sparkContext.accumulator(0)
+
+    def seen(_):
+        acc.add(1)
+        return True
+
+    batch = shape(spark.range(200).filter(F.udf(seen, "boolean")("id")))
+    make(str(tmp_path / "state"))(batch, 0)
+    assert 200 <= acc.value <= 200 * max_evals

@@ -6,12 +6,12 @@ import glob
 from pyspark.sql import functions as F
 
 from felixzh_flink_spark.operators.aggregations import salted_skew_join
+from felixzh_flink_spark.operators.layout import compact_parquet
 from felixzh_flink_spark.operators.profiling import profile_numeric
 from felixzh_flink_spark.operators.sampling import (
     deterministic_sample,
     train_test_split,
 )
-from felixzh_flink_spark.sinks.compaction import compact_parquet
 
 
 def test_split_is_disjoint_exhaustive_and_stable(spark, sf_dir):
@@ -52,9 +52,11 @@ def test_compaction_reduces_file_count(spark, tmp_path):
         spark.range(i * 10, i * 10 + 10).write.mode("append").parquet(path)
     before = len(glob.glob(f"{path}/*.parquet"))
     assert before >= 12
-    n = compact_parquet(spark, path, target_file_bytes=128 << 20)
+    stats = compact_parquet(spark, path, target_mb=128)
     after = len(glob.glob(f"{path}/*.parquet"))
-    assert n == 1 and after == 1
+    assert stats["files_before"] == before
+    assert stats["files_after"] == 1 and after == 1
+    assert stats["rows"] == 120
     assert spark.read.parquet(path).count() == 120  # no rows lost
 
 

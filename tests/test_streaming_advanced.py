@@ -466,6 +466,15 @@ def test_exactly_once_parquet_sink_idempotent_replay(spark, tmp_path):
     assert read_exactly_once_output(spark, out).count() == 3
 
 
+def test_read_exactly_once_output_without_commits_raises(spark, tmp_path):
+    """An output path with no committed batch, absent or empty, raises
+    the reader's own FileNotFoundError, not a filesystem error."""
+    from felixzh_flink_spark.sinks.writers import read_exactly_once_output
+    for out in (tmp_path / "absent", tmp_path):
+        with pytest.raises(FileNotFoundError, match="no committed batches"):
+            read_exactly_once_output(spark, str(out))
+
+
 def test_streaming_near_dup_across_batches_within_horizon(spark, tmp_path):
     """Regression: a duplicate arriving in a LATER micro-batch but inside
     the horizon must still be flagged — the eviction timer anchors on the
