@@ -13,6 +13,12 @@ and the full dataset.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import inspect
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
@@ -34,18 +40,69 @@ TABLES = (
 BROADCAST_DIMS = ("region", "nation")
 
 
-#: (applicationId, sf_dir, table) → loaded DataFrame. A DataFrame is an
-#: immutable lazy plan, so handing the same object to every caller is
-#: safe; rebuilding it per query costs ~0.1-0.3 s of driver-side analysis
-#: (file listing, schema resolve, py4j) that a real engine's catalog
-#: would never re-pay. Keyed by applicationId so a new session never
-#: sees plans bound to a stopped one.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+#: the one per-session memo (`session_memo`): the SparkContext its
+#: entries were built under, and (fn, sf_dir, bound args) → value
+_memo_ctx: object = None
+_memo: dict[tuple, object] = {}
 
 
+def session_memo(fn):
+    """Build `fn(spark, sf_dir, *args)` once per session and hand the
+    value to every later call — the one "built once" rule for the
+    catalog's table frames and the registry's ingest artifacts
+    (indexes, corpus statistics, codebooks, probe vectors). The key is
+    (fn, sf_dir, the remaining arguments bound with their defaults), so
+    `f(s, d)` and `f(s, d, 16)` share one entry.
+
+    Entries live as long as the session's SparkContext, compared by
+    identity on the Python object (a lookup makes no py4j call): a
+    lookup from a new context drops every entry built under another.
+    Those pin DataFrames bound to a dead JVM context, which fail when
+    used, and would grow without bound in a process that cycles
+    SparkSessions (test runs, notebooks, library use)."""
+    sig = inspect.signature(fn)
+
+    @functools.wraps(fn)
+    def memoized(spark, sf_dir, *args, **kwargs):
+        global _memo_ctx
+        ctx = getattr(spark, "sparkContext", None)
+        if ctx is not _memo_ctx:
+            _memo.clear()
+            _memo_ctx = ctx
+        bound = sig.bind(spark, sf_dir, *args, **kwargs)
+        bound.apply_defaults()
+        key = (fn, sf_dir, tuple(bound.arguments.values())[2:])
+        if key not in _memo:
+            _memo[key] = fn(spark, sf_dir, *args, **kwargs)
+        return _memo[key]
+
+    return memoized
+
+
+_artifact_root: str | None = None
+
+
+def artifact_dir(prefix: str) -> str:
+    """A fresh empty directory for one materialized ingest artifact,
+    under a per-process root made on first use and removed at
+    interpreter exit: artifacts are rebuilt per session
+    (`session_memo`), so none of them outlives its process."""
+    global _artifact_root
+    if _artifact_root is None:
+        _artifact_root = tempfile.mkdtemp(prefix="spark_graft_")
+        atexit.register(shutil.rmtree, _artifact_root, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=prefix, dir=_artifact_root)
+
+
+@session_memo
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table (cached per session). ``sf_dir`` like
     /root/testdata/sf0.01.
+
+    A DataFrame is an immutable lazy plan, so handing the same object to
+    every caller is safe; rebuilding it per query costs ~0.1-0.3 s of
+    driver-side analysis (file listing, schema resolve, py4j) that a real
+    engine's catalog would never re-pay.
 
     `events` has shipped its `ts` column as either TIMESTAMP(NANOS) —
     which Spark's parquet reader rejects by default — or a plain µs
@@ -56,15 +113,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     matching DuckDB's ns→µs truncation; a µs column passes through with
     just the NTZ cast.
     """
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, name)
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    # evict entries from stopped sessions: they pin DataFrames bound to a
-    # dead JVM context and would grow without bound in a process that
-    # cycles SparkSessions (test runs, notebooks, library use)
-    for stale in [k for k in _TABLE_CACHE if k[0] != app]:
-        del _TABLE_CACHE[stale]
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType
@@ -78,7 +126,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     else:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    _TABLE_CACHE[key] = df
     return df
 
 

@@ -612,19 +612,18 @@ def bm25_stats_sink(state_dir: str, text_col: str = "text",
         t = F.trim(F.coalesce(F.col(text_col), F.lit("")))
         toks = F.filter(F.split(F.lower(t), TOKEN_RE),
                         lambda x: x != F.lit(""))
-        per = batch_df.select(F.size(toks).alias("dl"),
-                              F.array_distinct(toks).alias("_terms"))
-        df_delta = (per.select(F.explode("_terms").alias("term"))
-                    .groupBy("term")
-                    .agg(F.count("*").alias("df"))
-                    .select("term", "df", F.lit(0).cast("bigint").alias("sdl"),
-                            F.lit(0).cast("bigint").alias("ndocs")))
-        tot_delta = per.agg(
-            F.lit("").alias("term"),
-            F.lit(0).cast("bigint").alias("df"),
-            F.coalesce(F.sum("dl").cast("bigint"), F.lit(0)).alias("sdl"),
-            F.count("*").cast("bigint").alias("ndocs"))
-        return df_delta.unionByName(tot_delta)
+        # one explode carries both parts of the delta: each doc's distinct
+        # terms (df) plus the reserved '' element (its dl and the doc
+        # count), so the batch is tokenized and aggregated once
+        tot = F.col("term") == ""
+        return (batch_df
+                .select(F.size(toks).alias("dl"), F.explode(F.concat(
+                    F.array_distinct(toks), F.array(F.lit("")))).alias("term"))
+                .groupBy("term")
+                .agg(F.count(F.when(~tot, 1)).alias("df"),
+                     F.coalesce(F.sum(F.when(tot, F.col("dl"))).cast("bigint"),
+                                F.lit(0)).alias("sdl"),
+                     F.count(F.when(tot, 1)).alias("ndocs")))
 
     def merge(old: DataFrame, delta: DataFrame) -> DataFrame:
         return delta.unionByName(old).groupBy("term").agg(

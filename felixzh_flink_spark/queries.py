@@ -23,7 +23,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F, types as T
 
-from felixzh_flink_spark.catalog import load_table, spread_if_narrow
+from felixzh_flink_spark.catalog import (
+    artifact_dir,
+    load_table,
+    session_memo,
+    spread_if_narrow,
+)
 from felixzh_flink_spark.functions import changelog as CH
 from felixzh_flink_spark.functions.changelog import (
     changelog_sum,
@@ -97,17 +102,6 @@ def _t_wide(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     queries whose per-row expression work (shingling, MinHash, per-row
     cosine) dwarfs the scan. No-op on well-partitioned sources."""
     return spread_if_narrow(load_table(spark, sf_dir, name))
-
-
-def _sf_of(sf_dir: str) -> float:
-    """Scale factor parsed from the test-data dir name (…/sf0.1) — the
-    scale knob queries use to pick exact-vs-sketch algorithm variants
-    (exact below sf 1 where the oracles run; mergeable approximations
-    at and above it). Unparseable dirs count as large."""
-    try:
-        return float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
-    except ValueError:
-        return float("inf")
 
 
 def _ms(col: str):
@@ -2401,38 +2395,23 @@ _ORDERS_CDC_SCHEMA = T.StructType([
 ])
 
 
-#: per-(sf_dir, family) path of MATERIALIZED envelope parquet — the Kafka
+#: per-(sf_dir, family) scan of MATERIALIZED envelope parquet — the Kafka
 #: topic stand-in. Envelope synthesis (to_json over the base table) is
 #: test-fixture construction, not engine work: a real deployment's decode
-#: reads raw bytes from a topic. Materializing once per process makes the
+#: reads raw bytes from a topic. Materializing once per session makes the
 #: decode queries measure DECODE, and spares every bench/driver rerun the
-#: synthesis scan.
-_ENVELOPE_PATHS: dict[tuple[str, str], str] = {}
-
-
-_ENVELOPE_FRAMES: dict[tuple[str, str, str], DataFrame] = {}
-
-
+#: synthesis scan. The scan frame is memoized like catalog.load_table:
+#: re-running spark.read.parquet costs ~0.1 s of driver-side file listing
+#: + schema resolve per query build, which a catalog would never re-pay.
+@session_memo
 def _materialized_envelopes(spark, sf_dir, family: str, builder) -> DataFrame:
-    key = (sf_dir, family)
-    if key not in _ENVELOPE_PATHS:
-        import tempfile
-        path = tempfile.mkdtemp(prefix=f"spark_graft_env_{family}_")
-        # pre-spread across cores like a many-partition topic, so the
-        # decode's conditional repartition is a no-op
-        builder(spark, sf_dir) \
-            .repartition(spark.sparkContext.defaultParallelism) \
-            .write.mode("overwrite").parquet(path)
-        _ENVELOPE_PATHS[key] = path
-    # the scan frame is cached like catalog.load_table: re-running
-    # spark.read.parquet costs ~0.1 s of driver-side file listing +
-    # schema resolve per query build, which a catalog would never re-pay
-    fkey = (spark.sparkContext.applicationId, sf_dir, family)
-    if fkey not in _ENVELOPE_FRAMES:
-        for stale in [k for k in _ENVELOPE_FRAMES if k[0] != fkey[0]]:
-            del _ENVELOPE_FRAMES[stale]
-        _ENVELOPE_FRAMES[fkey] = spark.read.parquet(_ENVELOPE_PATHS[key])
-    return _ENVELOPE_FRAMES[fkey]
+    path = artifact_dir(f"env_{family}_")
+    # pre-spread across cores like a many-partition topic, so the
+    # decode's conditional repartition is a no-op
+    builder(spark, sf_dir) \
+        .repartition(spark.sparkContext.defaultParallelism) \
+        .write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
 
 
 def _orders_canal_envelopes(spark, sf_dir, keep_key: bool = False):
@@ -3362,37 +3341,27 @@ def tfidf_top_terms(spark, sf_dir):
 
 
 #: per-sf_dir path of the materialized TF-IDF corpus statistics
-#: (`write_tfidf_stats`) — built once per process, the same ingest
+#: (`write_tfidf_stats`) — built once per session, the same ingest
 #: lifecycle as the rp/IVF/PQ index artifacts.
-_TFIDF_STATS_PATH: dict[str, str] = {}
-
-
+@session_memo
 def _tfidf_stats_path(spark, sf_dir) -> str:
-    if sf_dir not in _TFIDF_STATS_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_tfidf_")
-        TX.write_tfidf_stats(_t_wide(spark, sf_dir, "documents"), path)
-        _TFIDF_STATS_PATH[sf_dir] = path
-    return _TFIDF_STATS_PATH[sf_dir]
+    path = artifact_dir("tfidf_")
+    TX.write_tfidf_stats(_t_wide(spark, sf_dir, "documents"), path)
+    return path
 
 
 #: per-sf_dir stats artifact built INCREMENTALLY: bulk build over
 #: doc_id % 3 != 0, then two `append_tfidf_stats` deltas (% 6 == 0,
 #: % 6 == 3) — exercising the legacy-layout upgrade AND generation
 #: chaining. Serving against it must equal a full one-shot build.
-_TFIDF_INC_STATS_PATH: dict[str, str] = {}
-
-
+@session_memo
 def _tfidf_inc_stats_path(spark, sf_dir) -> str:
-    if sf_dir not in _TFIDF_INC_STATS_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_tfidf_inc_")
-        d = _t_wide(spark, sf_dir, "documents")
-        TX.write_tfidf_stats(d.filter(F.col("doc_id") % 3 != 0), path)
-        TX.append_tfidf_stats(d.filter(F.col("doc_id") % 6 == 0), path)
-        TX.append_tfidf_stats(d.filter(F.col("doc_id") % 6 == 3), path)
-        _TFIDF_INC_STATS_PATH[sf_dir] = path
-    return _TFIDF_INC_STATS_PATH[sf_dir]
+    path = artifact_dir("tfidf_inc_")
+    d = _t_wide(spark, sf_dir, "documents")
+    TX.write_tfidf_stats(d.filter(F.col("doc_id") % 3 != 0), path)
+    TX.append_tfidf_stats(d.filter(F.col("doc_id") % 6 == 0), path)
+    TX.append_tfidf_stats(d.filter(F.col("doc_id") % 6 == 3), path)
+    return path
 
 
 @q("tfidf_top_terms_incremental", _TFIDF_ORACLE)
@@ -3608,43 +3577,28 @@ def minhash_dedup_verified(spark, sf_dir):
 # Similarity search over embeddings
 # =====================================================================
 
-#: per-sf_dir cache of the fixed probe vector and the IVF centroid index —
+#: per-sf_dir memo of the fixed probe vector and the IVF centroid index —
 #: both are ingest-time artifacts (deterministic given the data), not
-#: per-query work; caching mirrors a real deployment's prebuilt ANN index.
-_VEC_CACHE: dict[str, list[float]] = {}
-_IVF_CACHE: dict[tuple[str, int], list[list[float]]] = {}
-_IVF_TRAINED_CACHE: dict[tuple[str, int], list[list[float]]] = {}
-
-
+#: per-query work; memoizing mirrors a real deployment's prebuilt ANN index.
+@session_memo
 def _ivf_trained(spark, sf_dir, n_centroids: int = 16) -> list[list[float]]:
-    key = (sf_dir, n_centroids)
-    if key not in _IVF_TRAINED_CACHE:
-        e = _t(spark, sf_dir, "embeddings")
-        _IVF_TRAINED_CACHE[key] = SIM.ivf_train(e, n_centroids, max_iter=3)
-    return _IVF_TRAINED_CACHE[key]
+    e = _t(spark, sf_dir, "embeddings")
+    return SIM.ivf_train(e, n_centroids, max_iter=3)
 
 
 #: per-(sf_dir, k) cell-population stats for the trained IVF cells — an
 #: ingest-time artifact like the centroids themselves (the training loop
 #: aggregates exactly these counts every iteration); passing them into
 #: semantic_dedup folds the hot-cell guard to a literal filter.
-_IVF_COUNTS_CACHE: dict[tuple[str, int], dict[int, int]] = {}
-
-
+@session_memo
 def _ivf_cell_counts(spark, sf_dir, n_centroids: int = 16) -> dict[int, int]:
-    key = (sf_dir, n_centroids)
-    if key not in _IVF_COUNTS_CACHE:
-        e = _t(spark, sf_dir, "embeddings")
-        assigned = SIM.ivf_assign(e, _ivf_trained(spark, sf_dir, n_centroids))
-        _IVF_COUNTS_CACHE[key] = {
-            r["ivf_cell"]: r["n"]
-            for r in assigned.groupBy("ivf_cell").agg(
-                F.count("*").alias("n")).collect()
-        }
-    return _IVF_COUNTS_CACHE[key]
-
-
-_EMB_N_CACHE: dict[str, int] = {}
+    e = _t(spark, sf_dir, "embeddings")
+    assigned = SIM.ivf_assign(e, _ivf_trained(spark, sf_dir, n_centroids))
+    return {
+        r["ivf_cell"]: r["n"]
+        for r in assigned.groupBy("ivf_cell").agg(
+            F.count("*").alias("n")).collect()
+    }
 
 
 def _parquet_footer_rows(path: str) -> int | None:
@@ -3674,33 +3628,19 @@ def _parquet_footer_rows(path: str) -> int | None:
     return None
 
 
-def _embeddings_n(spark, sf_dir) -> int:
-    """Embedding-table row count — an ingest-time statistic read from
-    the parquet FOOTERS (round-7 verdict item 5: the previous
-    `.count()` was a scan-shaped job a cold session on a 100-TB table
-    would pay before its first query; the footer read is metadata-only
-    and zero Spark actions). Cached per sf_dir; falls back to count()
-    only when the table isn't footer-readable (non-local FS, view)."""
-    if sf_dir not in _EMB_N_CACHE:
-        n = _parquet_footer_rows(f"{sf_dir}/embeddings.parquet")
-        _EMB_N_CACHE[sf_dir] = (
-            n if n is not None else _t(spark, sf_dir, "embeddings").count())
-    return _EMB_N_CACHE[sf_dir]
-
-
-_DOC_N_CACHE: dict[str, int] = {}
-
-
-def _documents_n(spark, sf_dir) -> int:
-    """Documents-table row count (ingest stat), cached per sf_dir —
-    drives the corpus-scale switches that trade a broadcast for a
-    shuffle once the data-derived side stops being broadcastable.
-    Footer-metadata read, zero Spark actions (see `_embeddings_n`)."""
-    if sf_dir not in _DOC_N_CACHE:
-        n = _parquet_footer_rows(f"{sf_dir}/documents.parquet")
-        _DOC_N_CACHE[sf_dir] = (
-            n if n is not None else _t(spark, sf_dir, "documents").count())
-    return _DOC_N_CACHE[sf_dir]
+@session_memo
+def _table_rows(spark, sf_dir, table: str) -> int:
+    """Table row count — an ingest-time statistic read from the parquet
+    FOOTERS (round-7 verdict item 5: the previous `.count()` was a
+    scan-shaped job a cold session on a 100-TB table would pay before
+    its first query; the footer read is metadata-only and zero Spark
+    actions). Memoized per (sf_dir, table); falls back to count() only
+    when the table isn't footer-readable (non-local FS, view). Drives
+    the corpus-scale switches that trade a broadcast for a shuffle once
+    the data-derived side stops being broadcastable, and the
+    exact-vs-sketch percentile choice (`_approx_percentiles`)."""
+    n = _parquet_footer_rows(f"{sf_dir}/{table}.parquet")
+    return n if n is not None else _t(spark, sf_dir, table).count()
 
 
 def _jaccard_broadcast_vocab(spark, sf_dir) -> bool:
@@ -3713,7 +3653,7 @@ def _jaccard_broadcast_vocab(spark, sf_dir) -> bool:
     docs the broadcast wins and behavior is unchanged (driver window,
     bench); above it the frequency join falls back to the documented
     shuffle path (`broadcast_vocab=False`)."""
-    return _documents_n(spark, sf_dir) <= 100_000
+    return _table_rows(spark, sf_dir, "documents") <= 100_000
 
 
 #: per-(sf_dir) SEMANTIC-DEDUP PQ codebooks (m=16/k=32 — finer than the
@@ -3721,15 +3661,10 @@ def _jaccard_broadcast_vocab(spark, sf_dir) -> bool:
 #: quantization than rerank-bounded top-k; measured 0.857 recall on
 #: borderline-random sf0.1 pairs vs 0.43 at m=16/k=16). Ingest-time
 #: artifact like the IVF centroids.
-_PQ_SEM_BOOKS_CACHE: dict[str, list] = {}
-
-
+@session_memo
 def _pq_books_semantic(spark, sf_dir):
-    if sf_dir not in _PQ_SEM_BOOKS_CACHE:
-        e = _t(spark, sf_dir, "embeddings")
-        _PQ_SEM_BOOKS_CACHE[sf_dir] = SIM.pq_train(e, m=16, code_k=32,
-                                                   dim=64, train_iter=2)
-    return _PQ_SEM_BOOKS_CACHE[sf_dir]
+    e = _t(spark, sf_dir, "embeddings")
+    return SIM.pq_train(e, m=16, code_k=32, dim=64, train_iter=2)
 
 
 def _semantic_use_pq(n_rows: int) -> bool:
@@ -3770,100 +3705,85 @@ def _near_dup_planes(n_rows: int) -> int:
     return 4 + max(0, round(math.log2(max(1.0, n_rows / 2000.0))))
 
 
-_WINSOR_FENCES_CACHE: dict[tuple[str, bool], object] = {}
+def _approx_percentiles(spark, sf_dir) -> bool:
+    """Exact-vs-sketch percentile switch for the profiling queries:
+    exact (the two-phase rank machinery, bit-equal to DuckDB's
+    quantile_cont) until lineitem reaches 6M rows, the mergeable
+    `approx_percentile` sketch from there (one map-combined pass instead
+    of a full column shuffle + sort). The bound is sf 1's lineitem, so
+    the exact branch covers every dataset the oracles run on; the count
+    is the memoized footer statistic, never the directory's name."""
+    return _table_rows(spark, sf_dir, "lineitem") >= 6_000_000
 
 
+@session_memo
 def _winsor_fences(spark, sf_dir):
-    """Lazy [p01, p99] fences frame for `winsorized_price_stats`, cached
+    """Lazy [p01, p99] fences frame for `winsorized_price_stats`, memoized
     per sf_dir (same plan-construction-cost rationale as `_psi_edges`;
     still zero collects — the fences ride the plan as a broadcast)."""
-    approx = _sf_of(sf_dir) >= 1
-    key = (sf_dir, approx)
-    if key not in _WINSOR_FENCES_CACHE:
-        from felixzh_flink_spark.operators.profiling import (
-            exact_percentiles_frame)
-        l = _t(spark, sf_dir, "lineitem")
-        if approx:
-            _WINSOR_FENCES_CACHE[key] = l.agg(F.expr(
-                "approx_percentile(l_extendedprice, array(0.01, 0.99))")
-                .cast("array<double>").alias("_fq"))
-        else:
-            _WINSOR_FENCES_CACHE[key] = exact_percentiles_frame(
-                l, "l_extendedprice", [0.01, 0.99], alias="_fq")
-    return _WINSOR_FENCES_CACHE[key]
+    from felixzh_flink_spark.operators.profiling import (
+        exact_percentiles_frame)
+    l = _t(spark, sf_dir, "lineitem")
+    if _approx_percentiles(spark, sf_dir):
+        return l.agg(F.expr(
+            "approx_percentile(l_extendedprice, array(0.01, 0.99))")
+            .cast("array<double>").alias("_fq"))
+    return exact_percentiles_frame(
+        l, "l_extendedprice", [0.01, 0.99], alias="_fq")
 
 
-_PSI_EDGES_CACHE: dict[tuple[str, bool], object] = {}
+@session_memo
+def _psi_edges(spark, sf_dir):
+    """Lazy percentile-edges frame for `psi_price_drift`, memoized per
+    sf_dir: a 1-row lazy plan (no collect, no job) whose CONSTRUCTION
+    costs ~0.25 s of Catalyst analysis — per-call that was the query's
+    plan_s tail."""
+    from felixzh_flink_spark.operators.profiling import (
+        percentiles_frame)
+    ref = (_t(spark, sf_dir, "lineitem")
+           .filter(F.col("l_orderkey") % 2 == 0)
+           .select(F.col("l_extendedprice").alias("v")))
+    return percentiles_frame(ref, "v", [0.25, 0.5, 0.75],
+                             approx=_approx_percentiles(spark, sf_dir))
 
 
-def _psi_edges(spark, sf_dir, approx: bool):
-    """Lazy percentile-edges frame for `psi_price_drift`, cached per
-    (sf_dir, approx): a 1-row lazy plan (no collect, no job) whose
-    CONSTRUCTION costs ~0.25 s of Catalyst analysis — per-call that was
-    the query's plan_s tail."""
-    key = (sf_dir, approx)
-    if key not in _PSI_EDGES_CACHE:
-        from felixzh_flink_spark.operators.profiling import (
-            percentiles_frame)
-        ref = (_t(spark, sf_dir, "lineitem")
-               .filter(F.col("l_orderkey") % 2 == 0)
-               .select(F.col("l_extendedprice").alias("v")))
-        _PSI_EDGES_CACHE[key] = percentiles_frame(
-            ref, "v", [0.25, 0.5, 0.75], approx=approx)
-    return _PSI_EDGES_CACHE[key]
-
-
-_VECS3_CACHE: dict[str, dict[int, list[float]]] = {}
-
-
+@session_memo
 def _query_vecs3(spark, sf_dir) -> dict[int, list[float]]:
     """The three multi-query probe vectors (vec_id 0/1/2), collected
     once per sf_dir: the per-call collect was a small Spark JOB inside
     plan construction — ~0.1 s of cosine_topk_multi's plan_s tail
     (round-7 verdict item 3)."""
-    if sf_dir not in _VECS3_CACHE:
-        rows = (_t(spark, sf_dir, "embeddings")
-                .filter(F.col("vec_id").isin(0, 1, 2))
-                .select("vec_id", "embedding").collect())
-        _VECS3_CACHE[sf_dir] = {int(r["vec_id"]): list(r["embedding"])
-                                for r in rows}
-    return _VECS3_CACHE[sf_dir]
+    rows = (_t(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id").isin(0, 1, 2))
+            .select("vec_id", "embedding").collect())
+    return {int(r["vec_id"]): list(r["embedding"]) for r in rows}
 
 
+@session_memo
 def _query_vec(spark, sf_dir) -> list[float]:
-    if sf_dir not in _VEC_CACHE:
-        row = (
-            _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
-            .select("embedding").head()
-        )
-        _VEC_CACHE[sf_dir] = list(row["embedding"])
-    return _VEC_CACHE[sf_dir]
+    row = (
+        _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0)
+        .select("embedding").head()
+    )
+    return list(row["embedding"])
 
 
+@session_memo
 def _ivf_index(spark, sf_dir, n_centroids: int = 16) -> list[list[float]]:
-    key = (sf_dir, n_centroids)
-    if key not in _IVF_CACHE:
-        e = _t(spark, sf_dir, "embeddings")
-        _IVF_CACHE[key] = SIM.ivf_centroids(e, n_centroids)
-    return _IVF_CACHE[key]
+    e = _t(spark, sf_dir, "embeddings")
+    return SIM.ivf_centroids(e, n_centroids)
 
 
 #: per-sf_dir path of the MATERIALIZED cell-partitioned IVF index — built
-#: once per process (an ingest-time artifact, like any real ANN index) so
+#: once per session (an ingest-time artifact, like any real ANN index) so
 #: every probe is partition pruning over the written layout, never an
 #: assign-the-whole-table-at-query-time scan.
-_IVF_INDEX_PATH: dict[tuple[str, int], str] = {}
-
-
+@session_memo
 def _ivf_index_path(spark, sf_dir, n_centroids: int = 16) -> str:
-    key = (sf_dir, n_centroids)
-    if key not in _IVF_INDEX_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_ivf_")
-        SIM.write_ivf_index(_t(spark, sf_dir, "embeddings"), path,
-                            _ivf_index(spark, sf_dir, n_centroids))
-        _IVF_INDEX_PATH[key] = path
-    return _IVF_INDEX_PATH[key]
+    path = artifact_dir("ivf_")
+    SIM.write_ivf_index(_t(spark, sf_dir, "embeddings"), path,
+                        _ivf_index(spark, sf_dir, n_centroids))
+    return path
 
 
 #: per-(sf_dir, k) materialized TRAINED-centroid cell layout (vs
@@ -3871,19 +3791,13 @@ def _ivf_index_path(spark, sf_dir, n_centroids: int = 16) -> str:
 #: the PQ semantic-dedup path scans so cell routing is never re-derived
 #: at query time (the O(n × cells × dim) assignment pass dominated the
 #: sf10 wall once pair scoring was fixed).
-_IVF_TRAINED_INDEX_PATH: dict[tuple[str, int], str] = {}
-
-
+@session_memo
 def _ivf_trained_index_path(spark, sf_dir, k: int) -> str:
-    key = (sf_dir, k)
-    if key not in _IVF_TRAINED_INDEX_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_ivft_")
-        SIM.write_ivf_index(_t(spark, sf_dir, "embeddings"), path,
-                            _ivf_trained(spark, sf_dir, k),
-                            books=_pq_books_semantic(spark, sf_dir))
-        _IVF_TRAINED_INDEX_PATH[key] = path
-    return _IVF_TRAINED_INDEX_PATH[key]
+    path = artifact_dir("ivft_")
+    SIM.write_ivf_index(_t(spark, sf_dir, "embeddings"), path,
+                        _ivf_trained(spark, sf_dir, k),
+                        books=_pq_books_semantic(spark, sf_dir))
+    return path
 
 
 @q("cosine_topk", """
@@ -4155,19 +4069,14 @@ def rp_rerank_topk(spark, sf_dir):
 
 
 #: per-sf_dir path of the MATERIALIZED (id, proj, vec) two-stage
-#: retrieval index — built once per process (`write_rp_index`, the same
+#: retrieval index — built once per session (`write_rp_index`, the same
 #: ingest lifecycle as the IVF/PQ index artifacts).
-_RP_INDEX_PATH: dict[str, str] = {}
-
-
+@session_memo
 def _rp_index_path(spark, sf_dir) -> str:
-    if sf_dir not in _RP_INDEX_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_rp_")
-        SIM.write_rp_index(_t(spark, sf_dir, "embeddings"), path,
-                           out_dim=16, in_dim=64)
-        _RP_INDEX_PATH[sf_dir] = path
-    return _RP_INDEX_PATH[sf_dir]
+    path = artifact_dir("rp_")
+    SIM.write_rp_index(_t(spark, sf_dir, "embeddings"), path,
+                       out_dim=16, in_dim=64)
+    return path
 
 
 @q("rp_rerank_indexed", _rp_rerank_oracle())
@@ -4193,20 +4102,15 @@ def rp_rerank_indexed(spark, sf_dir):
 #: 80% of the corpus (vec_id % 5 != 4), then `append_rp_index` encodes
 #: ONLY the remaining 20% delta and appends its files — the committed
 #: bulk generation is never rewritten (VERDICT r9 item 6).
-_RP_DELTA_INDEX_PATH: dict[str, str] = {}
-
-
+@session_memo
 def _rp_delta_index_path(spark, sf_dir) -> str:
-    if sf_dir not in _RP_DELTA_INDEX_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_rpd_")
-        e = _t(spark, sf_dir, "embeddings")
-        SIM.write_rp_index(e.filter(F.col("vec_id") % 5 != 4), path,
-                           out_dim=16, in_dim=64)
-        SIM.append_rp_index(e.filter(F.col("vec_id") % 5 == 4), path,
-                            out_dim=16, in_dim=64)
-        _RP_DELTA_INDEX_PATH[sf_dir] = path
-    return _RP_DELTA_INDEX_PATH[sf_dir]
+    path = artifact_dir("rpd_")
+    e = _t(spark, sf_dir, "embeddings")
+    SIM.write_rp_index(e.filter(F.col("vec_id") % 5 != 4), path,
+                       out_dim=16, in_dim=64)
+    SIM.append_rp_index(e.filter(F.col("vec_id") % 5 == 4), path,
+                        out_dim=16, in_dim=64)
+    return path
 
 
 @q("rp_rerank_delta_indexed", _rp_rerank_oracle())
@@ -4233,24 +4137,19 @@ def rp_rerank_delta_indexed(spark, sf_dir):
 #: (element-reversed — detectably wrong if served), and epoch 1 appends
 #: the true re-embeddings of exactly those ids. Serving must read
 #: latest-epoch-wins (`rp_index_latest`).
-_RP_UPSERT_INDEX_PATH: dict[str, str] = {}
-
-
+@session_memo
 def _rp_upsert_index_path(spark, sf_dir) -> str:
-    if sf_dir not in _RP_UPSERT_INDEX_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_rpu_")
-        e = _t(spark, sf_dir, "embeddings")
-        stale = e.withColumn(
-            "embedding",
-            F.when(F.col("vec_id") % 7 == 3, F.reverse("embedding"))
-            .otherwise(F.col("embedding")))
-        SIM.write_rp_index(stale, path, out_dim=16, in_dim=64, epoch=0)
-        SIM.append_rp_index(e.filter(F.col("vec_id") % 7 == 3), path,
-                            out_dim=16, in_dim=64, epoch=1,
-                            compact_after=2)
-        _RP_UPSERT_INDEX_PATH[sf_dir] = path
-    return _RP_UPSERT_INDEX_PATH[sf_dir]
+    path = artifact_dir("rpu_")
+    e = _t(spark, sf_dir, "embeddings")
+    stale = e.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") % 7 == 3, F.reverse("embedding"))
+        .otherwise(F.col("embedding")))
+    SIM.write_rp_index(stale, path, out_dim=16, in_dim=64, epoch=0)
+    SIM.append_rp_index(e.filter(F.col("vec_id") % 7 == 3), path,
+                        out_dim=16, in_dim=64, epoch=1,
+                        compact_after=2)
+    return path
 
 
 @q("rp_rerank_upsert_indexed", _rp_rerank_oracle())
@@ -4286,20 +4185,15 @@ def rp_rerank_upsert_indexed(spark, sf_dir):
 #: (mod 11) — left UNCOMPACTED (two live generations) so serving
 #: exercises the merge-on-read latest-wins read: the broadcast per-id
 #: newest-epoch join and the NULL-proj tombstone drop.
-_RP_TOMBSTONE_INDEX_PATH: dict[str, str] = {}
-
-
+@session_memo
 def _rp_tombstone_index_path(spark, sf_dir) -> str:
-    if sf_dir not in _RP_TOMBSTONE_INDEX_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_rpt_")
-        e = _t(spark, sf_dir, "embeddings")
-        SIM.write_rp_index(e, path, out_dim=16, in_dim=64, epoch=0)
-        SIM.delete_from_rp_index(
-            e.filter(F.col("vec_id") % 11 == 5).select("vec_id"),
-            path, epoch=1)
-        _RP_TOMBSTONE_INDEX_PATH[sf_dir] = path
-    return _RP_TOMBSTONE_INDEX_PATH[sf_dir]
+    path = artifact_dir("rpt_")
+    e = _t(spark, sf_dir, "embeddings")
+    SIM.write_rp_index(e, path, out_dim=16, in_dim=64, epoch=0)
+    SIM.delete_from_rp_index(
+        e.filter(F.col("vec_id") % 11 == 5).select("vec_id"),
+        path, epoch=1)
+    return path
 
 
 @q("rp_rerank_tombstone_indexed", _rp_rerank_oracle(
@@ -4483,26 +4377,18 @@ def quantized_embedding_checksums(spark, sf_dir):
 
 #: per-sf_dir PQ codebooks + materialized encoded table — ingest-time
 #: artifacts (train once, encode once), mirroring the IVF index lifecycle
-_PQ_BOOKS: dict[str, list] = {}
-_PQ_INDEX_PATH: dict[str, str] = {}
-
-
+@session_memo
 def _pq_books(spark, sf_dir):
-    if sf_dir not in _PQ_BOOKS:
-        _PQ_BOOKS[sf_dir] = SIM.pq_train(
-            _t(spark, sf_dir, "embeddings"), m=8, code_k=16)
-    return _PQ_BOOKS[sf_dir]
+    return SIM.pq_train(_t(spark, sf_dir, "embeddings"), m=8, code_k=16)
 
 
+@session_memo
 def _pq_index_path(spark, sf_dir):
-    if sf_dir not in _PQ_INDEX_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_pq_")
-        SIM.pq_encode(_t(spark, sf_dir, "embeddings"),
-                      _pq_books(spark, sf_dir)) \
-            .write.mode("overwrite").parquet(path)
-        _PQ_INDEX_PATH[sf_dir] = path
-    return _PQ_INDEX_PATH[sf_dir]
+    path = artifact_dir("pq_")
+    SIM.pq_encode(_t(spark, sf_dir, "embeddings"),
+                  _pq_books(spark, sf_dir)) \
+        .write.mode("overwrite").parquet(path)
+    return path
 
 
 @probe("ann_pq_topk")  # rows-only: approximate by construction
@@ -4557,21 +4443,16 @@ def ann_pq_checks(spark, sf_dir):
         "k_rows_ok", "codes_in_range", "sims_exact", "recall_ok")
 
 
-_IVFPQ_STATE: dict[str, tuple[str, list]] = {}
-
-
+@session_memo
 def _ivfpq_index(spark, sf_dir):
     """(path, books) of the materialized IVF-PQ index — built once per
     sf_dir (ingest artifact: assign cells, PQ-encode residuals, write
     partitioned by cell)."""
-    if sf_dir not in _IVFPQ_STATE:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_ivfpq_")
-        books = SIM.ivfpq_build(
-            _t(spark, sf_dir, "embeddings"), path,
-            _ivf_trained(spark, sf_dir, 16), m=8, code_k=16)
-        _IVFPQ_STATE[sf_dir] = (path, books)
-    return _IVFPQ_STATE[sf_dir]
+    path = artifact_dir("ivfpq_")
+    books = SIM.ivfpq_build(
+        _t(spark, sf_dir, "embeddings"), path,
+        _ivf_trained(spark, sf_dir, 16), m=8, code_k=16)
+    return path, books
 
 
 @probe("ann_ivfpq_topk")  # rows-only: approximate by construction
@@ -4711,7 +4592,7 @@ def semantic_dedup_keep(spark, sf_dir):
     flagged dup is exact-confirmed; recall trade pinned by
     `semantic_dedup_pq_checks`)."""
     e = _t_wide(spark, sf_dir, "embeddings")
-    n = _embeddings_n(spark, sf_dir)
+    n = _table_rows(spark, sf_dir, "embeddings")
     k = _semantic_k(n)
     if _semantic_use_pq(n):
         # scan the materialized trained-cell index (ivf_cell rides as a
@@ -4738,7 +4619,7 @@ def embedding_near_dup(spark, sf_dir):
     bucket population — and therefore the within-bucket pair term —
     constant per row."""
     e = _t_wide(spark, sf_dir, "embeddings")
-    planes = _near_dup_planes(_embeddings_n(spark, sf_dir))
+    planes = _near_dup_planes(_table_rows(spark, sf_dir, "embeddings"))
     return SIM.embedding_near_dup_pairs(e, threshold=0.4, n_planes=planes)
 
 
@@ -4792,19 +4673,14 @@ def ann_ivf_checks(spark, sf_dir):
 #: 80% of ids against the committed centroids, then `append_ivf_index`
 #: assigns ONLY the 20% delta against the SAME frozen centroids and
 #: appends into the cell directories (VERDICT r9 item 6, IVF face).
-_IVF_DELTA_INDEX_PATH: dict[str, str] = {}
-
-
+@session_memo
 def _ivf_delta_index_path(spark, sf_dir) -> str:
-    if sf_dir not in _IVF_DELTA_INDEX_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_ivfd_")
-        cents = _ivf_index(spark, sf_dir, 16)
-        e = _t(spark, sf_dir, "embeddings")
-        SIM.write_ivf_index(e.filter(F.col("vec_id") % 5 != 4), path, cents)
-        SIM.append_ivf_index(e.filter(F.col("vec_id") % 5 == 4), path, cents)
-        _IVF_DELTA_INDEX_PATH[sf_dir] = path
-    return _IVF_DELTA_INDEX_PATH[sf_dir]
+    path = artifact_dir("ivfd_")
+    cents = _ivf_index(spark, sf_dir, 16)
+    e = _t(spark, sf_dir, "embeddings")
+    SIM.write_ivf_index(e.filter(F.col("vec_id") % 5 != 4), path, cents)
+    SIM.append_ivf_index(e.filter(F.col("vec_id") % 5 == 4), path, cents)
+    return path
 
 
 @q("ann_ivf_delta_checks", """
@@ -4855,27 +4731,22 @@ def ann_ivf_delta_checks(spark, sf_dir):
 #: epoch 1 upserts their true re-embeddings (a newer generation — the
 #: new vector may land in a DIFFERENT cell); epoch 2 deletes every id
 #: ≡ 5 (mod 11). Served through the latest-wins probe.
-_IVF_TOMB_INDEX_PATH: dict[str, str] = {}
-
-
+@session_memo
 def _ivf_tomb_index_path(spark, sf_dir) -> str:
-    if sf_dir not in _IVF_TOMB_INDEX_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_ivft_")
-        cents = _ivf_index(spark, sf_dir, 16)
-        e = _t(spark, sf_dir, "embeddings")
-        stale = e.withColumn(
-            "embedding",
-            F.when(F.col("vec_id") % 7 == 3, F.reverse("embedding"))
-            .otherwise(F.col("embedding")))
-        SIM.write_ivf_index(stale, path, cents)
-        SIM.upsert_ivf_index(e.filter(F.col("vec_id") % 7 == 3), path,
-                             cents, epoch=1)
-        SIM.delete_from_ivf_index(
-            e.filter(F.col("vec_id") % 11 == 5).select("vec_id"),
-            path, epoch=2)
-        _IVF_TOMB_INDEX_PATH[sf_dir] = path
-    return _IVF_TOMB_INDEX_PATH[sf_dir]
+    path = artifact_dir("ivftomb_")
+    cents = _ivf_index(spark, sf_dir, 16)
+    e = _t(spark, sf_dir, "embeddings")
+    stale = e.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") % 7 == 3, F.reverse("embedding"))
+        .otherwise(F.col("embedding")))
+    SIM.write_ivf_index(stale, path, cents)
+    SIM.upsert_ivf_index(e.filter(F.col("vec_id") % 7 == 3), path,
+                         cents, epoch=1)
+    SIM.delete_from_ivf_index(
+        e.filter(F.col("vec_id") % 11 == 5).select("vec_id"),
+        path, epoch=2)
+    return path
 
 
 @q("ann_ivf_tombstone_checks", """
@@ -4948,7 +4819,7 @@ def semantic_dedup_checks(spark, sf_dir):
     precompute, or a nondeterministic cell assignment flips a boolean.
     DuckDB oracle is the constant-true row."""
     e = _t_wide(spark, sf_dir, "embeddings")
-    k = _semantic_k(_embeddings_n(spark, sf_dir))
+    k = _semantic_k(_table_rows(spark, sf_dir, "embeddings"))
     cents = _ivf_trained(spark, sf_dir, k)
     res = SIM.semantic_dedup(e, threshold=0.5, cents=cents,
                              max_cell_size=10_000,
@@ -5028,7 +4899,7 @@ def semantic_dedup_pq_checks(spark, sf_dir):
     # (~8 evaluations per run). One eager materialization of the (id, vec)
     # frame serves them all; centroids/codebooks proven bit-identical.
     corpus = e.unionByName(planted).localCheckpoint(eager=True)
-    k = _semantic_k(_embeddings_n(spark, sf_dir))
+    k = _semantic_k(_table_rows(spark, sf_dir, "embeddings"))
     # ONE hash-ordered TakeOrdered seeds BOTH trainings (r12): the IVF
     # init is the first k rows and the PQ init the first 32 rows of the
     # same xxhash64(id) ordering — previously two separate corpus scans
@@ -5101,7 +4972,7 @@ def embedding_near_dup_checks(spark, sf_dir):
     e = _t_wide(spark, sf_dir, "embeddings")
     pairs = SIM.embedding_near_dup_pairs(
         e, threshold=0.4,
-        n_planes=_near_dup_planes(_embeddings_n(spark, sf_dir)))
+        n_planes=_near_dup_planes(_table_rows(spark, sf_dir, "embeddings")))
     base = e.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
     pa = (pairs
           .join(base.select(F.col("id").alias("id_a"), F.col("v").alias("va")),
@@ -7308,21 +7179,16 @@ def bigram_doc_nll(spark, sf_dir):
     return TX.bigram_nll_score(d, _bigram_lm(spark, sf_dir))
 
 
-#: per-sf_dir path of the materialized bigram LM (bg, logp) — built once
-#: per process, the same ingest lifecycle as the tfidf/bm25 stats
+#: per-sf_dir scan of the materialized bigram LM (bg, logp) — built once
+#: per session, the same ingest lifecycle as the tfidf/bm25 stats
 #: artifacts (a reference-corpus LM is trained once and versioned, not
 #: re-derived per scoring batch).
-_BIGRAM_LM_PATH: dict[str, str] = {}
-
-
+@session_memo
 def _bigram_lm(spark, sf_dir):
-    if sf_dir not in _BIGRAM_LM_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_bigram_lm_")
-        TX.train_bigram_lm(_t_wide(spark, sf_dir, "documents")) \
-            .write.mode("overwrite").parquet(path)
-        _BIGRAM_LM_PATH[sf_dir] = path
-    return spark.read.parquet(_BIGRAM_LM_PATH[sf_dir])
+    path = artifact_dir("bigram_lm_")
+    TX.train_bigram_lm(_t_wide(spark, sf_dir, "documents")) \
+        .write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
 
 
 @q("cut_spans_docs", r"""
@@ -7402,12 +7268,11 @@ def delta_dedup_status(spark, sf_dir):
 #: per-sf_dir path of the committed-corpus MinHash SIGNATURE INDEX —
 #: `neardup_incremental`'s documented ingest artifact ("a real deployment
 #: appends signatures at ingest exactly like `append_rp_index` appends
-#: projections"), built once per process like `_ivf_index_path` so every
+#: projections"), built once per session like `_ivf_index_path` so every
 #: timed probe reads the index instead of re-signing the whole corpus.
 #: Bit-parity of the precomputed-signature path is unit-proven
 #: (test: corpus_sigs ≡ in-plan signatures — integer signatures, exact
 #: parquet round-trip).
-_NEARDUP_SIG_PATH: dict[str, str] = {}
 
 
 def _neardup_corpus(spark, sf_dir):
@@ -7415,15 +7280,13 @@ def _neardup_corpus(spark, sf_dir):
         .filter(F.col("doc_id") % 10 < 8).select("doc_id", "text")
 
 
+@session_memo
 def _neardup_corpus_sigs(spark, sf_dir):
-    if sf_dir not in _NEARDUP_SIG_PATH:
-        import tempfile
-        path = tempfile.mkdtemp(prefix="spark_graft_ndsig_")
-        DD.minhash_signatures(_neardup_corpus(spark, sf_dir),
-                              n=5, num_perm=64) \
-            .write.mode("overwrite").parquet(path)
-        _NEARDUP_SIG_PATH[sf_dir] = path
-    return spark.read.parquet(_NEARDUP_SIG_PATH[sf_dir])
+    path = artifact_dir("ndsig_")
+    DD.minhash_signatures(_neardup_corpus(spark, sf_dir),
+                          n=5, num_perm=64) \
+        .write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
 
 
 @q("neardup_delta_status", r"""
@@ -7852,7 +7715,7 @@ def pagerank_scores(spark, sf_dir):
     fixed round count, rank state localCheckpoint'd."""
     from felixzh_flink_spark.operators.graph import pagerank
 
-    n = _documents_n(spark, sf_dir)
+    n = _table_rows(spark, sf_dir, "documents")
     d = _t(spark, sf_dir, "documents").select("doc_id")
     deg = F.lit(1) + F.col("doc_id") % 3
     edges = (d.filter(F.col("doc_id") % 17 != 0)
@@ -7977,7 +7840,7 @@ def crawl_rank_weighted(spark, sf_dir):
     keep-best is one fingerprint-keyed window shuffle."""
     from felixzh_flink_spark.operators.graph import pagerank
 
-    n = _documents_n(spark, sf_dir)
+    n = _table_rows(spark, sf_dir, "documents")
     d = (_t_wide(spark, sf_dir, "documents")
          .select("doc_id",
                  F.coalesce(F.col("text"), F.lit("")).alias("text")))
@@ -8276,17 +8139,13 @@ ORDER BY bm25 DESC, doc_id
 LIMIT {k}"""
 
 
-#: per-sf_dir cached BM25 corpus statistics — exact integers computed
+#: per-sf_dir memoized BM25 corpus statistics — exact integers computed
 #: ONCE (`bm25_corpus_stats`, the ingest artifact), so the registered
 #: query plans and runs as a single scan + TakeOrdered.
-_BM25_STATS_CACHE: dict[str, tuple[int, list[int]]] = {}
-
-
+@session_memo
 def _bm25_stats(spark, sf_dir):
-    if sf_dir not in _BM25_STATS_CACHE:
-        _BM25_STATS_CACHE[sf_dir] = TX.bm25_corpus_stats(
-            _t_wide(spark, sf_dir, "documents"), _BM25_TERMS)
-    return _BM25_STATS_CACHE[sf_dir]
+    return TX.bm25_corpus_stats(_t_wide(spark, sf_dir, "documents"),
+                                _BM25_TERMS)
 
 
 @q("bm25_topk_docs", _bm25_oracle())
@@ -8303,7 +8162,7 @@ def bm25_topk_docs(spark, sf_dir):
     tie-break. N rides the parquet footer. The oracle replays
     tokenization, stats from the base table, the fixed-order term sum,
     and the quantized ranking."""
-    n = _documents_n(spark, sf_dir)
+    n = _table_rows(spark, sf_dir, "documents")
     return TX.bm25_topk(_t_wide(spark, sf_dir, "documents"), _BM25_TERMS,
                         k=10, k1=1.2, b=0.75, n_docs=n,
                         stats=_bm25_stats(spark, sf_dir))
@@ -8715,16 +8574,12 @@ _BM25_QUERY_BAGS = {
     2: ["scan", "filter", "vector"],
 }
 
-_BM25_MULTI_STATS_CACHE: dict[str, tuple[int, list[int]]] = {}
-
-
+@session_memo
 def _bm25_multi_stats(spark, sf_dir):
-    if sf_dir not in _BM25_MULTI_STATS_CACHE:
-        union_terms = sorted(
-            {t for bag in _BM25_QUERY_BAGS.values() for t in bag})
-        _BM25_MULTI_STATS_CACHE[sf_dir] = TX.bm25_corpus_stats(
-            _t_wide(spark, sf_dir, "documents"), union_terms)
-    return _BM25_MULTI_STATS_CACHE[sf_dir]
+    union_terms = sorted(
+        {t for bag in _BM25_QUERY_BAGS.values() for t in bag})
+    return TX.bm25_corpus_stats(_t_wide(spark, sf_dir, "documents"),
+                                union_terms)
 
 
 def _bm25_multi_oracle(k: int = 10) -> str:
@@ -8754,7 +8609,7 @@ def bm25_topk_multi_docs(spark, sf_dir):
     proven single-query BM25 SQL — per-query rows must equal N
     single-query runs exactly (also unit-pinned against
     `text.bm25_topk` itself)."""
-    n = _documents_n(spark, sf_dir)
+    n = _table_rows(spark, sf_dir, "documents")
     return TX.bm25_topk_multi(
         _t_wide(spark, sf_dir, "documents"), _BM25_QUERY_BAGS,
         k=10, k1=1.2, b=0.75, n_docs=n,
@@ -8805,7 +8660,7 @@ def hybrid_rrf_topk(spark, sf_dir):
     flips the hash."""
     docs = _t_wide(spark, sf_dir, "documents")
     b = TX.bm25_topk(docs, _BM25_TERMS, k=50, k1=1.2, b=0.75,
-                     n_docs=_documents_n(spark, sf_dir),
+                     n_docs=_table_rows(spark, sf_dir, "documents"),
                      stats=_bm25_stats(spark, sf_dir))
     e = _t_wide(spark, sf_dir, "embeddings")
     v = SIM.rp_rerank_topk(e, _query_vec(spark, sf_dir), k=50, prek=100)
@@ -8840,7 +8695,7 @@ def lr_quality_weights(spark, sf_dir):
         lr_train_gd,
     )
 
-    n = _documents_n(spark, sf_dir)
+    n = _table_rows(spark, sf_dir, "documents")
     feats = (_t_wide(spark, sf_dir, "documents")
              .select(*_lr_features_col())
              .localCheckpoint(eager=True))
@@ -9344,13 +9199,14 @@ def winsorized_price_stats(spark, sf_dir):
     its [p01, p99] band. Spark's exact `percentile` and DuckDB's
     `quantile_cont` share the rank = p·(n−1) interpolation formula
     bit-for-bit (verified), so the clamped decimal-exact sum and fence
-    values hash-match. Scale switch: at sf ≥ 1 the fences come from the
-    mergeable t-digest-style `approx_percentile` (same clamp, same plan
-    shape, one map-combined pass) — exact below, where the oracle runs
-    and contracts bit parity."""
+    values hash-match. Scale switch (`_approx_percentiles`): once
+    lineitem holds ≥ 6M rows the fences come from the mergeable
+    t-digest-style `approx_percentile` (same clamp, same plan shape, one
+    map-combined pass) — exact below, where the oracle runs and
+    contracts bit parity."""
     from felixzh_flink_spark.operators.profiling import winsorize
     l = _t(spark, sf_dir, "lineitem")
-    w = winsorize(l, "l_extendedprice", approx=_sf_of(sf_dir) >= 1,
+    w = winsorize(l, "l_extendedprice",
                   fences=_winsor_fences(spark, sf_dir))
     return w.agg(
         F.sum(F.when(F.col("l_extendedprice_clamped") == -1, 1)
@@ -9402,11 +9258,12 @@ def psi_price_drift(spark, sf_dir):
     from the reference half's quartiles via `profiling.psi_drift` —
     derive-edges + bin + PSI is one job, no driver round-trip; term
     arithmetic is the identical double expression on both sides. Scale
-    switch: below sf 1 (where the oracle contracts bit-exact
-    quantile_cont parity) edges use the exact two-phase rank machinery;
-    at sf ≥ 1 the mergeable approx_percentile sketch takes over (one
-    map-combined pass instead of a full column shuffle+sort — drift
-    bins don't need exact fences at 100 TB)."""
+    switch (`_approx_percentiles`): below 6M lineitem rows (where the
+    oracle contracts bit-exact quantile_cont parity) edges use the exact
+    two-phase rank machinery; from 6M rows the mergeable
+    approx_percentile sketch takes over (one map-combined pass instead
+    of a full column shuffle+sort — drift bins don't need exact fences
+    at 100 TB)."""
     from felixzh_flink_spark.operators.profiling import psi_report
     l = _t(spark, sf_dir, "lineitem")
     # ref and cur are the two halves of the SAME table, so they ride
@@ -9422,8 +9279,7 @@ def psi_price_drift(spark, sf_dir):
     # tail (r7 verdict item 3). psi_report re-substitutes it fresh each
     # call, so the composed plan is identical to the uncached form.
     return psi_report(None, None, "v",
-                      _psi_edges(spark, sf_dir, approx=_sf_of(sf_dir) >= 1),
-                      n_edges=3, tagged=tagged)
+                      _psi_edges(spark, sf_dir), n_edges=3, tagged=tagged)
 
 
 @q("interleaved_training_order", """

@@ -958,9 +958,7 @@ def test_merge_state_sink_replay_and_crash_recover_to_reference(
 
 
 @pytest.mark.parametrize("case,max_evals", [
-    ("cms", 1), ("hll", 1), ("incremental_agg", 1),
-    # bm25's delta unions two aggregates over one tokenization
-    ("bm25", 2)])
+    ("cms", 1), ("hll", 1), ("incremental_agg", 1), ("bm25", 1)])
 def test_merge_state_sink_evaluates_batch_once_per_delta(
         spark, tmp_path, case, max_evals):
     """The delta is persisted: the touched-bucket collect and the state

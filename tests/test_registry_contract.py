@@ -37,22 +37,21 @@ def test_oracles_subset_of_queries():
 
 
 def test_corpus_size_switches_are_metadata_only(sf_dir):
-    """The corpus-scale switches (`_documents_n`/`_embeddings_n`) must
-    read parquet FOOTER metadata, never run a Spark job (round-7
-    verdict item 5: a cold session on a 100-TB table must not pay a
-    scan-shaped count() before its first query). Passing spark=None
-    pins that structurally — any fallback to count() would crash."""
+    """The corpus-scale switches (`_table_rows`) must read parquet
+    FOOTER metadata, never run a Spark job (round-7 verdict item 5: a
+    cold session on a 100-TB table must not pay a scan-shaped count()
+    before its first query). Passing spark=None pins that structurally
+    — any fallback to count() would crash, and a None session is a
+    context of its own, so no memo entry of another session answers."""
     import felixzh_flink_spark.queries as Q
 
-    Q._DOC_N_CACHE.pop(sf_dir, None)
-    Q._EMB_N_CACHE.pop(sf_dir, None)
     import duckdb
     want_docs = duckdb.sql(
         f"SELECT COUNT(*) FROM '{sf_dir}/documents.parquet'").fetchone()[0]
     want_emb = duckdb.sql(
         f"SELECT COUNT(*) FROM '{sf_dir}/embeddings.parquet'").fetchone()[0]
-    assert Q._documents_n(None, sf_dir) == want_docs
-    assert Q._embeddings_n(None, sf_dir) == want_emb
+    assert Q._table_rows(None, sf_dir, "documents") == want_docs
+    assert Q._table_rows(None, sf_dir, "embeddings") == want_emb
 
 
 def test_footer_rows_handles_directories(tmp_path):

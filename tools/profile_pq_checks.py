@@ -45,7 +45,7 @@ for rep in range(2):
                " as array<float>)").alias("embedding"))
     corpus = e.unionByName(planted).localCheckpoint(eager=True)
     mark("corpus checkpoint")
-    k = Q._semantic_k(Q._embeddings_n(spark, sf_dir))
+    k = Q._semantic_k(Q._table_rows(spark, sf_dir, "embeddings"))
     init = SIM.ivf_centroids(corpus, max(k, 32))
     mark(f"shared init (k={k})")
     cents = init[:k]
