@@ -641,7 +641,9 @@ def bm25_stats_read(spark, state_dir: str,
     tuple `bm25_topk(stats=...)` takes, the second its `n_docs`. Only
     the totals row and the |query| term rows are fetched (a handful of
     rows out of O(vocabulary) state — point lookups, never a scan of
-    raw documents)."""
+    raw documents). A zero-row batch commits nothing, so before the
+    first non-empty batch there is no state and this raises
+    FileNotFoundError, as reading the cms and hll sketch state does."""
     from felixzh_flink_spark.functions.changelog import read_upsert_state
 
     st = read_upsert_state(spark, state_dir)

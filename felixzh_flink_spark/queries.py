@@ -2449,6 +2449,13 @@ def _orders_canal_envelopes(spark, sf_dir, keep_key: bool = False):
     return o.select(*cols)
 
 
+def _orders_canal_keyed_envelopes(spark, sf_dir):
+    """`_orders_canal_envelopes` with o_orderkey kept — a module-level
+    builder, so its `_materialized_envelopes` memo key is the same on
+    every query build."""
+    return _orders_canal_envelopes(spark, sf_dir, keep_key=True)
+
+
 @q("canal_decode", """
 SELECT '+I' AS op, epoch_ms(o_orderdate) AS ts_ms, o_orderkey, o_custkey, o_totalprice
 FROM orders WHERE o_orderstatus = 'O'
@@ -2595,9 +2602,8 @@ def canal_quarantine_counts(spark, sf_dir):
     malformed JSON; good rows must still decode (O/P → 1 op, F → -U/+U
     pair) and every corrupted record must land in the quarantine frame
     with a reason instead of silently vanishing."""
-    env = _materialized_envelopes(
-        spark, sf_dir, "canal_keyed",
-        lambda s, d: _orders_canal_envelopes(s, d, keep_key=True))
+    env = _materialized_envelopes(spark, sf_dir, "canal_keyed",
+                                  _orders_canal_keyed_envelopes)
     corrupted = env.select(
         F.when(F.col("o_orderkey") % 7 == 0,
                F.substring("value", 1, 15))     # cut mid-JSON: unparseable

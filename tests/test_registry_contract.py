@@ -36,14 +36,18 @@ def test_oracles_subset_of_queries():
     assert set(ORACLES) <= set(QUERIES)
 
 
-def test_corpus_size_switches_are_metadata_only(sf_dir):
+def test_corpus_size_switches_are_metadata_only(sf_dir, monkeypatch):
     """The corpus-scale switches (`_table_rows`) must read parquet
     FOOTER metadata, never run a Spark job (round-7 verdict item 5: a
     cold session on a 100-TB table must not pay a scan-shaped count()
     before its first query). Passing spark=None pins that structurally
-    — any fallback to count() would crash, and a None session is a
-    context of its own, so no memo entry of another session answers."""
+    — any fallback to count() would crash. The memo is swapped for an
+    empty one, so no entry answers and the session's entries survive."""
+    import felixzh_flink_spark.catalog as C
     import felixzh_flink_spark.queries as Q
+
+    monkeypatch.setattr(C, "_memo", {})
+    monkeypatch.setattr(C, "_memo_ctx", None)
 
     import duckdb
     want_docs = duckdb.sql(

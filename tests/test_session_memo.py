@@ -51,6 +51,33 @@ def test_session_memo_builds_once_per_context(monkeypatch):
     assert artifact(new, "/d", k=16) is b and len(builds) == 4
 
 
+def test_envelope_builds_once_per_session(spark, sf_dir, monkeypatch):
+    """Every envelope family is one memo entry per session, so building
+    a decode query again reuses the materialized topic stand-in instead
+    of re-synthesizing and re-writing it. The builder each query passes
+    is part of the key: it must be the same object on every build."""
+    import felixzh_flink_spark.queries as Q
+
+    builds = []
+    canal = Q._orders_canal_envelopes
+
+    def counting(spark, sf_dir, keep_key=False):
+        builds.append(keep_key)
+        return canal(spark, sf_dir, keep_key)
+
+    monkeypatch.setattr(Q, "_orders_canal_envelopes", counting)
+
+    def entries():
+        return [k for k in C._memo
+                if k[0] is Q._materialized_envelopes.__wrapped__
+                and k[1] == sf_dir and k[2][0] == "canal_keyed"]
+
+    Q.QUERIES["canal_quarantine_counts"](spark, sf_dir)
+    Q.QUERIES["canal_quarantine_counts"](spark, sf_dir)
+    assert len(entries()) == 1
+    assert builds in ([], [True])
+
+
 def test_profiling_queries_survive_a_session_restart(sf_dir):
     """The percentile fences and PSI edges are lazy frames bound to the
     session that built them. Run both queries, stop the session, start a
