@@ -608,8 +608,12 @@ def cdc_bootstrap_state(snapshot: DataFrame, state_dir: str, pk: list[str],
     Snapshot rows are stamped +I at `snapshot_order_value`, which must
     PRE-DATE every streamed change's `order_col` — a change captured while
     the snapshot ran then still wins the per-key ordering, exactly the
-    at-least-once overlap contract CDC connectors give. Idempotent: re-runs
-    rewrite the same bootstrap epoch."""
+    at-least-once overlap contract CDC connectors give. Idempotent: a
+    re-run over a state dir whose manifest already lists buckets commits
+    nothing, so it cannot resurrect keys the stream has since deleted or
+    roll back their updates."""
+    if _read_manifest(snapshot.sparkSession, state_dir)["buckets"]:
+        return
     batch = snapshot.withColumn("op", F.lit(OP_INSERT))
     if order_col not in snapshot.columns:
         batch = batch.withColumn(order_col, F.lit(snapshot_order_value).cast("long"))

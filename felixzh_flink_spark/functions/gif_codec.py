@@ -13,8 +13,13 @@ variable-width code reads, dictionary growth and reset, the KwKwK
 special case, de-interlacing — is verified end-to-end in a hash.
 
 Supported envelope: single-image GIFs, global or local color table,
-optional interlace, extensions skipped. Outside it → ValueError (wrong-
-but-plausible pixels are worse than a loud error in a data pipeline).
+optional interlace, extensions skipped; animations and delta frames
+through `decode_gif_frames` / `composite_gif_frames`. Outside it →
+ValueError (wrong-but-plausible pixels are worse than a loud error in
+a data pipeline). The three decoders share one block walker
+(`_walk_gif`) and differ only in the envelope rules they apply; the
+three encoders share one header writer (`_gif_header`) and one image
+block writer (`_gif_image`).
 """
 
 from __future__ import annotations
@@ -166,44 +171,86 @@ def _sub_blocks(data: bytes) -> bytes:
     return bytes(out)
 
 
+def _gif_header(width: int, height: int, palette: bytes,
+                background: int = 0, loop: bool = False
+                ) -> tuple[bytearray, int, int]:
+    """The one header writer: palette check, GIF89a logical screen
+    descriptor with the global color table, and (for animations) the
+    NETSCAPE2.0 loop-forever application extension. Returns (output so
+    far, palette entry count, LZW min code size)."""
+    n_colors = len(palette) // 3
+    if len(palette) != n_colors * 3 or n_colors < 2 or \
+            n_colors & (n_colors - 1) or n_colors > 256:
+        raise ValueError("palette must be 2^k RGB entries, k in 1..8")
+    if not 0 <= background < n_colors:
+        raise ValueError("background index out of palette range")
+    gct_bits = max(1, n_colors.bit_length() - 1)
+    out = bytearray(b"GIF89a")
+    out += struct.pack("<HH", width, height)
+    out += bytes([0x80 | (gct_bits - 1) << 4 | (gct_bits - 1),
+                  background, 0])
+    out += palette
+    if loop:                          # walkers must skip it
+        out += bytes([_EXTENSION, _APP_LABEL, 11]) + b"NETSCAPE2.0"
+        out += bytes([3, 1, 0, 0, 0])
+    return out, n_colors, max(2, gct_bits)
+
+
+def _gif_image(out: bytearray, rect: tuple, indices: bytes, n_colors: int,
+               min_code_size: int, interlace: bool = False,
+               gce: tuple | None = None) -> None:
+    """The one image-block writer: an optional Graphic Control
+    Extension `gce` = (delay_ms, packed flags, transparent index), the
+    image descriptor for `rect` = (left, top, w, h) (no local color
+    table), then the LZW data in 255-byte sub-blocks, rows in 4-pass
+    order when interlaced."""
+    left, top, w, h = rect
+    if len(indices) != w * h:
+        raise ValueError("frame index stream length != w*h")
+    if indices and max(indices) >= n_colors:
+        raise ValueError("index out of palette range")
+    if gce is not None:
+        delay_ms, packed, transparent = gce
+        if delay_ms < 0 or delay_ms % 10 or delay_ms // 10 > 0xFFFF:
+            raise ValueError("delay_ms must be a multiple of 10 in "
+                             "[0, 655350]")
+        out += bytes([_EXTENSION, _GCE_LABEL, 4, packed])
+        out += struct.pack("<H", delay_ms // 10)
+        out += bytes([transparent, 0])
+    out += bytes([_IMAGE_SEP]) + struct.pack("<HHHH", left, top, w, h)
+    out += bytes([0x40 if interlace else 0x00])
+    if interlace:
+        indices = b"".join(indices[r * w:(r + 1) * w]
+                           for r in _interlace_rows(h))
+    out += bytes([min_code_size])
+    out += _sub_blocks(_lzw_encode(indices, min_code_size))
+
+
 def encode_gif(width: int, height: int, indices: bytes, palette: bytes,
                interlace: bool = False) -> bytes:
     """Encode a single-image GIF89a. `indices` is the row-major pixel
     index stream (len == width*height); `palette` is packed RGB bytes
     whose entry count must be a power of two in [2, 256]."""
-    n_colors = len(palette) // 3
-    if len(palette) != n_colors * 3 or n_colors < 2 or \
-            n_colors & (n_colors - 1) or n_colors > 256:
-        raise ValueError("palette must be 2^k RGB entries, k in 1..8")
-    if len(indices) != width * height:
-        raise ValueError("index stream length != width*height")
-    if indices and max(indices) >= n_colors:
-        raise ValueError("index out of palette range")
-    gct_bits = max(1, n_colors.bit_length() - 1)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", width, height)
-    out += bytes([0x80 | (gct_bits - 1) << 4 | (gct_bits - 1), 0, 0])
-    out += palette
-    # image descriptor (no local color table)
-    out += bytes([_IMAGE_SEP]) + struct.pack("<HHHH", 0, 0, width, height)
-    out += bytes([0x40 if interlace else 0x00])
-    if interlace:
-        rows = _interlace_rows(height)
-        stream = b"".join(indices[r * width:(r + 1) * width] for r in rows)
-    else:
-        stream = indices
-    min_code_size = max(2, gct_bits)
-    out += bytes([min_code_size])
-    out += _sub_blocks(_lzw_encode(stream, min_code_size))
+    out, n_colors, min_code_size = _gif_header(width, height, palette)
+    _gif_image(out, (0, 0, width, height), indices, n_colors,
+               min_code_size, interlace)
     out.append(_TRAILER)
     return bytes(out)
 
 
-def decode_gif(payload: bytes) -> tuple[int, int, bytes, bytes]:
-    """Decode a single-image GIF to (width, height, palette RGB bytes,
-    row-major index bytes). Walks extensions, honors a local color
-    table over the global one, undoes interlacing, and validates the
-    LZW stream length."""
+def _walk_gif(payload: bytes, full_rect: bool, local_tables: bool
+              ) -> tuple:
+    """The one block walker behind every decoder. Reads the header and
+    global color table eagerly and returns (screen_w, screen_h,
+    background index, global palette, images), where `images` lazily
+    walks the block stream — extensions (GCE fields kept, the rest
+    skipped), image descriptor, local color table, LZW sub-blocks —
+    and yields (delay_ms, disposal, transparent, left, top, w, h,
+    local palette or b"", de-interlaced index bytes) per image. A
+    caller that stops early never reads the later bytes. Every length
+    is validated before slicing. `full_rect` demands frames cover the
+    whole screen (otherwise: inside it); `local_tables` allows local
+    color tables."""
     if payload is None or len(payload) < 13 or \
             payload[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF (bad signature)")
@@ -217,64 +264,101 @@ def decode_gif(payload: bytes) -> tuple[int, int, bytes, bytes]:
         if len(palette) != 3 * n:
             raise ValueError("truncated global color table")
         pos += 3 * n
-    while pos < len(payload):
-        block = payload[pos]
-        pos += 1
-        if block == _EXTENSION:
-            pos += 1                                   # extension label
-            while True:
+
+    def images(pos):
+        pending = (0, DISPOSAL_NONE, None)  # (delay_ms, disposal, transp.)
+        while pos < len(payload):
+            block = payload[pos]
+            pos += 1
+            if block == _EXTENSION:
                 if pos >= len(payload):
                     raise ValueError("truncated extension")
-                size = payload[pos]
-                pos += 1 + size
-                if size == 0:
-                    break
-        elif block == _IMAGE_SEP:
-            if pos + 9 > len(payload):
-                raise ValueError("truncated image descriptor")
-            left, top, w, h = struct.unpack("<HHHH", payload[pos:pos + 8])
-            ipacked = payload[pos + 8]
-            pos += 9
-            if (left, top, w, h) != (0, 0, sw, sh):
-                raise ValueError("sub-rectangle frames unsupported")
-            if ipacked & 0x80:                         # local color table
-                n = 2 << (ipacked & 0x07)
-                palette = payload[pos:pos + 3 * n]
-                if len(palette) != 3 * n:
-                    raise ValueError("truncated local color table")
-                pos += 3 * n
-            if pos >= len(payload):
-                raise ValueError("missing LZW min code size")
-            min_code_size = payload[pos]
-            pos += 1
-            if not 2 <= min_code_size <= 11:
-                raise ValueError(f"bad LZW min code size {min_code_size}")
-            data = bytearray()
-            while True:
-                if pos >= len(payload):
-                    raise ValueError("truncated image data")
-                size = payload[pos]
+                label = payload[pos]
                 pos += 1
-                if size == 0:
-                    break
-                if pos + size > len(payload):
-                    raise ValueError("truncated sub-block")
-                data += payload[pos:pos + size]
-                pos += size
-            stream = _lzw_decode(bytes(data), min_code_size, w * h)
-            if ipacked & 0x40:                         # interlaced
-                rows = _interlace_rows(h)
-                un = bytearray(w * h)
-                for i, r in enumerate(rows):
-                    un[r * w:(r + 1) * w] = stream[i * w:(i + 1) * w]
-                stream = bytes(un)
-            if not palette:
-                raise ValueError("no color table")
-            return sw, sh, palette, stream
-        elif block == _TRAILER:
-            break
-        else:
-            raise ValueError(f"unknown block 0x{block:02x}")
+                if label == _GCE_LABEL and pos + 5 <= len(payload) \
+                        and payload[pos] == 4:
+                    gp = payload[pos + 1]
+                    (cs,) = struct.unpack("<H", payload[pos + 2:pos + 4])
+                    pending = (cs * 10, (gp >> 2) & 0x07,
+                               payload[pos + 4] if gp & 0x01 else None)
+                while True:
+                    if pos >= len(payload):
+                        raise ValueError("truncated extension")
+                    size = payload[pos]
+                    if pos + 1 + size > len(payload):
+                        raise ValueError("truncated sub-block")
+                    pos += 1 + size
+                    if size == 0:
+                        break
+            elif block == _IMAGE_SEP:
+                if pos + 9 > len(payload):
+                    raise ValueError("truncated image descriptor")
+                left, top, w, h = struct.unpack("<HHHH",
+                                                payload[pos:pos + 8])
+                ipacked = payload[pos + 8]
+                pos += 9
+                if full_rect:
+                    if (left, top, w, h) != (0, 0, sw, sh):
+                        raise ValueError("sub-rectangle frames unsupported")
+                elif w < 1 or h < 1 or left + w > sw or top + h > sh:
+                    raise ValueError("frame rect outside the logical "
+                                     "screen")
+                local = b""
+                if ipacked & 0x80:                     # local color table
+                    if not local_tables:
+                        raise ValueError("per-frame local color tables "
+                                         "unsupported in frame decode")
+                    n = 2 << (ipacked & 0x07)
+                    local = payload[pos:pos + 3 * n]
+                    if len(local) != 3 * n:
+                        raise ValueError("truncated local color table")
+                    pos += 3 * n
+                if pos >= len(payload):
+                    raise ValueError("missing LZW min code size")
+                min_code_size = payload[pos]
+                pos += 1
+                if not 2 <= min_code_size <= 11:
+                    raise ValueError(
+                        f"bad LZW min code size {min_code_size}")
+                data = bytearray()
+                while True:
+                    if pos >= len(payload):
+                        raise ValueError("truncated image data")
+                    size = payload[pos]
+                    pos += 1
+                    if size == 0:
+                        break
+                    if pos + size > len(payload):
+                        raise ValueError("truncated sub-block")
+                    data += payload[pos:pos + size]
+                    pos += size
+                stream = _lzw_decode(bytes(data), min_code_size, w * h)
+                if ipacked & 0x40:                     # interlaced
+                    un = bytearray(w * h)
+                    for i, r in enumerate(_interlace_rows(h)):
+                        un[r * w:(r + 1) * w] = stream[i * w:(i + 1) * w]
+                    stream = bytes(un)
+                yield (*pending, left, top, w, h, local, stream)
+                pending = (0, DISPOSAL_NONE, None)
+            elif block == _TRAILER:
+                return
+            else:
+                raise ValueError(f"unknown block 0x{block:02x}")
+
+    return sw, sh, payload[11], palette, images(pos)
+
+
+def decode_gif(payload: bytes) -> tuple[int, int, bytes, bytes]:
+    """Decode a single-image GIF to (width, height, palette RGB bytes,
+    row-major index bytes). Walks extensions, honors a local color
+    table over the global one, undoes interlacing, and validates the
+    LZW stream length."""
+    sw, sh, _bg, palette, images = _walk_gif(payload, True, True)
+    for *_, local, stream in images:
+        palette = local or palette
+        if not palette:
+            raise ValueError("no color table")
+        return sw, sh, palette, stream
     raise ValueError("no image block found")
 
 
@@ -295,44 +379,14 @@ def encode_gif_animation(width: int, height: int, palette: bytes,
     color table. This is the fixture side of the real frame-sampling
     path (`decode_gif_frames` / `multimodal.gif_frame_sample_stats`) —
     the closest a pure-stdlib pipeline gets to video frame decode."""
-    n_colors = len(palette) // 3
-    if len(palette) != n_colors * 3 or n_colors < 2 or \
-            n_colors & (n_colors - 1) or n_colors > 256:
-        raise ValueError("palette must be 2^k RGB entries, k in 1..8")
+    out, n_colors, min_code_size = _gif_header(width, height, palette,
+                                               loop=True)
     if not frames:
         raise ValueError("animation needs at least one frame")
-    gct_bits = max(1, n_colors.bit_length() - 1)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", width, height)
-    out += bytes([0x80 | (gct_bits - 1) << 4 | (gct_bits - 1), 0, 0])
-    out += palette
-    # NETSCAPE2.0 application extension: loop forever
-    out += bytes([_EXTENSION, _APP_LABEL, 11]) + b"NETSCAPE2.0"
-    out += bytes([3, 1, 0, 0, 0])
-    min_code_size = max(2, gct_bits)
     for delay_ms, indices in frames:
-        if delay_ms < 0 or delay_ms % 10 or delay_ms // 10 > 0xFFFF:
-            raise ValueError("delay_ms must be a multiple of 10 in "
-                             "[0, 655350]")
-        if len(indices) != width * height:
-            raise ValueError("frame index stream length != width*height")
-        if indices and max(indices) >= n_colors:
-            raise ValueError("index out of palette range")
         # GCE: disposal=1 (leave in place), no transparency
-        out += bytes([_EXTENSION, _GCE_LABEL, 4, 0x04])
-        out += struct.pack("<H", delay_ms // 10)
-        out += bytes([0, 0])
-        out += bytes([_IMAGE_SEP]) + struct.pack("<HHHH", 0, 0,
-                                                 width, height)
-        out += bytes([0x40 if interlace else 0x00])
-        if interlace:
-            rows = _interlace_rows(height)
-            stream = b"".join(indices[r * width:(r + 1) * width]
-                              for r in rows)
-        else:
-            stream = indices
-        out += bytes([min_code_size])
-        out += _sub_blocks(_lzw_encode(stream, min_code_size))
+        _gif_image(out, (0, 0, width, height), indices, n_colors,
+                   min_code_size, interlace, (delay_ms, 0x04, 0))
     out.append(_TRAILER)
     return bytes(out)
 
@@ -346,84 +400,10 @@ def decode_gif_frames(payload: bytes
     and requires full-rectangle frames sharing the global color table —
     sub-rectangle composition is out of envelope and raises (wrong-but-
     plausible frames are worse than a loud error)."""
-    if payload is None or len(payload) < 13 or \
-            payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    sw, sh = struct.unpack("<HH", payload[6:10])
-    packed = payload[10]
-    pos = 13
-    palette = b""
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        palette = payload[pos:pos + 3 * n]
-        if len(palette) != 3 * n:
-            raise ValueError("truncated global color table")
-        pos += 3 * n
+    sw, sh, _bg, palette, images = _walk_gif(payload, True, False)
     if not palette:
         raise ValueError("animation decode requires a global color table")
-    frames: list[tuple[int, bytes]] = []
-    pending_delay = 0
-    while pos < len(payload):
-        block = payload[pos]
-        pos += 1
-        if block == _EXTENSION:
-            if pos >= len(payload):
-                raise ValueError("truncated extension")
-            label = payload[pos]
-            pos += 1
-            if label == _GCE_LABEL and pos + 5 <= len(payload) \
-                    and payload[pos] == 4:
-                (cs,) = struct.unpack("<H", payload[pos + 2:pos + 4])
-                pending_delay = cs * 10
-            while True:
-                if pos >= len(payload):
-                    raise ValueError("truncated extension")
-                size = payload[pos]
-                pos += 1 + size
-                if size == 0:
-                    break
-        elif block == _IMAGE_SEP:
-            if pos + 9 > len(payload):
-                raise ValueError("truncated image descriptor")
-            left, top, w, h = struct.unpack("<HHHH", payload[pos:pos + 8])
-            ipacked = payload[pos + 8]
-            pos += 9
-            if (left, top, w, h) != (0, 0, sw, sh):
-                raise ValueError("sub-rectangle frames unsupported")
-            if ipacked & 0x80:
-                raise ValueError("per-frame local color tables "
-                                 "unsupported in animation decode")
-            if pos >= len(payload):
-                raise ValueError("missing LZW min code size")
-            min_code_size = payload[pos]
-            pos += 1
-            if not 2 <= min_code_size <= 11:
-                raise ValueError(f"bad LZW min code size {min_code_size}")
-            data = bytearray()
-            while True:
-                if pos >= len(payload):
-                    raise ValueError("truncated image data")
-                size = payload[pos]
-                pos += 1
-                if size == 0:
-                    break
-                if pos + size > len(payload):
-                    raise ValueError("truncated sub-block")
-                data += payload[pos:pos + size]
-                pos += size
-            stream = _lzw_decode(bytes(data), min_code_size, w * h)
-            if ipacked & 0x40:
-                rows = _interlace_rows(h)
-                un = bytearray(w * h)
-                for i, r in enumerate(rows):
-                    un[r * w:(r + 1) * w] = stream[i * w:(i + 1) * w]
-                stream = bytes(un)
-            frames.append((pending_delay, stream))
-            pending_delay = 0
-        elif block == _TRAILER:
-            break
-        else:
-            raise ValueError(f"unknown block 0x{block:02x}")
+    frames = [(delay_ms, stream) for delay_ms, *_, stream in images]
     if not frames:
         raise ValueError("no image block found")
     return sw, sh, palette, frames
@@ -452,48 +432,22 @@ def encode_gif_composited(width: int, height: int, palette: bytes,
     pure-stdlib pipeline can produce bit-for-bit. The screen
     descriptor's background-color index is set to `background`;
     `composite_gif_frames` replays the exact canvas states."""
-    n_colors = len(palette) // 3
-    if len(palette) != n_colors * 3 or n_colors < 2 or \
-            n_colors & (n_colors - 1) or n_colors > 256:
-        raise ValueError("palette must be 2^k RGB entries, k in 1..8")
-    if not 0 <= background < n_colors:
-        raise ValueError("background index out of palette range")
+    out, n_colors, min_code_size = _gif_header(width, height, palette,
+                                               background, loop=True)
     if not frames:
         raise ValueError("animation needs at least one frame")
-    gct_bits = max(1, n_colors.bit_length() - 1)
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HH", width, height)
-    out += bytes([0x80 | (gct_bits - 1) << 4 | (gct_bits - 1),
-                  background, 0])
-    out += palette
-    # NETSCAPE2.0 loop extension (walkers must skip it)
-    out += bytes([_EXTENSION, _APP_LABEL, 11]) + b"NETSCAPE2.0"
-    out += bytes([3, 1, 0, 0, 0])
-    min_code_size = max(2, gct_bits)
     for delay_ms, left, top, w, h, indices, disposal, transparent in frames:
-        if delay_ms < 0 or delay_ms % 10 or delay_ms // 10 > 0xFFFF:
-            raise ValueError("delay_ms must be a multiple of 10 in "
-                             "[0, 655350]")
         if disposal not in (DISPOSAL_NONE, DISPOSAL_LEAVE,
                             DISPOSAL_BACKGROUND, DISPOSAL_PREVIOUS):
             raise ValueError(f"bad disposal {disposal}")
         if left < 0 or top < 0 or w < 1 or h < 1 or \
                 left + w > width or top + h > height:
             raise ValueError("frame rect outside the logical screen")
-        if len(indices) != w * h:
-            raise ValueError("frame index stream length != w*h")
-        if indices and max(indices) >= n_colors:
-            raise ValueError("index out of palette range")
         if transparent is not None and not 0 <= transparent < n_colors:
             raise ValueError("transparent index out of palette range")
         packed = (disposal << 2) | (1 if transparent is not None else 0)
-        out += bytes([_EXTENSION, _GCE_LABEL, 4, packed])
-        out += struct.pack("<H", delay_ms // 10)
-        out += bytes([transparent if transparent is not None else 0, 0])
-        out += bytes([_IMAGE_SEP]) + struct.pack("<HHHH", left, top, w, h)
-        out += bytes([0x00])
-        out += bytes([min_code_size])
-        out += _sub_blocks(_lzw_encode(indices, min_code_size))
+        _gif_image(out, (left, top, w, h), indices, n_colors,
+                   min_code_size, gce=(delay_ms, packed, transparent or 0))
     out.append(_TRAILER)
     return bytes(out)
 
@@ -511,109 +465,31 @@ def composite_gif_frames(payload: bytes
     canvas is the background color. Sub-block/rect lengths are
     validated before slicing (ValueError contract); disposal values
     4-7 are reserved and raise."""
-    if payload is None or len(payload) < 13 or \
-            payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    sw, sh = struct.unpack("<HH", payload[6:10])
-    packed = payload[10]
-    bg = payload[11]
-    pos = 13
-    palette = b""
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        palette = payload[pos:pos + 3 * n]
-        if len(palette) != 3 * n:
-            raise ValueError("truncated global color table")
-        pos += 3 * n
+    sw, sh, bg, palette, images = _walk_gif(payload, False, False)
     if not palette:
         raise ValueError("compositing requires a global color table")
     if bg >= len(palette) // 3:
         raise ValueError("background index out of palette range")
     canvas = bytearray([bg]) * (sw * sh)
     composited: list = []
-    pending = (0, DISPOSAL_NONE, None)   # (delay_ms, disposal, transparent)
-    while pos < len(payload):
-        block = payload[pos]
-        pos += 1
-        if block == _EXTENSION:
-            if pos >= len(payload):
-                raise ValueError("truncated extension")
-            label = payload[pos]
-            pos += 1
-            if label == _GCE_LABEL and pos + 5 <= len(payload) \
-                    and payload[pos] == 4:
-                gp = payload[pos + 1]
-                disposal = (gp >> 2) & 0x07
-                if disposal > DISPOSAL_PREVIOUS:
-                    raise ValueError(f"reserved disposal {disposal}")
-                (cs,) = struct.unpack("<H", payload[pos + 2:pos + 4])
-                transparent = payload[pos + 4] if gp & 0x01 else None
-                pending = (cs * 10, disposal, transparent)
-            while True:
-                if pos >= len(payload):
-                    raise ValueError("truncated extension")
-                size = payload[pos]
-                if pos + 1 + size > len(payload):
-                    raise ValueError("truncated sub-block")
-                pos += 1 + size
-                if size == 0:
-                    break
-        elif block == _IMAGE_SEP:
-            if pos + 9 > len(payload):
-                raise ValueError("truncated image descriptor")
-            left, top, w, h = struct.unpack("<HHHH", payload[pos:pos + 8])
-            ipacked = payload[pos + 8]
-            pos += 9
-            if w < 1 or h < 1 or left + w > sw or top + h > sh:
-                raise ValueError("frame rect outside the logical screen")
-            if ipacked & 0x80:
-                raise ValueError("per-frame local color tables "
-                                 "unsupported in compositing decode")
-            if pos >= len(payload):
-                raise ValueError("missing LZW min code size")
-            min_code_size = payload[pos]
-            pos += 1
-            if not 2 <= min_code_size <= 11:
-                raise ValueError(f"bad LZW min code size {min_code_size}")
-            data = bytearray()
-            while True:
-                if pos >= len(payload):
-                    raise ValueError("truncated image data")
-                size = payload[pos]
-                pos += 1
-                if size == 0:
-                    break
-                if pos + size > len(payload):
-                    raise ValueError("truncated sub-block")
-                data += payload[pos:pos + size]
-                pos += size
-            patch = _lzw_decode(bytes(data), min_code_size, w * h)
-            if ipacked & 0x40:
-                rows = _interlace_rows(h)
-                un = bytearray(w * h)
-                for i, r in enumerate(rows):
-                    un[r * w:(r + 1) * w] = patch[i * w:(i + 1) * w]
-                patch = bytes(un)
-            delay_ms, disposal, transparent = pending
-            pending = (0, DISPOSAL_NONE, None)
-            prev = bytes(canvas)
+    for delay_ms, disposal, transparent, left, top, w, h, _, patch \
+            in images:
+        if disposal > DISPOSAL_PREVIOUS:
+            raise ValueError(f"reserved disposal {disposal}")
+        prev = bytes(canvas)
+        for y in range(h):
+            row = (top + y) * sw + left
+            for x in range(w):
+                v = patch[y * w + x]
+                if transparent is None or v != transparent:
+                    canvas[row + x] = v
+        composited.append((delay_ms, bytes(canvas)))
+        if disposal == DISPOSAL_BACKGROUND:
             for y in range(h):
                 row = (top + y) * sw + left
-                for x in range(w):
-                    v = patch[y * w + x]
-                    if transparent is None or v != transparent:
-                        canvas[row + x] = v
-            composited.append((delay_ms, bytes(canvas)))
-            if disposal == DISPOSAL_BACKGROUND:
-                for y in range(h):
-                    row = (top + y) * sw + left
-                    canvas[row:row + w] = bytes([bg]) * w
-            elif disposal == DISPOSAL_PREVIOUS:
-                canvas = bytearray(prev)
-        elif block == _TRAILER:
-            break
-        else:
-            raise ValueError(f"unknown block 0x{block:02x}")
+                canvas[row:row + w] = bytes([bg]) * w
+        elif disposal == DISPOSAL_PREVIOUS:
+            canvas = bytearray(prev)
     if not composited:
         raise ValueError("no image block found")
     return sw, sh, palette, bg, composited

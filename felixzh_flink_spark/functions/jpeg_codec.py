@@ -1,16 +1,18 @@
-"""Baseline-JPEG grayscale codec — real Huffman entropy coding, real
-DCT, no image library (numpy for the 8×8 transforms).
+"""Baseline-JPEG codec, grayscale and YCbCr color — real Huffman
+entropy coding, real DCT, no image library (numpy for the 8×8
+transforms).
 
 Closes the last honest image-decode stub (VERDICT-r5 "What's missing"
 item 4): PNG, GIF and WAV decode were already real; JPEG pixels were a
 header-only parse. This module implements the genuine baseline
-(SOF0) grayscale path end-to-end: `encode_jpeg_gray` writes
-SOI/DQT/SOF0/DHT/SOS segments with standard Annex-K-shaped Huffman
-tables, forward-DCTs and quantizes each 8×8 block, and entropy-codes
-DC diffs + AC run/size pairs with 0xFF byte stuffing; `decode_jpeg_gray`
-parses the segment stream (tables from the FILE, not assumed), Huffman-
-decodes, dequantizes, inverse-DCTs and reassembles the pixel grid,
-honoring restart intervals.
+(SOF0) path end-to-end. Both encoders go through one scan writer
+(`_encode_scan`: forward DCT, quantization, DC diffs + AC run/size
+pairs with 0xFF byte stuffing, restart chunks) and one file writer
+(`_encode_jpeg`: SOI/DQT/SOF0/DRI/DHT/SOS with standard Annex-K
+Huffman tables). Every decoder goes through one segment walk
+(`_parse_jpeg`: tables from the FILE, not assumed; every segment body
+length-checked before it is read) and one MCU loop (`_decode_scan`:
+Huffman decode, dequantize, inverse DCT, restart intervals, crop).
 
 Verifiability despite lossiness: an 8×8-flat tile has only a DC
 coefficient (8·(v−128) under the orthonormal DCT), and with the DC
@@ -27,8 +29,9 @@ grayscale at 1×1 sampling (`encode_jpeg_gray`/`decode_jpeg_gray`) and
 three-component YCbCr at 4:4:4 or 4:2:0 with interleaved MCUs
 (`encode_jpeg_color`/`decode_jpeg_color`, round-6 extension closing the
 "color JPEG" stub). Anything else (progressive, arithmetic coding,
-other samplings) raises ValueError — wrong-but-plausible pixels are
-worse than a loud error in a data pipeline.
+other samplings, short or truncated segments) raises ValueError —
+wrong-but-plausible pixels are worse than a loud error in a data
+pipeline.
 
 Color-path verifiability: the flat-tile argument extends per channel —
 a 16×16-flat YCbCr tile is flat in every 8×8 luma block AND in the
@@ -228,6 +231,86 @@ def _seg(marker: int, body: bytes) -> bytes:
     return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
 
 
+def _encode_jpeg(width: int, height: int, planes: list, qtables: list,
+                 restart_interval: int) -> bytes:
+    """The one file writer behind both encoders. `planes` is
+    [(2-D uint8 plane, blocks per MCU side)], luma first; `qtables`
+    holds one quantizer per table id (None → `FLAT_LOSSLESS_QTABLE`).
+    Component i uses table id min(i, 1): quantizer and Annex-K luma (0)
+    or chroma (1) Huffman tables. Writes SOI, DQT, SOF0, DRI (when
+    restarting), DHT, SOS, the scan's restart chunks joined by RSTn
+    markers, and EOI."""
+    qs = []
+    for q in qtables:
+        q = list(q) if q is not None else list(FLAT_LOSSLESS_QTABLE)
+        if len(q) != 64 or any(not 1 <= v <= 255 for v in q):
+            raise ValueError("qtable must be 64 entries in 1..255")
+        qs.append(q)
+    fmax = planes[0][1]
+    mcux = (width + 8 * fmax - 1) // (8 * fmax)
+    mcuy = (height + 8 * fmax - 1) // (8 * fmax)
+    # (padded plane, blocks-per-MCU-side, qmatrix, dc table, ac table)
+    comps = [(_pad_to_blocks(plane, mcuy * f, mcux * f), f,
+              _zz_to_matrix(qs[min(i, 1)]), *_HUFF_ENC[min(i, 1)])
+             for i, (plane, f) in enumerate(planes)]
+    chunks = _encode_scan(comps, mcux, mcuy, restart_interval)
+
+    sof = struct.pack(">BHHB", 8, height, width, len(planes))
+    sos = bytes([len(planes)])
+    for i, (_, f) in enumerate(planes):
+        t = min(i, 1)
+        sof += bytes([i + 1, (f << 4) | f, t])           # id, sampling, q
+        sos += bytes([i + 1, (t << 4) | t])              # id, dc/ac tables
+    out = bytearray(b"\xff\xd8")                         # SOI
+    out += _seg(0xDB, b"".join(bytes([t]) + bytes(q)
+                               for t, q in enumerate(qs)))   # DQT, 8-bit
+    out += _seg(0xC0, sof)                               # SOF0
+    if restart_interval:
+        out += _seg(0xDD, struct.pack(">H", restart_interval))
+    for t in range(len(qs)):
+        dc_bits, dc_vals, ac_bits, ac_vals = _HUFF_SPECS[t]
+        out += _seg(0xC4, bytes([t]) + bytes(dc_bits) + bytes(dc_vals))
+        out += _seg(0xC4, bytes([0x10 | t]) + bytes(ac_bits) + bytes(ac_vals))
+    out += _seg(0xDA, sos + bytes([0, 63, 0]))           # SOS
+    for i, chunk in enumerate(chunks):
+        out += chunk
+        if i < len(chunks) - 1:
+            out += bytes([0xFF, 0xD0 + (i % 8)])         # RSTn
+    out += b"\xff\xd9"                                   # EOI
+    return bytes(out)
+
+
+def _encode_scan(comps: list, mcux: int, mcuy: int,
+                 restart_interval: int) -> list[bytes]:
+    """The one MCU loop: entropy-code each component's blocks MCU by
+    MCU (components in frame order, blocks row-major inside the MCU);
+    every `restart_interval` MCUs the bit stream is cut into a new
+    chunk and every DC predictor resets."""
+    encode_block = _encode_block
+    w = _BitWriter()
+    chunks: list[bytes] = []
+    preds = [0] * len(comps)
+    n_in_chunk = 0
+    for my in range(mcuy):
+        for mx in range(mcux):
+            if restart_interval and n_in_chunk == restart_interval:
+                chunks.append(w.finish())
+                w = _BitWriter()
+                preds = [0] * len(comps)
+                n_in_chunk = 0
+            for ci, (plane, f, qm, dct, act) in enumerate(comps):
+                for by in range(f):
+                    for bx in range(f):
+                        r0 = (my * f + by) * 8
+                        c0 = (mx * f + bx) * 8
+                        block = plane[r0:r0 + 8, c0:c0 + 8]
+                        preds[ci] = encode_block(w, block, preds[ci],
+                                                 qm, dct, act)
+            n_in_chunk += 1
+    chunks.append(w.finish())
+    return chunks
+
+
 def encode_jpeg_gray(width: int, height: int, pixels: bytes,
                      qtable: list[int] | None = None,
                      restart_interval: int = 0) -> bytes:
@@ -237,57 +320,25 @@ def encode_jpeg_gray(width: int, height: int, pixels: bytes,
     table for lossy photographic use — the format is the same."""
     if len(pixels) != width * height:
         raise ValueError("pixel length != width*height")
-    q = list(qtable) if qtable is not None else list(FLAT_LOSSLESS_QTABLE)
-    if len(q) != 64 or any(not 1 <= v <= 255 for v in q):
-        raise ValueError("qtable must be 64 entries in 1..255")
-    qm = _zz_to_matrix(q)
-
     img = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width)
-    bh = (height + 7) // 8
-    bw = (width + 7) // 8
-    # edge-replicate padding to full MCUs (skipped when already aligned)
-    padded = _pad_to_blocks(img, bh, bw)
-
-    dc_tab = _DC_ENC
-    ac_tab = _AC_ENC
-    w = _BitWriter()
-    chunks: list[bytes] = []
-    pred = 0
-    n_in_chunk = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if restart_interval and n_in_chunk == restart_interval:
-                chunks.append(w.finish())
-                w = _BitWriter()
-                pred = 0
-                n_in_chunk = 0
-            block = padded[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8]
-            pred = _encode_block(w, block, pred, qm, dc_tab, ac_tab)
-            n_in_chunk += 1
-    chunks.append(w.finish())
-
-    out = bytearray(b"\xff\xd8")                     # SOI
-    out += _seg(0xDB, bytes([0x00]) + bytes(q))      # DQT, 8-bit, id 0
-    out += _seg(0xC0, bytes([8]) + struct.pack(">HH", height, width)
-                + bytes([1, 1, 0x11, 0]))            # SOF0, 1 comp, 1x1
-    if restart_interval:
-        out += _seg(0xDD, struct.pack(">H", restart_interval))
-    out += _seg(0xC4, bytes([0x00]) + bytes(DC_BITS) + bytes(DC_VALS))
-    out += _seg(0xC4, bytes([0x10]) + bytes(AC_BITS) + bytes(AC_VALS))
-    out += _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0])) # SOS
-    for i, chunk in enumerate(chunks):
-        out += chunk
-        if i < len(chunks) - 1:
-            out += bytes([0xFF, 0xD0 + (i % 8)])     # RSTn
-    out += b"\xff\xd9"                               # EOI
-    return bytes(out)
+    return _encode_jpeg(width, height, [(img, 1)], [qtable],
+                        restart_interval)
 
 
-def decode_jpeg_gray(payload: bytes) -> tuple[int, int, bytes]:
-    """Decode a baseline grayscale JPEG to (width, height, row-major
-    pixel bytes). Quant/Huffman tables come from the FILE's DQT/DHT
-    segments; restart markers reset the DC predictor; MCU padding is
-    cropped. Raises ValueError outside the supported envelope."""
+#: SOFn markers of every non-baseline coding process
+_SOF_OTHER = (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
+              0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF)
+
+
+def _parse_jpeg(payload: bytes) -> tuple:
+    """The one segment walk behind every decoder: SOI, then each
+    segment up to SOS, every body length-checked before it is indexed.
+    Quant/Huffman tables come from the FILE's DQT/DHT segments. Returns
+    (width, height, restart interval, scan start, comps) with one
+    (blocks per MCU side, qmatrix, dc table, ac table) per frame
+    component. The envelope is 8-bit baseline SOF0 with 1 component at
+    1×1 or 3 components at 4:4:4 / 4:2:0, in one scan over every
+    component; anything else raises ValueError."""
     if payload is None or len(payload) < 4 or payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -295,7 +346,9 @@ def decode_jpeg_gray(payload: bytes) -> tuple[int, int, bytes]:
     dc_tabs: dict[int, dict] = {}
     ac_tabs: dict[int, dict] = {}
     width = height = None
-    qsel = dcsel = acsel = 0
+    frame: list[tuple[int, int, int]] = []           # id, sampling, qsel
+    scan_sel: dict[int, tuple[int, int]] = {}        # id → dc, ac
+    n_scan = 0
     restart = 0
     data_at = None
     while pos + 4 <= len(payload):
@@ -331,33 +384,56 @@ def decode_jpeg_gray(payload: bytes) -> tuple[int, int, bytes]:
                 (dc_tabs if cls == 0 else ac_tabs)[tid] = tab
                 b += 17 + n
         elif marker == 0xC0:
+            if len(body) < 6 or len(body) < 6 + 3 * body[5]:
+                raise ValueError("truncated SOF0 segment")
             if body[0] != 8:
                 raise ValueError("only 8-bit precision supported")
             height, width = struct.unpack(">HH", body[1:5])
-            if body[5] != 1:
-                raise ValueError("only grayscale (1 component) supported")
-            if body[7] != 0x11:
-                raise ValueError("only 1x1 sampling supported")
-            qsel = body[8]
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
+            frame = [tuple(body[6 + 3 * c:9 + 3 * c]) for c in range(body[5])]
+        elif marker in _SOF_OTHER:
             raise ValueError("only baseline sequential (SOF0) supported")
         elif marker == 0xDD:
+            if len(body) != 2:
+                raise ValueError("bad DRI segment length")
             (restart,) = struct.unpack(">H", body)
         elif marker == 0xDA:
-            if body[0] != 1:
-                raise ValueError("only single-scan grayscale supported")
-            dcsel, acsel = body[2] >> 4, body[2] & 0x0F
+            if not body or len(body) < 1 + 2 * body[0]:
+                raise ValueError("truncated SOS segment")
+            n_scan = body[0]
+            for c in range(n_scan):
+                sel = body[2 + 2 * c]
+                scan_sel[body[1 + 2 * c]] = (sel >> 4, sel & 0x0F)
             data_at = pos + 2 + ln
             break
         pos += 2 + ln
     if width is None or data_at is None:
         raise ValueError("missing SOF0/SOS")
-    if qsel not in qtables or dcsel not in dc_tabs or acsel not in ac_tabs:
-        raise ValueError("missing quant/huffman table")
-    qm = _zz_to_matrix(qtables[qsel])
-    dct, act = dc_tabs[dcsel], ac_tabs[acsel]
+    if [s for _, s, _ in frame] not in ([0x11], [0x11, 0x11, 0x11],
+                                        [0x22, 0x11, 0x11]):
+        raise ValueError("only 1x1 grayscale or 4:4:4 / 4:2:0 YCbCr "
+                         "supported")
+    if n_scan != len(frame):
+        raise ValueError("only one interleaved scan over every component "
+                         "supported")
+    comps = []
+    for cid, samp, qsel in frame:
+        if qsel not in qtables or cid not in scan_sel:
+            raise ValueError("missing quant table or scan selector")
+        dsel, asel = scan_sel[cid]
+        if dsel not in dc_tabs or asel not in ac_tabs:
+            raise ValueError("missing huffman table")
+        comps.append((samp >> 4, _zz_to_matrix(qtables[qsel]),
+                      dc_tabs[dsel], ac_tabs[asel]))
+    return width, height, restart, data_at, comps
 
+
+def _decode_scan(payload: bytes, width: int, height: int, restart: int,
+                 data_at: int, comps: list) -> list[np.ndarray]:
+    """The one MCU decode loop for any component list from
+    `_parse_jpeg`: Huffman-decode, dequantize and inverse-DCT each
+    component's blocks MCU by MCU (restart markers reset every DC
+    predictor), then round, clip and crop each plane to its sampled
+    size. Returns one uint8 array per component."""
     def read_symbol(r: _BitReader, tab: dict) -> int:
         code, length = 0, 0
         while length < 16:
@@ -371,55 +447,97 @@ def decode_jpeg_gray(payload: bytes) -> tuple[int, int, bytes]:
     def extend(bits: int, t: int) -> int:
         return bits if bits >= (1 << (t - 1)) else bits - (1 << t) + 1
 
-    bh = (height + 7) // 8
-    bw = (width + 7) // 8
-    out = np.zeros((bh * 8, bw * 8), dtype=np.float64)
+    fmax = comps[0][0]
+    mcux = (width + 8 * fmax - 1) // (8 * fmax)
+    mcuy = (height + 8 * fmax - 1) // (8 * fmax)
+    # (plane, blocks-per-MCU-side, qmatrix, dc table, ac table)
+    work = [(np.zeros((mcuy * c[0] * 8, mcux * c[0] * 8)), *c)
+            for c in comps]
+    c_t, c_m, zz_np, zeros = _C.T, _C, _ZZ_NP, np.zeros
     r = _BitReader(payload, data_at)
-    pred = 0
+    preds = [0] * len(comps)
     n_in_chunk = 0
-    for by in range(bh):
-        for bx in range(bw):
+    for my in range(mcuy):
+        for mx in range(mcux):
             if restart and n_in_chunk == restart:
                 r.align()
                 m = r.at_marker()
                 if m is None or not 0xD0 <= m <= 0xD7:
                     raise ValueError("expected restart marker")
                 r.pos += 2
-                pred = 0
+                preds = [0] * len(comps)
                 n_in_chunk = 0
-            zz = [0] * 64
-            t = read_symbol(r, dct)
-            diff = extend(r.read_bits(t), t) if t else 0
-            pred += diff
-            zz[0] = pred
-            i = 1
-            while i < 64:
-                sym = read_symbol(r, act)
-                if sym == 0x00:                      # EOB
-                    break
-                run, t = sym >> 4, sym & 0x0F
-                if t == 0:
-                    if run != 15:
-                        raise ValueError("bad AC symbol")
-                    i += 16                          # ZRL
-                    # i == 64 is only expressible by a stream that pads
-                    # the tail with ZRL instead of EOB — no conforming
-                    # encoder does; loud error beats silent desync
-                    if i >= 64:
-                        raise ValueError("ZRL overflows block")
-                    continue
-                i += run
-                if i >= 64:
-                    raise ValueError("AC run overflows block")
-                zz[i] = extend(r.read_bits(t), t)
-                i += 1
-            coef = np.zeros(64)
-            coef[_ZZ_NP] = zz                            # de-zigzag
-            block = _C.T @ (coef.reshape(8, 8) * qm) @ _C
-            out[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = block
+            for ci, (plane, f, qm, dct, act) in enumerate(work):
+                for by in range(f):
+                    for bx in range(f):
+                        zz = [0] * 64
+                        t = read_symbol(r, dct)
+                        diff = extend(r.read_bits(t), t) if t else 0
+                        preds[ci] += diff
+                        zz[0] = preds[ci]
+                        i = 1
+                        while i < 64:
+                            sym = read_symbol(r, act)
+                            if sym == 0x00:              # EOB
+                                break
+                            run, t = sym >> 4, sym & 0x0F
+                            if t == 0:
+                                if run != 15:
+                                    raise ValueError("bad AC symbol")
+                                i += 16                  # ZRL
+                                # i == 64 is only expressible by a stream
+                                # that pads the tail with ZRL instead of
+                                # EOB — no conforming encoder does; loud
+                                # error beats silent desync
+                                if i >= 64:
+                                    raise ValueError(
+                                        "ZRL overflows block")
+                                continue
+                            i += run
+                            if i >= 64:
+                                raise ValueError("AC run overflows block")
+                            zz[i] = extend(r.read_bits(t), t)
+                            i += 1
+                        coef = zeros(64)
+                        coef[zz_np] = zz                 # de-zigzag
+                        block = c_t @ (coef.reshape(8, 8) * qm) @ c_m
+                        r0 = (my * f + by) * 8
+                        c0 = (mx * f + bx) * 8
+                        plane[r0:r0 + 8, c0:c0 + 8] = block
             n_in_chunk += 1
-    img = np.clip(np.rint(out + 128.0), 0, 255).astype(np.uint8)
-    return width, height, img[:height, :width].tobytes()
+    return [np.clip(np.rint(p + 128.0), 0, 255).astype(np.uint8)[
+                :-(-height * f // fmax), :-(-width * f // fmax)]
+            for p, f, _, _, _ in work]
+
+
+def _decode_jpeg(payload: bytes, channels: int | None = None
+                 ) -> tuple[int, int, int, bytes]:
+    """Parse once, decode the scan, assemble the pixels: (width,
+    height, channels, bytes) — grayscale bytes for 1 component,
+    interleaved RGB for 3 (4:2:0 chroma upsampled by 2×2 replication,
+    then `ycbcr_to_rgb`). `channels` pins the component count."""
+    width, height, restart, data_at, comps = _parse_jpeg(payload)
+    if channels is not None and len(comps) != channels:
+        raise ValueError(
+            f"expected {channels} component(s), got {len(comps)} "
+            "(grayscale → decode_jpeg_gray, YCbCr → decode_jpeg_color)")
+    planes = _decode_scan(payload, width, height, restart, data_at, comps)
+    if len(planes) == 1:
+        return width, height, 1, planes[0].tobytes()
+    yp, cbp, crp = planes
+    if comps[0][0] == 2:
+        cbp = np.repeat(np.repeat(cbp, 2, 0), 2, 1)[:height, :width]
+        crp = np.repeat(np.repeat(crp, 2, 0), 2, 1)[:height, :width]
+    return width, height, 3, ycbcr_to_rgb(yp, cbp, crp).tobytes()
+
+
+def decode_jpeg_gray(payload: bytes) -> tuple[int, int, bytes]:
+    """Decode a baseline grayscale JPEG to (width, height, row-major
+    pixel bytes). Quant/Huffman tables come from the FILE's DQT/DHT
+    segments; restart markers reset the DC predictor; MCU padding is
+    cropped. Raises ValueError outside the supported envelope."""
+    width, height, _, px = _decode_jpeg(payload, 1)
+    return width, height, px
 
 
 #: standard chrominance Huffman tables (JPEG Annex K.3, Tables K.4/K.6)
@@ -447,6 +565,12 @@ AC_VALS_C = [
 #: standard chrominance encode maps, built once at import
 _DC_ENC_C = _huff_encode_table(DC_BITS_C, DC_VALS_C)
 _AC_ENC_C = _huff_encode_table(AC_BITS_C, AC_VALS_C)
+
+#: per table id (0 luma, 1 chroma): the DHT specs the file writer
+#: emits and the (dc, ac) encode maps the scan writer codes with
+_HUFF_SPECS = [(DC_BITS, DC_VALS, AC_BITS, AC_VALS),
+               (DC_BITS_C, DC_VALS_C, AC_BITS_C, AC_VALS_C)]
+_HUFF_ENC = [(_DC_ENC, _AC_ENC), (_DC_ENC_C, _AC_ENC_C)]
 
 
 #: natural-order index → zig-zag position (inverse of ZIGZAG), as an
@@ -565,78 +689,12 @@ def encode_jpeg_color(width: int, height: int, y: bytes, cb: bytes,
         raise ValueError("y length != width*height")
     if len(cb) != cw * chh or len(cr) != cw * chh:
         raise ValueError("chroma plane length mismatch for " + subsampling)
-    qy = list(qtable_y) if qtable_y is not None else list(
-        FLAT_LOSSLESS_QTABLE)
-    qc = list(qtable_c) if qtable_c is not None else list(
-        FLAT_LOSSLESS_QTABLE)
-    for q in (qy, qc):
-        if len(q) != 64 or any(not 1 <= v <= 255 for v in q):
-            raise ValueError("qtable must be 64 entries in 1..255")
-    qmy, qmc = _zz_to_matrix(qy), _zz_to_matrix(qc)
-
-    hy = 2 if s420 else 1                                # luma sampling
-    mcux = (width + 8 * hy - 1) // (8 * hy)
-    mcuy = (height + 8 * hy - 1) // (8 * hy)
-    yp = _pad_to_blocks(
-        np.frombuffer(y, dtype=np.uint8).reshape(height, width),
-        mcuy * hy, mcux * hy)
-    cbp = _pad_to_blocks(
-        np.frombuffer(cb, dtype=np.uint8).reshape(chh, cw), mcuy, mcux)
-    crp = _pad_to_blocks(
-        np.frombuffer(cr, dtype=np.uint8).reshape(chh, cw), mcuy, mcux)
-
-    dcy_t = _DC_ENC
-    acy_t = _AC_ENC
-    dcc_t = _DC_ENC_C
-    acc_t = _AC_ENC_C
-    # (plane, blocks-per-MCU-side, qmatrix, dc table, ac table)
-    comps = [(yp, hy, qmy, dcy_t, acy_t), (cbp, 1, qmc, dcc_t, acc_t),
-             (crp, 1, qmc, dcc_t, acc_t)]
-
-    w = _BitWriter()
-    chunks: list[bytes] = []
-    preds = [0, 0, 0]
-    n_in_chunk = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and n_in_chunk == restart_interval:
-                chunks.append(w.finish())
-                w = _BitWriter()
-                preds = [0, 0, 0]
-                n_in_chunk = 0
-            for ci, (plane, f, qm, dct, act) in enumerate(comps):
-                for by in range(f):
-                    for bx in range(f):
-                        r0 = (my * f + by) * 8
-                        c0 = (mx * f + bx) * 8
-                        block = plane[r0:r0 + 8, c0:c0 + 8]
-                        preds[ci] = _encode_block(w, block, preds[ci],
-                                                  qm, dct, act)
-            n_in_chunk += 1
-    chunks.append(w.finish())
-
-    out = bytearray(b"\xff\xd8")                         # SOI
-    out += _seg(0xDB, bytes([0x00]) + bytes(qy)
-                + bytes([0x01]) + bytes(qc))             # DQT ×2
-    samp_y = (hy << 4) | hy
-    out += _seg(0xC0, bytes([8]) + struct.pack(">HH", height, width)
-                + bytes([3,
-                         1, samp_y, 0,                   # Y
-                         2, 0x11, 1,                     # Cb
-                         3, 0x11, 1]))                   # Cr
-    if restart_interval:
-        out += _seg(0xDD, struct.pack(">H", restart_interval))
-    out += _seg(0xC4, bytes([0x00]) + bytes(DC_BITS) + bytes(DC_VALS))
-    out += _seg(0xC4, bytes([0x10]) + bytes(AC_BITS) + bytes(AC_VALS))
-    out += _seg(0xC4, bytes([0x01]) + bytes(DC_BITS_C) + bytes(DC_VALS_C))
-    out += _seg(0xC4, bytes([0x11]) + bytes(AC_BITS_C) + bytes(AC_VALS_C))
-    out += _seg(0xDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-    for i, chunk in enumerate(chunks):
-        out += chunk
-        if i < len(chunks) - 1:
-            out += bytes([0xFF, 0xD0 + (i % 8)])         # RSTn
-    out += b"\xff\xd9"                                   # EOI
-    return bytes(out)
+    planes = [(np.frombuffer(y, dtype=np.uint8).reshape(height, width),
+               2 if s420 else 1)]                        # luma sampling
+    planes += [(np.frombuffer(c, dtype=np.uint8).reshape(chh, cw), 1)
+               for c in (cb, cr)]
+    return _encode_jpeg(width, height, planes, [qtable_y, qtable_c],
+                        restart_interval)
 
 
 def ycbcr_to_rgb(y: np.ndarray, cb: np.ndarray, cr: np.ndarray
@@ -664,199 +722,12 @@ def decode_jpeg_color(payload: bytes) -> tuple[int, int, bytes]:
     chroma is upsampled by 2×2 replication before the exact-rounding
     RGB conversion (`ycbcr_to_rgb`). Raises ValueError outside the
     envelope (grayscale payloads belong to `decode_jpeg_gray`)."""
-    if payload is None or len(payload) < 4 or payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    dc_tabs: dict[int, dict] = {}
-    ac_tabs: dict[int, dict] = {}
-    width = height = None
-    frame: list[tuple[int, int, int, int]] = []          # id, h, v, qsel
-    scan_sel: dict[int, tuple[int, int]] = {}            # id → dc, ac
-    restart = 0
-    data_at = None
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = payload[pos + 1]
-        if marker == 0xD9:
-            break
-        (ln,) = struct.unpack(">H", payload[pos + 2:pos + 4])
-        body = payload[pos + 4:pos + 2 + ln]
-        if len(body) != ln - 2:
-            raise ValueError("truncated segment")
-        if marker == 0xDB:
-            b = 0
-            while b < len(body):
-                prec, tid = body[b] >> 4, body[b] & 0x0F
-                if prec != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                if b + 65 > len(body):
-                    raise ValueError("truncated DQT segment")
-                qtables[tid] = list(body[b + 1:b + 65])
-                b += 65
-        elif marker == 0xC4:
-            b = 0
-            while b < len(body):
-                cls, tid = body[b] >> 4, body[b] & 0x0F
-                bits = list(body[b + 1:b + 17])
-                n = sum(bits)
-                if b + 17 + n > len(body):
-                    raise ValueError("truncated DHT segment")
-                vals = list(body[b + 17:b + 17 + n])
-                tab = _huff_decode_table(bits, vals)
-                (dc_tabs if cls == 0 else ac_tabs)[tid] = tab
-                b += 17 + n
-        elif marker == 0xC0:
-            if body[0] != 8:
-                raise ValueError("only 8-bit precision supported")
-            height, width = struct.unpack(">HH", body[1:5])
-            if body[5] != 3:
-                raise ValueError(
-                    "decode_jpeg_color needs 3 components "
-                    "(grayscale → decode_jpeg_gray)")
-            for c in range(3):
-                cid = body[6 + 3 * c]
-                samp = body[7 + 3 * c]
-                frame.append((cid, samp >> 4, samp & 0x0F,
-                              body[8 + 3 * c]))
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                        0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError("only baseline sequential (SOF0) supported")
-        elif marker == 0xDD:
-            (restart,) = struct.unpack(">H", body)
-        elif marker == 0xDA:
-            if body[0] != 3:
-                raise ValueError("only single interleaved 3-comp scan "
-                                 "supported")
-            for c in range(3):
-                cid = body[1 + 2 * c]
-                sel = body[2 + 2 * c]
-                scan_sel[cid] = (sel >> 4, sel & 0x0F)
-            data_at = pos + 2 + ln
-            break
-        pos += 2 + ln
-    if width is None or data_at is None or len(frame) != 3:
-        raise ValueError("missing SOF0/SOS")
-    samps = [(h, v) for _, h, v, _ in frame]
-    if samps == [(2, 2), (1, 1), (1, 1)]:
-        hy = 2
-    elif samps == [(1, 1), (1, 1), (1, 1)]:
-        hy = 1
-    else:
-        raise ValueError("only 4:4:4 or 4:2:0 sampling supported")
-    qms, dcts, acts = [], [], []
-    for cid, _, _, qsel in frame:
-        if qsel not in qtables or cid not in scan_sel:
-            raise ValueError("missing quant table or scan selector")
-        dsel, asel = scan_sel[cid]
-        if dsel not in dc_tabs or asel not in ac_tabs:
-            raise ValueError("missing huffman table")
-        qms.append(_zz_to_matrix(qtables[qsel]))
-        dcts.append(dc_tabs[dsel])
-        acts.append(ac_tabs[asel])
-
-    def read_symbol(r: _BitReader, tab: dict) -> int:
-        code, length = 0, 0
-        while length < 16:
-            code = (code << 1) | r.read_bit()
-            length += 1
-            sym = tab.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code")
-
-    def extend(bits: int, t: int) -> int:
-        return bits if bits >= (1 << (t - 1)) else bits - (1 << t) + 1
-
-    mcux = (width + 8 * hy - 1) // (8 * hy)
-    mcuy = (height + 8 * hy - 1) // (8 * hy)
-    fs = [hy, 1, 1]                                      # blocks per side
-    planes = [np.zeros((mcuy * f * 8, mcux * f * 8), dtype=np.float64)
-              for f in fs]
-    r = _BitReader(payload, data_at)
-    preds = [0, 0, 0]
-    n_in_chunk = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart and n_in_chunk == restart:
-                r.align()
-                m = r.at_marker()
-                if m is None or not 0xD0 <= m <= 0xD7:
-                    raise ValueError("expected restart marker")
-                r.pos += 2
-                preds = [0, 0, 0]
-                n_in_chunk = 0
-            for ci in range(3):
-                f, qm, dct, act = fs[ci], qms[ci], dcts[ci], acts[ci]
-                for by in range(f):
-                    for bx in range(f):
-                        zz = [0] * 64
-                        t = read_symbol(r, dct)
-                        diff = extend(r.read_bits(t), t) if t else 0
-                        preds[ci] += diff
-                        zz[0] = preds[ci]
-                        i = 1
-                        while i < 64:
-                            sym = read_symbol(r, act)
-                            if sym == 0x00:              # EOB
-                                break
-                            run, t = sym >> 4, sym & 0x0F
-                            if t == 0:
-                                if run != 15:
-                                    raise ValueError("bad AC symbol")
-                                i += 16                  # ZRL
-                                if i >= 64:
-                                    raise ValueError(
-                                        "ZRL overflows block")
-                                continue
-                            i += run
-                            if i >= 64:
-                                raise ValueError("AC run overflows block")
-                            zz[i] = extend(r.read_bits(t), t)
-                            i += 1
-                        coef = np.zeros(64)
-                        coef[_ZZ_NP] = zz                # de-zigzag
-                        block = _C.T @ (coef.reshape(8, 8) * qm) @ _C
-                        r0 = (my * f + by) * 8
-                        c0 = (mx * f + bx) * 8
-                        planes[ci][r0:r0 + 8, c0:c0 + 8] = block
-            n_in_chunk += 1
-    ints = [np.clip(np.rint(p + 128.0), 0, 255).astype(np.uint8)
-            for p in planes]
-    yp = ints[0][:height, :width]
-    if hy == 2:
-        cw, chh = (width + 1) // 2, (height + 1) // 2
-        cbp = np.repeat(np.repeat(ints[1][:chh, :cw], 2, 0), 2, 1)
-        crp = np.repeat(np.repeat(ints[2][:chh, :cw], 2, 0), 2, 1)
-        cbp, crp = cbp[:height, :width], crp[:height, :width]
-    else:
-        cbp, crp = ints[1][:height, :width], ints[2][:height, :width]
-    return width, height, ycbcr_to_rgb(yp, cbp, crp).tobytes()
+    width, height, _, px = _decode_jpeg(payload, 3)
+    return width, height, px
 
 
 def decode_jpeg(payload: bytes) -> tuple[int, int, int, bytes]:
     """Dispatch on the SOF0 component count: returns (width, height,
     channels, pixel bytes) — channels 1 (grayscale bytes) or 3
     (interleaved RGB)."""
-    if payload is None or len(payload) < 4 or payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError(f"expected marker at {pos}")
-        marker = payload[pos + 1]
-        if marker == 0xD9:
-            break
-        (ln,) = struct.unpack(">H", payload[pos + 2:pos + 4])
-        if marker == 0xC0:
-            if pos + 10 > len(payload):
-                raise ValueError("truncated SOF0 segment")
-            ncomp = payload[pos + 9]
-            if ncomp == 1:
-                w, h, px = decode_jpeg_gray(payload)
-                return w, h, 1, px
-            w, h, px = decode_jpeg_color(payload)
-            return w, h, 3, px
-        pos += 2 + ln
-    raise ValueError("missing SOF0")
+    return _decode_jpeg(payload)

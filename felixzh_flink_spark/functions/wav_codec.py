@@ -6,7 +6,9 @@ walking + sample unpacking — no codec library needed. Supports the
 canonical integer PCM envelope a fixture/ingest path produces: 8-bit
 unsigned and 16/24/32-bit signed little-endian, any channel count,
 arbitrary extra chunks (LIST/fact/...) before or after `data`. Anything
-else (float PCM, extensible format, A-law...) raises loudly.
+else (float PCM, extensible format, A-law...) raises loudly. The PCM,
+IMA-ADPCM and µ-law codecs share one RIFF chunk walk (`_wave_chunks`)
+and one RIFF writer (`_riff_wave`).
 
 Cost model: O(bytes) per file in Python, inside the Arrow-batched
 `mapInPandas` stage (`multimodal.wav_pcm_stats`) — the documented slow
@@ -17,6 +19,44 @@ via `multimodal.require_codec` without touching the Spark plan.
 from __future__ import annotations
 
 import struct
+
+
+def _riff_wave(fmt: bytes, data: bytes) -> bytes:
+    """The one RIFF writer: WAVE form with a `fmt ` chunk and a `data`
+    chunk, in that order."""
+    chunks = (b"WAVE"
+              + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+              + b"data" + struct.pack("<I", len(data)) + data)
+    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+
+
+def _wave_chunks(payload: bytes, fmt_layout: str) -> tuple[tuple, bytes]:
+    """The one RIFF chunk walk: word-aligned chunks, unknown ones
+    (LIST/fact/cue...) skipped, every length checked before slicing.
+    Returns (the `fmt ` chunk unpacked by `fmt_layout`, the `data`
+    chunk body)."""
+    if payload is None or len(payload) < 12 or payload[:4] != b"RIFF" \
+            or payload[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE payload")
+    pos = 12
+    fmt = data = None
+    while pos + 8 <= len(payload):
+        tag = payload[pos:pos + 4]
+        (length,) = struct.unpack("<I", payload[pos + 4:pos + 8])
+        body = payload[pos + 8:pos + 8 + length]
+        if len(body) != length:
+            raise ValueError("truncated chunk")
+        if tag == b"fmt ":
+            fmt = body
+        elif tag == b"data":
+            data = body
+        pos += 8 + length + (length & 1)    # chunks are word-aligned
+    if fmt is None or data is None:
+        raise ValueError("missing fmt/data chunk")
+    n = struct.calcsize(fmt_layout)
+    if len(fmt) < n:
+        raise ValueError("short fmt chunk")
+    return struct.unpack(fmt_layout, fmt[:n]), data
 
 
 def encode_wav(samples: list[int], sample_rate: int = 16_000,
@@ -37,12 +77,8 @@ def encode_wav(samples: list[int], sample_rate: int = 16_000,
         body += (s.to_bytes(1, "little") if bits == 8
                  else s.to_bytes(width, "little", signed=True))
     byte_rate = sample_rate * channels * width
-    fmt = struct.pack("<HHIIHH", 1, channels, sample_rate, byte_rate,
-                      channels * width, bits)
-    chunks = (b"WAVE"
-              + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-              + b"data" + struct.pack("<I", len(body)) + bytes(body))
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+    return _riff_wave(struct.pack("<HHIIHH", 1, channels, sample_rate,
+                                  byte_rate, channels * width, bits), body)
 
 
 def decode_wav(payload: bytes) -> tuple[int, int, int, list[int]]:
@@ -50,28 +86,8 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, list[int]]:
     PCM WAV. Walks the chunk stream (word-aligned, unknown chunks
     skipped), so files with LIST/fact/cue chunks decode fine. Raises
     ValueError on non-WAV, non-integer-PCM, or truncated input."""
-    if payload is None or len(payload) < 12 or payload[:4] != b"RIFF" \
-            or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos = 12
-    fmt = data = None
-    while pos + 8 <= len(payload):
-        tag = payload[pos:pos + 4]
-        (length,) = struct.unpack("<I", payload[pos + 4:pos + 8])
-        body = payload[pos + 8:pos + 8 + length]
-        if len(body) != length:
-            raise ValueError("truncated chunk")
-        if tag == b"fmt ":
-            fmt = body
-        elif tag == b"data":
-            data = body
-        pos += 8 + length + (length & 1)    # chunks are word-aligned
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    if len(fmt) < 16:
-        raise ValueError("short fmt chunk")
-    audio_fmt, channels, rate, _br, _ba, bits = struct.unpack(
-        "<HHIIHH", fmt[:16])
+    (audio_fmt, channels, rate, _br, _ba, bits), data = _wave_chunks(
+        payload, "<HHIIHH")
     if audio_fmt != 1:
         raise ValueError(f"unsupported audio format {audio_fmt} (PCM only)")
     if bits not in (8, 16, 24, 32):
@@ -184,15 +200,12 @@ def encode_wav_ima_adpcm(predictor: int, step_index: int, nibbles: bytes,
     samples_per_block = len(nibbles) + 1
     byte_rate = (sample_rate * block_align + samples_per_block - 1) \
         // samples_per_block
-    fmt = struct.pack("<HHIIHHHH", _WAVE_FORMAT_IMA_ADPCM, 1, sample_rate,
-                      byte_rate, block_align, 4, 2, samples_per_block)
     body = bytearray(struct.pack("<hBB", predictor, step_index, 0))
     for i in range(0, len(nibbles), 2):
         body.append(nibbles[i] | (nibbles[i + 1] << 4))
-    chunks = (b"WAVE"
-              + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-              + b"data" + struct.pack("<I", len(body)) + bytes(body))
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+    return _riff_wave(struct.pack("<HHIIHHHH", _WAVE_FORMAT_IMA_ADPCM, 1,
+                                  sample_rate, byte_rate, block_align, 4, 2,
+                                  samples_per_block), body)
 
 
 def decode_wav_adpcm(payload: bytes) -> tuple[int, list[int]]:
@@ -203,28 +216,8 @@ def decode_wav_adpcm(payload: bytes) -> tuple[int, list[int]]:
     sample) and run the IMA predictor/step-index state machine over the
     packed 4-bit codes, low nibble first. Stereo, truncated blocks, and
     wrong bit depth raise ValueError (quarantine contract)."""
-    if payload is None or len(payload) < 12 or payload[:4] != b"RIFF" \
-            or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos = 12
-    fmt = data = None
-    while pos + 8 <= len(payload):
-        tag = payload[pos:pos + 4]
-        (length,) = struct.unpack("<I", payload[pos + 4:pos + 8])
-        body = payload[pos + 8:pos + 8 + length]
-        if len(body) != length:
-            raise ValueError("truncated chunk")
-        if tag == b"fmt ":
-            fmt = body
-        elif tag == b"data":
-            data = body
-        pos += 8 + length + (length & 1)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    if len(fmt) < 20:
-        raise ValueError("short fmt chunk for ADPCM")
-    audio_fmt, channels, rate, _br, block_align, bits, cb, spb = \
-        struct.unpack("<HHIIHHHH", fmt[:20])
+    (audio_fmt, channels, rate, _br, block_align, bits, cb, spb), data = \
+        _wave_chunks(payload, "<HHIIHHHH")
     if audio_fmt != _WAVE_FORMAT_IMA_ADPCM:
         raise ValueError(f"not IMA ADPCM (format {audio_fmt})")
     if channels != 1:
@@ -268,40 +261,17 @@ def encode_wav_mulaw(ulaw_bytes: bytes, sample_rate: int = 8_000,
     if channels < 1 or len(ulaw_bytes) % channels:
         raise ValueError("sample count must be a multiple of channels")
     byte_rate = sample_rate * channels
-    fmt = struct.pack("<HHIIHHH", _WAVE_FORMAT_MULAW, channels,
-                      sample_rate, byte_rate, channels, 8, 0)
-    chunks = (b"WAVE"
-              + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-              + b"data" + struct.pack("<I", len(ulaw_bytes)) + ulaw_bytes)
-    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+    return _riff_wave(struct.pack("<HHIIHHH", _WAVE_FORMAT_MULAW, channels,
+                                  sample_rate, byte_rate, channels, 8, 0),
+                      ulaw_bytes)
 
 
 def decode_wav_mulaw(payload: bytes) -> tuple[int, int, list[int]]:
     """(sample_rate, channels, linear PCM samples) from a G.711 µ-law
     WAV (format tag 7): chunk walk, then the closed-form per-byte
     expansion `mulaw_to_linear`. Non-µ-law or non-8-bit raises."""
-    if payload is None or len(payload) < 12 or payload[:4] != b"RIFF" \
-            or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    pos = 12
-    fmt = data = None
-    while pos + 8 <= len(payload):
-        tag = payload[pos:pos + 4]
-        (length,) = struct.unpack("<I", payload[pos + 4:pos + 8])
-        body = payload[pos + 8:pos + 8 + length]
-        if len(body) != length:
-            raise ValueError("truncated chunk")
-        if tag == b"fmt ":
-            fmt = body
-        elif tag == b"data":
-            data = body
-        pos += 8 + length + (length & 1)
-    if fmt is None or data is None:
-        raise ValueError("missing fmt/data chunk")
-    if len(fmt) < 16:
-        raise ValueError("short fmt chunk")
-    audio_fmt, channels, rate, _br, _ba, bits = struct.unpack(
-        "<HHIIHH", fmt[:16])
+    (audio_fmt, channels, rate, _br, _ba, bits), data = _wave_chunks(
+        payload, "<HHIIHH")
     if audio_fmt != _WAVE_FORMAT_MULAW:
         raise ValueError(f"not mu-law (format {audio_fmt})")
     if bits != 8:

@@ -38,7 +38,16 @@ SCHEMA_DDL = ("file string, record_idx int, warc_type string, "
               "content_length bigint, block binary")
 
 
-def _expand_paths(path_opt: str) -> "list[str]":
+_WARC_SUFFIXES = (".warc", ".warc.gz")
+
+
+def _expand_paths(path_opt: str, suffixes: "tuple[str, ...]",
+                  noun: str) -> "list[str]":
+    """The file list of a file source's `path` option (a file, a
+    directory, or a comma-separated list of either): directories
+    contribute their files ending in one of `suffixes`, sorted; named
+    files are taken as given. An empty result raises ValueError naming
+    `noun`. Shared with `webdataset_source`."""
     files: list[str] = []
     for p in path_opt.split(","):
         p = p.strip()
@@ -47,11 +56,11 @@ def _expand_paths(path_opt: str) -> "list[str]":
         if os.path.isdir(p):
             files.extend(sorted(
                 os.path.join(p, f) for f in os.listdir(p)
-                if f.endswith((".warc", ".warc.gz"))))
+                if f.endswith(suffixes)))
         else:
             files.append(p)
     if not files:
-        raise ValueError(f"no WARC files under {path_opt!r}")
+        raise ValueError(f"no {noun} under {path_opt!r}")
     return files
 
 
@@ -64,7 +73,8 @@ class _WarcReader(DataSourceReader):
     def __init__(self, options):
         if "path" not in options:
             raise ValueError("felixzh_warc requires option 'path'")
-        self.files = _expand_paths(options["path"])
+        self.files = _expand_paths(options["path"], _WARC_SUFFIXES,
+                                   "WARC files")
         types = options.get("types")
         self.types = (set(t.strip() for t in types.split(","))
                       if types else None)
@@ -106,7 +116,7 @@ class _WarcStreamReader(DataSourceStreamReader):
             return []
         return sorted(
             os.path.join(self.path, f) for f in os.listdir(self.path)
-            if f.endswith((".warc", ".warc.gz")))
+            if f.endswith(_WARC_SUFFIXES))
 
     def initialOffset(self):
         return {"n": 0}
@@ -193,7 +203,7 @@ class _WarcWriter(DataSourceWriter):
         # append and a subsequent read would return duplicated records.
         if overwrite and os.path.isdir(self.path):
             for name in os.listdir(self.path):
-                if name.endswith((".warc", ".warc.gz")):
+                if name.endswith(_WARC_SUFFIXES):
                     os.remove(os.path.join(self.path, name))
 
     def write(self, iterator) -> _WarcCommit:

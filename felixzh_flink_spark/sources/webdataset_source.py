@@ -24,30 +24,14 @@ quarantine form).
 from __future__ import annotations
 
 import io
-import os
 import tarfile
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, \
     InputPartition
 
+from felixzh_flink_spark.sources.warc_source import _expand_paths
+
 SCHEMA_DDL = "file string, sample_key string, parts map<string,binary>"
-
-
-def _expand_paths(path_opt: str) -> "list[str]":
-    files: list[str] = []
-    for p in path_opt.split(","):
-        p = p.strip()
-        if not p:
-            continue
-        if os.path.isdir(p):
-            files.extend(sorted(
-                os.path.join(p, f) for f in os.listdir(p)
-                if f.endswith((".tar", ".tar.gz", ".tgz"))))
-        else:
-            files.append(p)
-    if not files:
-        raise ValueError(f"no tar shards under {path_opt!r}")
-    return files
 
 
 class _ShardPartition(InputPartition):
@@ -59,7 +43,8 @@ class _WebdatasetReader(DataSourceReader):
     def __init__(self, options):
         if "path" not in options:
             raise ValueError("felixzh_webdataset requires option 'path'")
-        self.files = _expand_paths(options["path"])
+        self.files = _expand_paths(options["path"],
+                                   (".tar", ".tar.gz", ".tgz"), "tar shards")
         exts = options.get("exts")
         self.exts = (set(e.strip().lstrip(".") for e in exts.split(","))
                      if exts else None)

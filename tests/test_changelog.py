@@ -452,6 +452,29 @@ def test_cdc_bootstrap_snapshot_then_stream(spark, tmp_path):
     assert got == {1: "a2", 3: "c", 9: "new"}
 
 
+def test_cdc_bootstrap_rerun_keeps_streamed_changes(spark, tmp_path):
+    """A bootstrap re-run after the stream has applied changes must not
+    commit the snapshot again: the deleted key stays deleted and the
+    updated key keeps its streamed value."""
+    from felixzh_flink_spark.functions.changelog import (
+        cdc_bootstrap_state, changelog_upsert_sink, read_upsert_state)
+
+    state = str(tmp_path / "state")
+    snapshot = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "id long, name string")
+    cdc_bootstrap_state(snapshot, state, ["id"])
+    changes = spark.createDataFrame(
+        [("-D", 2, "b", 20), ("+U", 1, "a2", 20)],
+        "op string, id long, name string, ts_ms long")
+    changelog_upsert_sink(state, ["id"])(changes, 0)
+    after_stream = {1: "a2", 3: "c"}
+    assert {r["id"]: r["name"]
+            for r in read_upsert_state(spark, state).collect()} == after_stream
+    cdc_bootstrap_state(snapshot, state, ["id"])
+    assert {r["id"]: r["name"]
+            for r in read_upsert_state(spark, state).collect()} == after_stream
+
+
 # ------------------------------------------- incremental view maintenance
 
 def _ivm_changelog(spark):
