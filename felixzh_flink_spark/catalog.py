@@ -217,12 +217,3 @@ def _scan_partition_estimate(df: DataFrame) -> int | None:
         filled += c + open_cost
     return max(1, parts + (filled > 0))
 
-
-def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> dict[str, DataFrame]:
-    """Register each table as a temp view; returns name → DataFrame."""
-    out = {}
-    for name in tables:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -33,10 +33,6 @@ except ImportError:  # pragma: no cover
 CSV_NULL = "\\N"
 
 
-def _ddl(schema: T.StructType) -> str:
-    return schema.simpleString()[7:-1]  # strip 'struct<' ... '>'
-
-
 def decode_csv(col: Column | str, schema: T.StructType, *,
                field_delimiter: str = ",", allow_comments: bool = False,
                ignore_parse_errors: bool = True) -> Column:

@@ -85,7 +85,9 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, list[int]]:
     """(sample_rate, channels, bits, interleaved samples) from a RIFF
     PCM WAV. Walks the chunk stream (word-aligned, unknown chunks
     skipped), so files with LIST/fact/cue chunks decode fine. Raises
-    ValueError on non-WAV, non-integer-PCM, or truncated input."""
+    ValueError on non-WAV, non-integer-PCM, truncated input, or a
+    sample count that is not a whole number of `channels`-wide frames
+    (including channels = 0)."""
     (audio_fmt, channels, rate, _br, _ba, bits), data = _wave_chunks(
         payload, "<HHIIHH")
     if audio_fmt != 1:
@@ -95,6 +97,8 @@ def decode_wav(payload: bytes) -> tuple[int, int, int, list[int]]:
     width = bits // 8
     if len(data) % width:
         raise ValueError("data chunk not sample-aligned")
+    if channels < 1 or len(data) // width % channels:
+        raise ValueError("data chunk not frame-aligned")
     if bits == 8:
         samples = list(data)
     else:

@@ -34,8 +34,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst", max_iter: int = 25,
                          out_node: str = "node",
-                         out_component: str = "component",
-                         on_nonconvergence: str = "star") -> DataFrame:
+                         out_component: str = "component") -> DataFrame:
     """(node, component) for every node appearing in `edges`, where
     `component` is the SMALLEST node id in the node's connected
     component — the canonical representative real dedup keeps.
@@ -44,14 +43,12 @@ def connected_components(edges: DataFrame, src: str = "src",
 
     Hash-min is the fast path (round count = component diameter, 2-4
     rounds on real near-dup graphs). If it has not converged after
-    `max_iter` rounds — a pathological high-diameter graph — behavior
-    is governed by `on_nonconvergence`: ``"star"`` (default) switches
-    to the alternating star-contraction algorithm
+    `max_iter` rounds — a pathological high-diameter graph — it hands
+    off to the alternating star-contraction algorithm
     (`connected_components_star`), which converges in O(log n) rounds
-    regardless of diameter; ``"raise"`` keeps the old hard safety
-    bound for callers that want a loud failure instead of a slower
-    per-round kernel (star contraction rewrites the edge set each
-    round where hash-min reuses one cached edge relation)."""
+    regardless of diameter (at a higher per-round cost: star
+    contraction rewrites the edge set each round where hash-min reuses
+    one cached edge relation)."""
     e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
          .union(edges.select(F.col(dst).alias("a"),
                              F.col(src).alias("b")))
@@ -95,30 +92,25 @@ def connected_components(edges: DataFrame, src: str = "src",
                           .localCheckpoint(eager=True))
                 persisted.unpersist()
                 return result
-        if on_nonconvergence == "star":
-            # Pathological diameter: switch algorithms. The current
-            # labels ride along as SHORTCUT edges (n → lbl never
-            # crosses a component, and each label already jumps up to
-            # max_iter hops), but the original edges must stay in the
-            # set — labels alone are not connectivity-preserving (a
-            # star's leaves all point at themselves after one round
-            # while only the center points at the min).
-            combined = e.union(
-                labels.select(F.col("n").alias("a"),
-                              F.col("lbl").alias("b")))
-            result = connected_components_star(
-                combined, src="a", dst="b",
-                out_node=out_node, out_component=out_component)
-            # star's first round eagerly localCheckpoints its edge
-            # set, so `combined` is already materialized — the cached
-            # labels are dead weight from here (ADVICE r7: they were
-            # pinned for the session lifetime on this path)
-            persisted.unpersist()
-            return result
+        # Pathological diameter: switch algorithms. The current
+        # labels ride along as SHORTCUT edges (n → lbl never
+        # crosses a component, and each label already jumps up to
+        # max_iter hops), but the original edges must stay in the
+        # set — labels alone are not connectivity-preserving (a
+        # star's leaves all point at themselves after one round
+        # while only the center points at the min).
+        combined = e.union(
+            labels.select(F.col("n").alias("a"),
+                          F.col("lbl").alias("b")))
+        result = connected_components_star(
+            combined, src="a", dst="b",
+            out_node=out_node, out_component=out_component)
+        # star's first round eagerly localCheckpoints its edge
+        # set, so `combined` is already materialized — the cached
+        # labels are dead weight from here (ADVICE r7: they were
+        # pinned for the session lifetime on this path)
         persisted.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "rounds — pathological diameter; switch to star contraction")
+        return result
     finally:
         e.unpersist()
 

@@ -22,6 +22,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from felixzh_flink_spark.operators.dedup import _banded_hamming_pairs
+
 #: metadata struct carried next to every media binary column.
 MEDIA_META_SCHEMA = T.StructType([
     T.StructField("media_type", T.StringType(), False),   # image|audio|video
@@ -723,10 +725,6 @@ def image_neardup_pairs(hashed: DataFrame, grid: int = 4,
     n = int(grid) * int(grid)
     assert n % bands == 0
     assert n <= 64, "packed-long hash: grid² must fit one BIGINT"
-    assert max_hamming < bands, (
-        "pigeonhole guarantee needs max_hamming < bands; a larger "
-        "max_hamming would silently drop qualifying pairs")
-    bw = n // bands
     # r12: the whole hash packs big-endian into ONE BIGINT (shiftleft|or
     # — pure bit ops, no ANSI overflow even at the 64-bit grid=8 pack
     # that `ahash`'s arithmetic fold must null out). Band values come
@@ -740,33 +738,7 @@ def image_neardup_pairs(hashed: DataFrame, grid: int = 4,
             "(acc, x) -> shiftleft(acc, 1) | CAST(x AS BIGINT))")
     alive = (hashed.filter(F.col("bits").isNotNull())
              .select(F.col(id_col).alias("id"), F.expr(pack).alias("_pb")))
-    mask = (1 << bw) - 1
-    # shiftrightunsigned: bit 0 of the hash sits at bit n-1 of the
-    # packed word (sign bit at n=64) — an arithmetic shift would smear it
-    band_val = (f"transform(sequence(0, {bands - 1}), b -> "
-                f"shiftrightunsigned(_pb, ({bands} - 1 - CAST(b AS INT)) "
-                f"* {bw}) & {mask}L)")
-    # the band join moves ONLY (id, band, bval) tuples — the r11 sf1
-    # measurement caught the earlier form carrying both 64-element bit
-    # arrays through the explode AND the candidate dedup (1.34 GB
-    # shuffle at 50k images; ~26 MB this way): candidates dedup as
-    # bare id pairs, then the packed hashes join back ONCE each for the
-    # Hamming verify
-    e = (alive.select("id",
-                      F.posexplode(F.expr(band_val))
-                      .alias("band", "bval")))
-    cand = (e.alias("a").join(e.alias("b"), ["band", "bval"])
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id_a"),
-                    F.col("b.id").alias("id_b"))
-            .dropDuplicates(["id_a", "id_b"]))
-    ha = alive.select(F.col("id").alias("id_a"), F.col("_pb").alias("_pa"))
-    hb = alive.select(F.col("id").alias("id_b"), F.col("_pb").alias("_pz"))
-    ham = F.expr("bit_count(_pa ^ _pz)")
-    return (cand.join(ha, "id_a").join(hb, "id_b")
-            .withColumn("hamming", ham)
-            .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming"))
+    return _banded_hamming_pairs(alive, n, bands, max_hamming)
 
 
 def _wav_payload(i: int) -> bytes:

@@ -11,7 +11,7 @@ kept here because it is oracle-checkable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -318,70 +318,29 @@ def cms_sketch_sink(state_dir: str, key_col: str, depth: int = 4,
         ["j"], lambda old, delta: cms_merge(delta, old), n_buckets)
 
 
-def exact_percentiles_distributed(df: DataFrame, col: str,
-                                  ps: list[float]) -> list[float]:
-    """EXACT percentiles (linear interpolation, the `percentile` /
-    `quantile_cont` rank = p·(n−1) formula) computed scale-safely: Spark's
-    exact `percentile` aggregate buffers every value and merges ALL
-    partition buffers on one reducer — a single-node sort of the whole
-    column, visible as the slowest stage at sf0.1 already and fatal at
-    100 TB. Instead: range-partition by value, per-partition counts roll
-    into broadcast offsets, within-partition row_number + offset = exact
-    global rank (the two-phase recipe shared with `quantile_bins` /
-    `acctbal_quartiles`), and ONLY the ≤ 2·len(ps) rows at the needed
-    order-statistic ranks are fetched. Returns driver-side floats — a
-    tiny ingest-time artifact, same lifecycle as IVF centroids."""
-    vals = df.select(F.col(col).cast("double").alias("_v")).filter(
-        F.col("_v").isNotNull())
-    n = vals.count()
-    if n == 0:
-        return [float("nan")] * len(ps)
-    want: dict[int, None] = {}
-    spec = []
-    for p in ps:
-        k = p * (n - 1)  # 0-based fractional rank
-        lo, hi = int(k // 1), min(int(k // 1) + 1, n - 1)
-        frac = k - lo
-        spec.append((lo, hi, frac))
-        want[lo] = want[hi] = None
-    nparts = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    ranged = (vals.repartitionByRange(nparts, F.col("_v"))
-              .withColumn("_pid", F.spark_partition_id()))
-    wo = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (ranged.groupBy("_pid").agg(F.count("*").alias("_n"))
-               .withColumn("_off", F.coalesce(F.sum("_n").over(wo),
-                                              F.lit(0).cast("bigint")))
-               .select("_pid", "_off"))
-    wp = Window.partitionBy("_pid").orderBy("_v")
-    picked = (ranged.withColumn("_rn", F.row_number().over(wp))
-              .join(F.broadcast(offsets), "_pid")
-              .withColumn("_rank", F.col("_rn") + F.col("_off") - 1)
-              .filter(F.col("_rank").isin(*want))
-              .select("_rank", "_v").collect())
-    at = {r["_rank"]: r["_v"] for r in picked}
-    # (1−f)·lo + f·hi, NOT lo + f·(hi−lo): the two differ in the last
-    # ulp for some inputs and the former is what DuckDB's quantile_cont
-    # (the correctness oracle) computes — hypothesis found the divergence
-    return [(1.0 - frac) * at[lo] + frac * at[hi] for lo, hi, frac in spec]
-
-
 def exact_percentiles_frame(df: DataFrame, col: str, ps: list[float],
                             alias: str = "q") -> DataFrame:
-    """`exact_percentiles_distributed` as a LAZY one-row DataFrame —
-    same two-phase range-partitioned order statistics, but the needed
-    rank positions are computed IN-PLAN against a broadcast count row
-    instead of collecting anything to the driver. Returns a 1-row frame
-    with `alias` = array<double> of the percentiles in `ps` order
-    (mirrors DuckDB's `quantile_cont(x, [...])` shape, so oracles can
-    replay it verbatim with `FROM t, e`).
+    """EXACT percentiles (linear interpolation, the `percentile` /
+    `quantile_cont` rank = p·(n−1) formula) as a LAZY one-row
+    DataFrame, computed scale-safely: Spark's exact `percentile`
+    aggregate buffers every value and merges ALL partition buffers on
+    one reducer — a single-node sort of the whole column, visible as
+    the slowest stage at sf0.1 already and fatal at 100 TB. Instead:
+    range-partition by value, per-partition counts roll into broadcast
+    offsets, within-partition row_number + offset = exact global rank
+    (the two-phase recipe shared with `quantile_bins` /
+    `acctbal_quartiles`), and the needed rank positions are computed
+    IN-PLAN against the broadcast count instead of collecting anything
+    to the driver. Returns a 1-row frame with `alias` = array<double>
+    of the percentiles in `ps` order (mirrors DuckDB's
+    `quantile_cont(x, [...])` shape, so oracles can replay it verbatim
+    with `FROM t, e`).
 
-    Use this over the collecting variant whenever the percentiles feed
-    ANOTHER plan (fences, bin edges, clamps): the whole pipeline stays
-    one job — no count/collect round-trips billed before execution, and
-    nothing leaves the cluster. Interpolation arithmetic is the same
-    rank = p·(n−1) double expression, so results are bit-identical to
-    the collecting variant and to `quantile_cont`. Empty input yields
-    NULL entries (the collecting variant returns NaN)."""
+    When the percentiles feed ANOTHER plan (fences, bin edges, clamps)
+    the whole pipeline stays one job — no count/collect round-trips
+    billed before execution, and nothing leaves the cluster. Results
+    are bit-identical to Spark's `percentile` and to `quantile_cont`.
+    Empty input yields NULL entries."""
     # The ENTIRE two-phase rank pipeline is rendered as ONE spark.sql
     # call ({df} parameter substitution, Spark 3.5+) instead of ~14
     # incremental DataFrame ops: every DataFrame call re-analyzes the
@@ -405,8 +364,9 @@ def exact_percentiles_frame(df: DataFrame, col: str, ps: list[float],
         lov = f"max(CASE WHEN _rank = {_lo(p)} THEN _v END)"
         hiv = (f"max(CASE WHEN _rank = LEAST({_lo(p)} + 1, _n - 1) "
                f"THEN _v END)")
-        # (1−f)·lo + f·hi — bit-matches DuckDB quantile_cont (see the
-        # collecting variant); hypothesis-verified on random multisets
+        # (1−f)·lo + f·hi, NOT lo + f·(hi−lo): the two differ in the
+        # last ulp for some inputs and the former is what DuckDB's
+        # quantile_cont computes; hypothesis-verified on random multisets
         return f"((1.0D - {frac}) * {lov} + {frac} * {hiv})"
 
     keep = " OR ".join(

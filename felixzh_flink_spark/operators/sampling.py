@@ -233,7 +233,7 @@ def content_split(df: DataFrame, text_col: str = "text",
 
     Adds `split`; single scan, zero shuffles (the hash is a projection).
     Near-dup-safe splitting goes one step further — key by the dup
-    CLUSTER id from `dedup.dup_clusters` + `keep_best_per_cluster`,
+    CLUSTER id from `graph.connected_components` + `keep_best_per_cluster`,
     which this composes with (pass the cluster id through `hash_bucket`
     yourself); content hashing alone already closes the exact-dup hole
     at zero cost.

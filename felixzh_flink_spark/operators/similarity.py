@@ -139,10 +139,6 @@ def _norm_sql(a: str) -> str:
             f"cast(x as double)), cast(0.0 as double), (acc, x) -> acc + x))")
 
 
-def _cosine_sql(a: str, b: str) -> str:
-    return f"({_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)}))"
-
-
 def cosine_to_literal(vec_col: str, query_vec: list[float]) -> Column:
     """cosine(col, literal query vector) as a single-roundtrip expression.
     Bit-identical to `cosine(F.col(vec_col), F.array(*lits))` — same fold
@@ -1045,13 +1041,6 @@ def quantize_embeddings(df: DataFrame, vec_col: str = "embedding",
         F.transform(F.col(vec_col),
                     lambda x: F.round(x.cast("double") / F.col(scale_col))
                     .cast("tinyint")))
-
-
-def quantized_cosine(qa: Column, qb: Column) -> Column:
-    """Cosine over two int8-quantized vectors. Per-vector scales cancel:
-    cos(sa·qa, sb·qb) = cos(qa, qb), so no scale columns are needed —
-    cheap integer multiplies until the final normalize."""
-    return cosine(qa, qb)
 
 
 def decontaminate_semantic(corpus: DataFrame, benchmark: DataFrame,

@@ -56,8 +56,51 @@ COUNT_WINDOW_STATE = T.StructType([
 ])
 
 
-def make_count_window_fn(max_count: int, timeout_ms: int | None = None,
-                         emit_partial_on_timeout: bool = True):
+def _count_fire(key: tuple, state: tuple, chunks,
+                max_count: int) -> tuple[tuple, list[dict], int]:
+    """The one fire step of both count-window forms (MyCountTrigger.java
+    :36-71): accumulate `chunks` into the (buf_cnt, buf_sum, fired)
+    state and FIRE_AND_PURGE each time the buffer reaches `max_count`.
+    `chunks=None` is the window-end timer: a non-empty buffer fires as a
+    'timeout' window. A timeout fire consumes a sequence number exactly
+    like a count fire, and the fired counter survives an empty flush, so
+    window_seq stays monotonic per key (removing the state reset the
+    next window to seq 0 → duplicate (key, seq) pairs). Returns
+    (new state, fired rows, max event time seen in ms — 0 when the
+    chunks carry no event-time column)."""
+    buf_cnt, buf_sum, fired = state
+    out = []
+    last_ms = 0
+    if chunks is None:
+        if buf_cnt > 0:
+            out.append({"key": key[0], "window_seq": fired, "cnt": buf_cnt,
+                        "sum_value": buf_sum, "fired_by": "timeout"})
+            fired += 1
+        return (0, 0.0, fired), out, last_ms
+    for pdf in chunks:
+        # transformWithState REWRITES the event-time column's name when
+        # timeMode='eventTime' (the watermarked `_ts` arrives as a
+        # positional `_2` in Spark 4.1) — resolve it by dtype, preferring
+        # the declared name if it survived
+        ts_col = "_ts" if "_ts" in pdf.columns else next(
+            (c for c in pdf.columns
+             if str(pdf[c].dtype).startswith("datetime64")), None)
+        if ts_col is not None:
+            last_ms = chunk_max_ms(pdf, ts_col, last_ms)
+        for v in pdf["value"]:
+            buf_cnt += 1
+            buf_sum += float(v)
+            if buf_cnt >= max_count:
+                out.append({
+                    "key": key[0], "window_seq": fired, "cnt": buf_cnt,
+                    "sum_value": buf_sum, "fired_by": "count",
+                })
+                fired += 1
+                buf_cnt, buf_sum = 0, 0.0
+    return (buf_cnt, buf_sum, fired), out, last_ms
+
+
+def make_count_window_fn(max_count: int, timeout_ms: int | None = None):
     """Build the applyInPandasWithState function implementing
     MyCountTrigger.java:36-71 semantics: accumulate per key; when the buffer
     reaches `max_count` → FIRE_AND_PURGE; when the event-time timer expires
@@ -69,49 +112,25 @@ def make_count_window_fn(max_count: int, timeout_ms: int | None = None,
 
     def fn(key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
-            buf_cnt, buf_sum, fired = state.get
-            if emit_partial_on_timeout and buf_cnt > 0:
-                # keep window_seq monotonic per key: a timeout fire consumes a
-                # sequence number exactly like a count fire, so state keeps the
-                # advanced counter instead of being removed (removing it reset
-                # the next window to seq 0 → duplicate (key, seq) pairs).
-                state.update((0, 0.0, fired + 1))
-                yield pd.DataFrame([{
-                    "key": key[0], "window_seq": fired, "cnt": buf_cnt,
-                    "sum_value": buf_sum, "fired_by": "timeout",
-                }])
-            else:
-                # empty buffer: keep the fired counter (removing state would
-                # restart seq at 0 when the key sees data again); no new
-                # timer — the next arriving batch re-arms it.
-                state.update((0, 0.0, fired))
-            return
-
-        buf_cnt, buf_sum, fired = state.get if state.exists else (0, 0.0, 0)
-        out = []
-        last_ms = 0
-        for pdf in pdf_iter:
+            # window-end flush; no new timer — the next arriving batch
+            # re-arms it
+            new, out, _ = _count_fire(key, state.get, None, max_count)
+            state.update(new)
+        else:
+            new, out, last_ms = _count_fire(
+                key, state.get if state.exists else (0, 0.0, 0), pdf_iter,
+                max_count)
+            state.update(new)
             if timeout_ms is not None:
-                last_ms = chunk_max_ms(pdf, "_ts", last_ms)
-            for v in pdf["value"]:
-                buf_cnt += 1
-                buf_sum += float(v)
-                if buf_cnt >= max_count:
-                    out.append({
-                        "key": key[0], "window_seq": fired, "cnt": buf_cnt,
-                        "sum_value": buf_sum, "fired_by": "count",
-                    })
-                    fired += 1
-                    buf_cnt, buf_sum = 0, 0.0
-        state.update((buf_cnt, buf_sum, fired))
-        if timeout_ms is not None:
-            # window end = timeout_ms past the buffer's last event time (or
-            # the watermark if it is already ahead). Anchoring on the
-            # watermark ALONE would put the first batch's timer at
-            # 1970+timeout (watermark is 0 until a batch completes) and
-            # fire every partial buffer one batch early.
-            state.setTimeoutTimestamp(
-                max(last_ms, state.getCurrentWatermarkMs()) + timeout_ms)
+                # window end = timeout_ms past the buffer's last event
+                # time (or the watermark if it is already ahead).
+                # Anchoring on the watermark ALONE would put the first
+                # batch's timer at 1970+timeout (watermark is 0 until a
+                # batch completes) and fire every partial buffer one
+                # batch early.
+                state.setTimeoutTimestamp(
+                    max(last_ms, state.getCurrentWatermarkMs())
+                    + timeout_ms)
         if out:
             yield pd.DataFrame(out)
 
@@ -193,11 +212,9 @@ class CountWindowProcessor(StatefulProcessor):
     otherwise every batch would leave a stale window-end timer behind,
     each firing a spurious partial window."""
 
-    def __init__(self, max_count: int, timeout_ms: int | None = None,
-                 emit_partial_on_timeout: bool = True):
+    def __init__(self, max_count: int, timeout_ms: int | None = None):
         self._max = max_count
         self._timeout_ms = timeout_ms
-        self._emit_partial = emit_partial_on_timeout
 
     def init(self, handle) -> None:
         self._buf = handle.getValueState(
@@ -217,31 +234,8 @@ class CountWindowProcessor(StatefulProcessor):
                                               int(v[2]))
 
     def handleInputRows(self, key, rows, timerValues):
-        buf_cnt, buf_sum, fired = self._state()
-        out = []
-        last_ms = 0
-        for pdf in rows:
-            if self._timeout_ms is not None:
-                # transformWithState REWRITES the event-time column's name
-                # when timeMode='eventTime' (the watermarked `_ts` arrives
-                # as a positional `_2` in Spark 4.1) — resolve it by dtype,
-                # preferring the declared name if it survived
-                ts_col = "_ts" if "_ts" in pdf.columns else next(
-                    (c for c in pdf.columns
-                     if str(pdf[c].dtype).startswith("datetime64")), None)
-                if ts_col is not None:
-                    last_ms = chunk_max_ms(pdf, ts_col, last_ms)
-            for v in pdf["value"]:
-                buf_cnt += 1
-                buf_sum += float(v)
-                if buf_cnt >= self._max:
-                    out.append({
-                        "key": key[0], "window_seq": fired, "cnt": buf_cnt,
-                        "sum_value": buf_sum, "fired_by": "count",
-                    })
-                    fired += 1
-                    buf_cnt, buf_sum = 0, 0.0
-        self._buf.update((buf_cnt, buf_sum, fired))
+        new, out, last_ms = _count_fire(key, self._state(), rows, self._max)
+        self._buf.update(new)
         if self._timeout_ms is not None:
             prev = self._armed.get()
             if prev is not None:
@@ -254,16 +248,11 @@ class CountWindowProcessor(StatefulProcessor):
             yield pd.DataFrame(out)
 
     def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        buf_cnt, buf_sum, fired = self._state()
         self._armed.clear()
-        if self._emit_partial and buf_cnt > 0:
-            self._buf.update((0, 0.0, fired + 1))
-            yield pd.DataFrame([{
-                "key": key[0], "window_seq": fired, "cnt": buf_cnt,
-                "sum_value": buf_sum, "fired_by": "timeout",
-            }])
-        else:
-            self._buf.update((0, 0.0, fired))
+        new, out, _ = _count_fire(key, self._state(), None, self._max)
+        self._buf.update(new)
+        if out:
+            yield pd.DataFrame(out)
 
 
 def count_window_tws(df: DataFrame, key_col: str, value_col: str,
@@ -280,8 +269,7 @@ def count_window_tws(df: DataFrame, key_col: str, value_col: str,
     deployment; absent from this CI container, where the e2e test
     auto-skips and the processor logic is unit-tested against fake
     state handles instead)."""
-    proc = CountWindowProcessor(max_count, timeout_ms,
-                                emit_partial_on_timeout=True)
+    proc = CountWindowProcessor(max_count, timeout_ms)
     cols = [
         F.col(key_col).cast("string").alias("key"),
         F.col(value_col).cast("double").alias("value"),

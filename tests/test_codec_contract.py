@@ -227,6 +227,22 @@ def test_short_jpeg_segments_raise_value_error(payload, decoder):
             decode(payload)
 
 
+def _set_wav_channels(payload, channels):
+    # RIFF header (12 bytes) + fmt chunk header (8) + format tag (2)
+    return payload[:22] + struct.pack("<H", channels) + payload[24:]
+
+
+@pytest.mark.parametrize("channels", [0, 3])
+def test_wav_channel_count_must_frame_the_samples(channels):
+    """A PCM WAV whose fmt chunk declares no channels, or a channel
+    count that does not divide the sample count, raises ValueError
+    instead of decoding to an unframed sample list."""
+    stereo = W.encode_wav(list(range(-4, 4)), 16_000, 2, 16)
+    assert W.decode_wav(stereo)[:3] == (16_000, 2, 16)
+    with pytest.raises(ValueError):
+        W.decode_wav(_set_wav_channels(stereo, channels))
+
+
 _FUZZ_FIXTURES = [
     (J.decode_jpeg_gray, _GRAY_RST),
     (J.decode_jpeg_color, _COLOR),

@@ -1,3 +1,5 @@
+import pytest
+
 from pyspark.sql import functions as F
 
 from felixzh_flink_spark.operators import dedup as DD
@@ -60,6 +62,27 @@ def test_simhash_near_pairs_includes_identical(spark):
     assert pairs.get((1, 4)) == 0
 
 
+@pytest.mark.parametrize("max_hamming", [3, 6])
+def test_simhash_near_pairs_match_all_pairs_hamming(spark, sf_dir,
+                                                    max_hamming):
+    """Completeness of the banded join: every pair of fixture documents
+    within `max_hamming` bits comes back, with its exact distance, and
+    nothing else — against brute-force all-pairs Hamming over the same
+    fingerprints. At max_hamming=6 the 7 bands are 9 bits wide and one
+    bit falls in no band."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    fps = sorted((r["id"], r["simhash"]) for r in DD.simhash(docs).collect())
+    want = {}
+    for i, (a, ha) in enumerate(fps):
+        for b, hb in fps[i + 1:]:
+            d = bin((ha ^ hb) & (2 ** 64 - 1)).count("1")
+            if d <= max_hamming:
+                want[(a, b)] = d
+    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in
+           DD.simhash_near_pairs(docs, max_hamming=max_hamming).collect()}
+    assert want and got == want
+
+
 def test_cosine_topk_bruteforce_self_is_top(spark, sf_dir):
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qv = list(e.filter(F.col("vec_id") == 5).head()["embedding"])
@@ -109,23 +132,6 @@ def test_ivf_topk_finds_self_and_matches_bruteforce_head(spark, sf_dir):
     exact = [r["id"] for r in SIM.cosine_topk_bruteforce(e, qv, k=5).collect()]
     full = [r["id"] for r in SIM.ivf_topk(e, qv, k=5, n_centroids=8, n_probe=8).collect()]
     assert full == exact
-
-
-def test_dup_clusters_transitive_closure(spark):
-    """Pairs (1,2),(2,3) and (5,6) → components {1,2,3} and {5,6}, labeled
-    by min id; 2-hop chain needs >1 propagation iteration."""
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)], "id_a long, id_b long")
-    got = {r["id"]: r["cluster_id"] for r in DD.dup_clusters(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
-
-
-def test_dup_clusters_long_chain(spark):
-    """A 6-node path graph exercises multi-iteration convergence."""
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 6)], "id_a long, id_b long")
-    got = {r["id"]: r["cluster_id"] for r in DD.dup_clusters(pairs).collect()}
-    assert got == {i: 1 for i in range(1, 7)}
 
 
 def test_ivf_refined_centroids_improve_or_match_recall(spark, sf_dir):
@@ -425,22 +431,6 @@ def test_edit_distance_pairs_blocking_and_verify(spark):
     assert not any(4 in p for p in got)
 
 
-def test_dup_clusters_raises_when_budget_exhausted(spark):
-    """A chain whose diameter exceeds max_iter must raise instead of
-    silently emitting a split component."""
-    import pytest
-
-    from felixzh_flink_spark.operators import dedup as DD
-
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 9)], "id_a long, id_b long")
-    ok = {r["id"]: r["cluster_id"] for r in
-          DD.dup_clusters(chain, max_iter=10).collect()}
-    assert set(ok.values()) == {1}
-    with pytest.raises(RuntimeError, match="did not converge"):
-        DD.dup_clusters(chain, max_iter=3)
-
-
 # ------------------------------------------------- exact-substring spans
 
 def test_repeated_spans_flags_cross_doc_runs(spark):
@@ -507,23 +497,6 @@ def test_dedup_incremental_empty_state(spark):
     out = {r["doc_id"]: r["status"]
            for r in DD.dedup_incremental(new, empty).collect()}
     assert out == {1: "new_unique", 2: "dup_in_batch"}
-
-
-def test_dup_clusters_converges_at_exact_budget_boundary(spark):
-    # chain 1-2-3-4: last label change happens on iteration 3; the
-    # confirming pass must not count against the budget
-    chain = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], "id_a long, id_b long")
-    got = {r["id"]: r["cluster_id"]
-           for r in DD.dup_clusters(chain, max_iter=3).collect()}
-    assert set(got.values()) == {1}
-
-
-def test_dup_clusters_zero_budget_raises_cleanly(spark):
-    import pytest
-    chain = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        DD.dup_clusters(chain, max_iter=0)
 
 
 def test_cut_repeated_spans_removes_shared_run_only(spark):

@@ -68,14 +68,6 @@ def test_min_label_is_the_component_min(spark):
     assert got[100] == got[42] == 42
 
 
-def test_convergence_bound_raises_when_asked(spark):
-    chain = [(i, i + 1) for i in range(12)]
-    with pytest.raises(RuntimeError):
-        connected_components(
-            spark.createDataFrame(chain, "src long, dst long"),
-            max_iter=2, on_nonconvergence="raise").collect()
-
-
 def test_default_falls_back_to_star_on_long_chain(spark):
     # diameter 12 ≫ max_iter=2: hash-min cannot converge; the default
     # policy must hand off to star contraction and still return the

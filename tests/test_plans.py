@@ -553,3 +553,35 @@ def test_neardup_delta_probe_broadcasts_onto_corpus_scan(spark):
     # construction and its candidate ids are checkpointed; the delta
     # fixture's own scans are likewise truncated)
     assert p.count("documents.parquet") == 1
+
+
+def _node_counts(plan: str) -> dict:
+    """Physical operator name → occurrences in a plan tree string."""
+    import re
+    from collections import Counter
+
+    names = Counter()
+    for line in plan.splitlines():
+        node = re.sub(r"^[\s:+\-|]*(\*\(\d+\)\s*)?", "", line)
+        names[re.split(r"[\s(\[]", node, maxsplit=1)[0]] += 1
+    return names
+
+
+def test_neardup_queries_keep_one_band_join_shape(spark):
+    """The banded-Hamming near-dup queries run one band join: posexplode
+    the bands (one Generate per join side), self-join on (band, bval)
+    and dedup the id pairs (the only shuffle), then broadcast-join each
+    packed hash back once for the bit_count(xor) verify. Pinned per
+    operator class, so a change to the shared join shows here."""
+    PY_NODES = ("ArrowEvalPython", "FlatMapGroupsInPandas", "MapInPandas",
+                "BatchEvalPython")
+    expected = {"Exchange": 1, "BroadcastExchange": 3,
+                "BroadcastHashJoin": 3, "SortMergeJoin": 0,
+                "ShuffledHashJoin": 0, "BroadcastNestedLoopJoin": 0,
+                "CartesianProduct": 0, "Generate": 2,
+                **{n: 0 for n in PY_NODES}}
+    for name in ("image_ahash_neardup", "audio_fingerprint_neardup",
+                 "image_ahash_neardup_grid8",
+                 "audio_fingerprint_neardup_w64"):
+        counts = _node_counts(plan_of(spark, name))
+        assert {k: counts[k] for k in expected} == expected, name

@@ -489,20 +489,21 @@ def test_psi_report_detects_shift(spark):
     assert psi_report(ref, shifted, "v", edges).count() == 4
 
 
-def test_exact_percentiles_distributed_match_builtin(spark):
+def test_exact_percentiles_frame_match_builtin(spark):
     from felixzh_flink_spark.operators.profiling import (
-        exact_percentiles_distributed)
+        exact_percentiles_frame)
     import random
     random.seed(3)
     vals = [(random.random() * 1000,) for _ in range(997)]
     df = spark.createDataFrame(vals, "v double")
     ps = [0.0, 0.01, 0.5, 0.73, 0.99, 1.0]
-    got = exact_percentiles_distributed(df, "v", ps)
+    got = list(exact_percentiles_frame(df, "v", ps).first()["q"])
     want = df.agg(F.expr(
         f"percentile(v, array({','.join(map(repr, ps))}))")).first()[0]
     assert got == list(want)  # bit-identical order statistics
     # stable under repartitioning
-    assert exact_percentiles_distributed(df.repartition(13), "v", ps) == got
+    assert list(exact_percentiles_frame(
+        df.repartition(13), "v", ps).first()["q"]) == got
 
 
 def test_robust_zscore_flags_only_true_outliers(spark):

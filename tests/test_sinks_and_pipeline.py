@@ -158,44 +158,95 @@ def test_pipeline_trigger_interval_config(spark, tmp_path):
 
 def test_zorder_interleave_known_values(spark):
     from pyspark.sql import Row, functions as F
-    from felixzh_flink_spark.sinks.layout import interleave_bits
+    from felixzh_flink_spark.operators.layout import zorder_value
     df = spark.createDataFrame([Row(a=3, b=5)])  # 0b011, 0b101
     # interleave: a bits at even positions, b at odd:
     # a=011 -> 0b010101 contribution at 2i; b=101 -> bit0->pos1? b bit i -> 2i+1
     # a: bits (0,1)=1 -> pos 0,2 ; b: bits(0,2)=1 -> pos 1,5 => 0b100111 = 39
-    got = df.select(interleave_bits(F.col("a"), F.col("b"), bits=3).alias("z")).head()["z"]
+    got = df.select(zorder_value([F.col("a"), F.col("b")], bits=3)
+                    .alias("z")).head()["z"]
     assert got == 39
+
+
+def _file_bounding_boxes(path: str, col_a: str, col_b: str) -> list[dict]:
+    """Per-file (min, max) of both layout columns read from parquet
+    footers — metadata only, zero row reads. A file counts only when
+    BOTH columns have footer stats; such files are conservatively
+    unprunable otherwise."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    boxes = []
+    for f in sorted(glob.glob(os.path.join(path, "*.parquet"))):
+        md = pq.ParquetFile(f).metadata
+        mins: dict[str, float] = {}
+        maxs: dict[str, float] = {}
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            for ci in range(g.num_columns):
+                c = g.column(ci)
+                name = c.path_in_schema
+                if name in (col_a, col_b) and c.statistics is not None:
+                    st = c.statistics
+                    mins[name] = min(mins.get(name, st.min), st.min)
+                    maxs[name] = max(maxs.get(name, st.max), st.max)
+        if all(c in mins for c in (col_a, col_b)):
+            boxes.append({"file": os.path.basename(f),
+                          col_a: (mins[col_a], maxs[col_a]),
+                          col_b: (mins[col_b], maxs[col_b])})
+    return boxes
+
+
+def _files_intersecting_box(boxes: list[dict], col_a: str, col_b: str,
+                            a_range: tuple, b_range: tuple) -> int:
+    """How many files a box predicate must read, by footer stats."""
+    n = 0
+    for box in boxes:
+        (a_lo, a_hi), (b_lo, b_hi) = box[col_a], box[col_b]
+        if a_hi >= a_range[0] and a_lo <= a_range[1] \
+                and b_hi >= b_range[0] and b_lo <= b_range[1]:
+            n += 1
+    return n
 
 
 def test_zorder_roundtrip_and_skippability(spark, tmp_path):
     """Z-ordered layout: row parity, and a 2-D box query must skip more
     files (by footer min/max) than a single-column-sorted layout."""
     from pyspark.sql import functions as F
-    from felixzh_flink_spark.sinks.layout import (
-        file_bounding_boxes, files_intersecting_box, write_zordered)
+    from felixzh_flink_spark.operators.layout import (
+        range_bucket, write_zordered)
     n = 20_000
     df = spark.range(n).select(
         (F.xxhash64("id", F.lit(1)) % 1000).alias("x"),
         (F.xxhash64("id", F.lit(2)) % 1000).alias("y"))
     zpath = str(tmp_path / "zorder")
     spath = str(tmp_path / "sorted")
-    write_zordered(df, zpath, "x", "y", bits=8, num_files=16)
+    # both columns take the integers of (-1000, 999] by construction:
+    # literal bounds, no min/max pass. range_bucket puts a value that
+    # sits exactly on a bucket edge into the lower bucket, so these
+    # bounds keep the box edge 0 inside the upper half's first bucket
+    # (with lo = -999 it lands on the top-level edge, in the lower half)
+    write_zordered(df, zpath, [range_bucket("x", -1000, 999, 8),
+                               range_bucket("y", -1000, 999, 8)],
+                   bits=8, n_files=16)
     df.repartitionByRange(16, "x").sortWithinPartitions("x") \
         .write.mode("overwrite").parquet(spath)
     # parity
     assert spark.read.parquet(zpath).count() == n
     assert (spark.read.parquet(zpath).agg(F.sum("x"), F.sum("y")).head()
             == df.agg(F.sum("x"), F.sum("y")).head())
-    zboxes = file_bounding_boxes(zpath, "x", "y")
-    sboxes = file_bounding_boxes(spath, "x", "y")
+    zboxes = _file_bounding_boxes(zpath, "x", "y")
+    sboxes = _file_bounding_boxes(spath, "x", "y")
     assert len(zboxes) >= 8 and len(sboxes) >= 8
     full = (-1000, 1000)
     narrow_y = (0, 20)  # ~1% of the y domain
     # y-only predicate: the x-sorted layout cannot prune AT ALL (y is
     # unclustered, every file's y-range spans the domain); z-order bounds
     # every file in BOTH dims, so most files are skipped
-    zn_y = files_intersecting_box(zboxes, "x", "y", full, narrow_y)
-    sn_y = files_intersecting_box(sboxes, "x", "y", full, narrow_y)
+    zn_y = _files_intersecting_box(zboxes, "x", "y", full, narrow_y)
+    sn_y = _files_intersecting_box(sboxes, "x", "y", full, narrow_y)
     assert sn_y == len(sboxes)          # sorted layout reads everything
     assert zn_y <= len(zboxes) // 2     # z-order skips the majority
     # x-only predicate: z-order gives up SOME single-dim pruning vs a
@@ -203,7 +254,7 @@ def test_zorder_roundtrip_and_skippability(spark, tmp_path):
     # Threshold is 2/3, not 1/2: repartitionByRange's reservoir sampling
     # is seeded by RDD id, so file boundaries jitter by a file or two
     # depending on how many jobs ran earlier in the session.
-    zn_x = files_intersecting_box(zboxes, "x", "y", (0, 20), full)
+    zn_x = _files_intersecting_box(zboxes, "x", "y", (0, 20), full)
     assert zn_x <= len(zboxes) * 2 // 3
 
 
