@@ -1,9 +1,10 @@
 """Benchmark runner — driver contract: ONE JSON line on stdout.
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS]. Each query is forced through full execution with
-the `noop` sink (no driver-side collect of big results; count() shortcuts are
-avoided). Per-query wall seconds + total reported.
+on local[$SPARK_GRAFT_CPUS] (default: the usable CPUs). Each query is forced
+through full execution with the `noop` sink (no driver-side collect of big
+results; count() shortcuts are avoided). Per-query wall seconds + total
+reported.
 """
 
 from __future__ import annotations

@@ -47,7 +47,19 @@ def _norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+    # try_divide: a zero-norm (or NULL) vector scores NULL under ANSI
+    # instead of aborting the query; nonzero norms divide bit-identically
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
+
+
+def _l2(vec: list[float]) -> float:
+    """Driver-side twin of `_norm`: the same left fold of double squares,
+    then a correctly-rounded sqrt (both IEEE-deterministic), so the value
+    is bit-equal to what the SQL fold would produce."""
+    acc = 0.0
+    for x in vec:
+        acc += float(x) * float(x)
+    return math.sqrt(acc)
 
 
 # --- SQL-text expression builders -------------------------------------
@@ -149,16 +161,11 @@ def cosine_to_literal(vec_col: str, query_vec: list[float]) -> Column:
     correctly-rounded sqrt — both IEEE-deterministic) and embedded as a
     literal: Catalyst does not constant-fold higher-order-function folds
     over literal arrays, so the SQL-side form re-ran a dim-element fold
-    per scanned row for a value that never changes."""
-    import math
-
-    acc = 0.0
-    for x in query_vec:
-        acc += float(x) * float(x)
-    q_norm = math.sqrt(acc)
+    per scanned row for a value that never changes. A zero-norm or NULL
+    vector (either side) scores NULL, which ranks after every scored row."""
     return F.expr(
-        f"({_dot_sql(vec_col, _lit_vec_sql(query_vec))} / "
-        f"({_norm_sql(vec_col)} * {q_norm!r}D))")
+        f"try_divide({_dot_sql(vec_col, _lit_vec_sql(query_vec))}, "
+        f"{_norm_sql(vec_col)} * {_l2(query_vec)!r}D)")
 
 
 def cosine_topk_bruteforce(df: DataFrame, query_vec: list[float], k: int = 10,
@@ -293,10 +300,7 @@ def rp_rerank_topk(df: DataFrame, query_vec: list[float], k: int = 10,
         .select(id_col, vec_col,
                 cosine_to_literal("_proj", qp).alias("_rp"))
         .orderBy(F.desc("_rp"), F.asc(id_col)).limit(prek))
-    return (stage1.select(
-        F.col(id_col).alias("id"),
-        cosine_to_literal(vec_col, query_vec).alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.asc("id")).limit(k))
+    return cosine_topk_bruteforce(stage1, query_vec, k, id_col, vec_col)
 
 
 # ------------------------------------------- maintained-index lifecycle
@@ -368,15 +372,14 @@ class _Lifecycle:
             F.lit(None).cast(f.dataType).alias(f.name) for f in fields
             if f.name not in (id_col, _EPOCH)]), path, target)
 
-    def alive(self, spark, path: str, id_col: str,
-              where: Column | None = None) -> DataFrame:
+    def alive(self, spark, path: str, id_col: str) -> DataFrame:
         """One generation: a filtered scan. Several: a broadcast join
         against the per-id newest epoch over every generation but the
-        oldest (which supersedes nothing) — O(delta), no window."""
+        oldest (which supersedes nothing) — O(delta), no window. Rows keep
+        their `ingest_epoch`: (id, epoch) names an alive row, the key a
+        serving read fetches raw payload columns by."""
         idx = spark.read.parquet(path)
         rows = idx.filter(F.col(self.payload).isNotNull())
-        if where is not None:
-            rows = rows.filter(where)
         epochs = _index_epochs(spark, path)
         if len(epochs) > 1:
             newest = (idx.filter(F.col(_EPOCH) > epochs[0])
@@ -385,7 +388,7 @@ class _Lifecycle:
                     .filter(F.col("_new").isNull()
                             | (F.col(_EPOCH) >= F.col("_new")))
                     .drop("_new"))
-        return rows.drop(_EPOCH)
+        return rows
 
     def compact(self, spark, path: str, id_col: str) -> None:
         epochs = _index_epochs(spark, path)
@@ -538,7 +541,7 @@ def rp_index_latest(spark, path: str,
     Tombstones (`delete_from_rp_index`'s NULL-proj rows) are never
     served yet still hold their id, so a deletion hides every earlier
     version of its id while a later re-insert resurrects it."""
-    return _RP.alive(spark, path, id_col)
+    return _RP.alive(spark, path, id_col).drop(_EPOCH)
 
 
 def compact_rp_index(spark, path: str, id_col: str = "vec_id") -> None:
@@ -658,15 +661,31 @@ def rp_index_stream_read(spark, state_dir: str,
         id_col, "proj", vec_col)
 
 
+def _rp_two_stage(ranked: DataFrame, raw: DataFrame, keys: list[str],
+                  query_vec: list[float], k: int, prek: int, out_dim: int,
+                  in_dim: int, id_col: str, vec_col: str) -> DataFrame:
+    """The one two-stage rp kernel: stage 1 ranks `ranked` on (keys,
+    proj) by projected cosine and keeps the top `prek` keys; stage 2
+    fetches `vec_col` from `raw` for exactly those keys (a broadcast
+    semi-join) and re-ranks them exactly."""
+    qp = project_vec(query_vec, out_dim, in_dim)
+    stage1 = (ranked.select(*keys, cosine_to_literal("proj", qp).alias("_rp"))
+              .orderBy(F.desc("_rp"), F.asc(id_col)).limit(prek))
+    fetch = raw.select(*keys, vec_col).join(
+        F.broadcast(stage1.select(*keys)), keys, "left_semi")
+    return cosine_topk_bruteforce(fetch, query_vec, k, id_col, vec_col)
+
+
 def rp_rerank_topk_from_df(idx: DataFrame, query_vec: list[float],
                            k: int = 10, prek: int = 50,
                            out_dim: int = 16, in_dim: int = 64,
                            id_col: str = "vec_id",
                            vec_col: str = "embedding") -> DataFrame:
     """Two-stage retrieval over an index DATAFRAME in the
-    `write_rp_index` layout (id, proj, vec) — the serving kernel shared
-    by the path-based reader and the incremental-maintenance read views
-    (`rp_index_latest`): stage 1 scans ONLY (id, proj) — the narrow
+    `write_rp_index` layout (id, proj, vec) — the serving kernel of
+    `rp_rerank_topk_from_index` with the frame as both inputs and the id
+    as the fetch key (for read views such as `rp_index_stream_read` or
+    `rp_index_latest`): stage 1 scans ONLY (id, proj) — the narrow
     column read — ranks by projected cosine and keeps `prek`
     candidates; stage 2 fetches raw vectors for exactly those rows
     (broadcast semi-join of the prek ids against the (id, vec) columns
@@ -675,16 +694,8 @@ def rp_rerank_topk_from_df(idx: DataFrame, query_vec: list[float],
     Identical fold order to the inline `rp_rerank_topk`, so results —
     candidate set included — are bit-equal to it and to the two-stage
     oracle replay."""
-    qp = project_vec(query_vec, out_dim, in_dim)
-    stage1 = (idx.select(F.col(id_col),
-                         cosine_to_literal("proj", qp).alias("_rp"))
-              .orderBy(F.desc("_rp"), F.asc(id_col)).limit(prek))
-    fetch = idx.select(id_col, vec_col).join(
-        F.broadcast(stage1.select(id_col)), id_col, "left_semi")
-    return (fetch.select(
-        F.col(id_col).alias("id"),
-        cosine_to_literal(vec_col, query_vec).alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.asc("id")).limit(k))
+    return _rp_two_stage(idx, idx, [id_col], query_vec, k, prek, out_dim,
+                         in_dim, id_col, vec_col)
 
 
 def rp_rerank_topk_from_index(spark, path: str, query_vec: list[float],
@@ -693,10 +704,44 @@ def rp_rerank_topk_from_index(spark, path: str, query_vec: list[float],
                               id_col: str = "vec_id",
                               vec_col: str = "embedding") -> DataFrame:
     """Two-stage retrieval against a MATERIALIZED `write_rp_index`
-    path (see `rp_rerank_topk_from_df` for the serving shape)."""
-    return rp_rerank_topk_from_df(
-        spark.read.parquet(path), query_vec, k=k, prek=prek,
-        out_dim=out_dim, in_dim=in_dim, id_col=id_col, vec_col=vec_col)
+    path (see `rp_rerank_topk_from_df` for the serving shape). Stage 1
+    ranks the ALIVE rows (`rp_index_latest`'s read rule) and keeps their
+    (id, ingest_epoch) keys; stage 2 fetches raw vectors by those keys
+    from the plain index scan. `ingest_epoch` is a partition column, so
+    neither scan reads `proj` and the vectors together, and superseded
+    or deleted rows are never served."""
+    return _rp_two_stage(_RP.alive(spark, path, id_col),
+                         spark.read.parquet(path), [id_col, _EPOCH],
+                         query_vec, k, prek, out_dim, in_dim, id_col,
+                         vec_col)
+
+
+def _multi_sims(df: DataFrame, queries: dict[int, list[float]],
+                id_col: str, vec_col: str, sim_col: str,
+                *keep: str) -> DataFrame:
+    """(query_id, id, *keep, sim_col): the cosine of every query against
+    every row of `df` in one pass. The queries ride as ONE literal
+    matrix with their driver-side norms, and the row norm folds once
+    per row and is reused across queries."""
+    qids = sorted(queries)
+    vecs = [queries[q] for q in qids]
+    sims = (f"transform(zip_with({_lit_mat_sql(vecs)}, "
+            f"{_lit_vec_sql([_l2(v) for v in vecs])}, "
+            f"(qv, qn) -> named_struct('v', qv, 'n', qn)), "
+            f"s -> try_divide({_dot_sql(vec_col, 's.v')}, __rnorm * s.n))")
+    qid_lit = "array(" + ",".join(str(int(q)) for q in qids) + ")"
+    # posexplode_OUTER: the sims array is a transform over a LITERAL
+    # query matrix — never null, size always = query count — so outer
+    # emits identical rows; the inner form let
+    # InferFiltersFromGenerate push a size(<sims>) > 0 guard that
+    # re-evaluated every per-query dot once more per row below the
+    # explode (the bm25_topk_multi finding, r12)
+    return (df.withColumn("__rnorm", _norm(F.col(vec_col)))
+            .select(F.col(id_col).alias("id"), *keep,
+                    F.posexplode_outer(F.expr(sims)).alias("_qi", sim_col))
+            .select(F.expr(f"element_at({qid_lit}, _qi + 1)")
+                    .cast("bigint").alias("query_id"),
+                    "id", *keep, sim_col))
 
 
 def rp_rerank_topk_multi_from_index(spark, path: str,
@@ -708,65 +753,35 @@ def rp_rerank_topk_multi_from_index(spark, path: str,
     """BATCHED two-stage retrieval against the `write_rp_index` layout —
     the batch-serving shape (N queries amortize ONE narrow index scan,
     the `cosine_topk_multi` pattern composed with the projected-index
-    path): stage 1 scans only (id, proj), scores every projected query
-    per row (row norm folded once, queries ride as one literal matrix),
-    and keeps the per-query top `prek` (one keyed window — shuffle
-    volume is (id, qi, rp) tuples, the documented multi-query trade);
-    stage 2 fetches raw vectors ONCE for the distinct candidate-id
-    union (broadcast semi-join), scores the exact sims array per
-    fetched row, and re-ranks per query. Deterministic end-to-end
-    (projection pure-of-shape, id tie-breaks both stages), so the
-    oracle replays both stages PER QUERY. Returns
-    (query_id, id, cosine_sim) — per-query exact top-k."""
-    import math
-
-    qids = sorted(queries)
-    qps = [project_vec(queries[q], out_dim, in_dim) for q in qids]
-
-    def _norms(vecs):
-        out = []
-        for v in vecs:
-            acc = 0.0
-            for x in v:
-                acc += float(x) * float(x)
-            out.append(math.sqrt(acc))
-        return out
-
-    idx = spark.read.parquet(path)
-    qid_lit = "array(" + ",".join(str(int(q)) for q in qids) + ")"
-    sims1 = (f"transform(zip_with({_lit_mat_sql(qps)}, "
-             f"{_lit_vec_sql(_norms(qps))}, "
-             f"(qv, qn) -> named_struct('v', qv, 'n', qn)), "
-             f"s -> {_dot_sql('proj', 's.v')} / (__rnorm * s.n))")
+    path): stage 1 scans only the ALIVE (id, proj) rows, scores every
+    projected query per row (row norm folded once, queries ride as one
+    literal matrix), and keeps the per-query top `prek` (one keyed
+    window — shuffle volume is (id, qi, rp) tuples, the documented
+    multi-query trade); stage 2 fetches raw vectors ONCE for the
+    distinct candidate (id, ingest_epoch) keys (broadcast semi-join, as
+    in `rp_rerank_topk_from_index`), scores the exact sims per fetched
+    row, and re-ranks per query. Deterministic end-to-end (projection
+    pure-of-shape, id tie-breaks both stages), so the oracle replays
+    both stages PER QUERY. Returns (query_id, id, cosine_sim) —
+    per-query exact top-k."""
+    keys = ["id", _EPOCH]
+    projected = {q: project_vec(v, out_dim, in_dim)
+                 for q, v in queries.items()}
     w1 = Window.partitionBy("query_id").orderBy(F.desc("rp"), F.asc("id"))
-    # posexplode_OUTER for the same reason as cosine_topk_multi (r12):
-    # literal-matrix transform is never null/empty, and the inner
-    # form's inferred size-guard re-ran all query dots per row
-    cand = (idx.select(F.col(id_col), F.col("proj"))
-            .withColumn("__rnorm", _norm(F.col("proj")))
-            .select(F.col(id_col).alias("id"),
-                    F.posexplode_outer(F.expr(sims1)).alias("_qi", "rp"))
-            .select(F.expr(f"element_at({qid_lit}, _qi + 1)")
-                    .cast("bigint").alias("query_id"), "_qi", "id", "rp")
+    cand = (_multi_sims(_RP.alive(spark, path, id_col), projected, id_col,
+                        "proj", "rp", _EPOCH)
             .withColumn("_rn", F.row_number().over(w1))
             .filter(F.col("_rn") <= prek)
-            .select("query_id", "_qi", "id"))
-    raw = [[float(x) for x in queries[q]] for q in qids]
-    sims2 = (f"transform(zip_with({_lit_mat_sql(raw)}, "
-             f"{_lit_vec_sql(_norms(raw))}, "
-             f"(qv, qn) -> named_struct('v', qv, 'n', qn)), "
-             f"s -> {_dot_sql(vec_col, 's.v')} / (__rnorm * s.n))")
-    fetch = (idx.select(F.col(id_col).alias("id"), F.col(vec_col))
-             .join(F.broadcast(cand.select("id").distinct()),
-                   "id", "left_semi")
-             .withColumn("__rnorm", _norm(F.col(vec_col)))
-             .select("id", F.expr(sims2).alias("_sims")))
+            .select("query_id", *keys))
+    fetch = (spark.read.parquet(path)
+             .select(F.col(id_col).alias("id"), _EPOCH, vec_col)
+             .join(F.broadcast(cand.select(*keys).distinct()), keys,
+                   "left_semi"))
     w2 = Window.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.asc("id"))
-    return (cand.join(fetch, "id")
-            .select("query_id", "id",
-                    F.expr("element_at(_sims, _qi + 1)")
-                    .alias("cosine_sim"))
+    return (_multi_sims(fetch, queries, "id", vec_col, "cosine_sim", _EPOCH)
+            .join(F.broadcast(cand), ["query_id", *keys], "left_semi")
+            .select("query_id", "id", "cosine_sim")
             .withColumn("_rn", F.row_number().over(w2))
             .filter(F.col("_rn") <= k).drop("_rn"))
 
@@ -840,11 +855,7 @@ def lsh_bucketed_topk(df: DataFrame, query_vec: list[float], k: int = 10,
     cand = bucketed.filter(
         F.bit_count(F.col("bucket").bitwiseXOR(F.lit(int(q_bucket)))) <= max_hamming
     )
-    scored = cand.select(
-        F.col(id_col).alias("id"),
-        cosine_to_literal(vec_col, query_vec).alias("cosine_sim"),
-    )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc("id")).limit(k)
+    return cosine_topk_bruteforce(cand, query_vec, k, id_col, vec_col)
 
 
 # ------------------------------------------------------- IVF (inverted file)
@@ -1014,14 +1025,8 @@ def ivf_topk(df: DataFrame, query_vec: list[float], k: int = 10,
     work — real IVF deployments never re-derive centroids per search."""
     if cents is None:
         cents = ivf_centroids(df, n_centroids, id_col, vec_col)
-    probe = _probe_cells(cents, query_vec, n_probe)  # 1-based cells
-    assigned = ivf_assign(df, cents, vec_col)
-    cand = assigned.filter(F.col("ivf_cell").isin(probe))
-    scored = cand.select(
-        F.col(id_col).alias("id"),
-        cosine_to_literal(vec_col, query_vec).alias("cosine_sim"),
-    )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc("id")).limit(k)
+    return ivf_topk_from_df(ivf_assign(df, cents, vec_col), cents,
+                            query_vec, k, n_probe, id_col, vec_col)
 
 
 def quantize_embeddings(df: DataFrame, vec_col: str = "embedding",
@@ -1100,8 +1105,6 @@ def decontaminate_semantic(corpus: DataFrame, benchmark: DataFrame,
     set is bit-identical: a row survives iff no bench vector reaches
     the threshold; NULL embeddings count as no-match on both forms via
     the COALESCE.)"""
-    import math
-
     bvec = bench_vec_col or vec_col
     rows = benchmark.select(F.col(bvec).alias("_bvec")).collect()
     vecs = [[float(x) for x in r["_bvec"]] for r in rows
@@ -1110,12 +1113,7 @@ def decontaminate_semantic(corpus: DataFrame, benchmark: DataFrame,
         return corpus
     thr = float(threshold)
     orig_cols = corpus.columns
-    bnorms = []
-    for v in vecs:
-        acc = 0.0
-        for x in v:
-            acc += x * x
-        bnorms.append(math.sqrt(acc))
+    bnorms = [_l2(v) for v in vecs]
     # indexed fold (r12, same change as _cell_sims): the zip_with form
     # allocated a dim-element product array per (corpus row × bench
     # vector); the indexed fold is allocation-free and arithmetic-
@@ -1517,7 +1515,7 @@ def compact_ivf_index(spark, path: str, id_col: str = "vec_id") -> None:
 def ivf_read_alive(spark, path: str, id_col: str = "vec_id") -> DataFrame:
     """The materialized IVF index's ALIVE rows (latest-wins read rule
     applied, generation column dropped)."""
-    return _IVF.alive(spark, path, id_col)
+    return _IVF.alive(spark, path, id_col).drop(_EPOCH)
 
 
 def ivf_topk_from_index(spark, path: str, cents: list[list[float]],
@@ -1532,13 +1530,8 @@ def ivf_topk_from_index(spark, path: str, cents: list[list[float]],
     per-id newest-epoch table — the probe reads the same pruned
     directories either way, and the single-generation check is a
     filesystem listing (zero cost on compacted indexes)."""
-    probe = _probe_cells(cents, query_vec, n_probe)
-    cand = _IVF.alive(spark, path, id_col, F.col("ivf_cell").isin(probe))
-    scored = cand.select(
-        F.col(id_col).alias("id"),
-        cosine_to_literal(vec_col, query_vec).alias("cosine_sim"),
-    )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc("id")).limit(k)
+    return ivf_topk_from_df(_IVF.alive(spark, path, id_col), cents,
+                            query_vec, k, n_probe, id_col, vec_col)
 
 
 def ivf_topk_from_df(idx: DataFrame, cents: list[list[float]],
@@ -1552,10 +1545,8 @@ def ivf_topk_from_df(idx: DataFrame, cents: list[list[float]],
     them. Same probe choice and fold order as `ivf_topk`, so results
     over the same alive rows are bit-equal to the inline path."""
     probe = _probe_cells(cents, query_vec, n_probe)
-    scored = idx.filter(F.col("ivf_cell").isin(probe)).select(
-        F.col(id_col).alias("id"),
-        cosine_to_literal(vec_col, query_vec).alias("cosine_sim"))
-    return scored.orderBy(F.desc("cosine_sim"), F.asc("id")).limit(k)
+    return cosine_topk_bruteforce(idx.filter(F.col("ivf_cell").isin(probe)),
+                                  query_vec, k, id_col, vec_col)
 
 
 def ivf_index_stream_sink(state_dir: str, cents: list[list[float]],
@@ -1625,38 +1616,11 @@ def cosine_topk_multi(df: DataFrame, queries: dict[int, list[float]],
     norm cost), posexplodes to (query_idx, sim), and a per-query window
     takes the top k. One scan + one shuffle on query_id; at 100 TB this
     beats per-query scans by the query count."""
-    import math
-
-    qids = sorted(queries)
-    mat = _lit_mat_sql([queries[q] for q in qids])
-    qnorms = []
-    for q in qids:
-        acc = 0.0
-        for x in queries[q]:
-            acc += float(x) * float(x)
-        qnorms.append(math.sqrt(acc))
-    sims = (f"transform(zip_with({mat}, {_lit_vec_sql(qnorms)}, "
-            f"(qv, qn) -> named_struct('v', qv, 'n', qn)), "
-            f"s -> {_dot_sql(vec_col, 's.v')} / (__rnorm * s.n))")
-    qid_lit = ("array(" + ",".join(str(int(q)) for q in qids) + ")")
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cosine_sim"), F.asc("id"))
-    # posexplode_OUTER: the sims array is a transform over a LITERAL
-    # query matrix — never null, size always = query count — so outer
-    # emits identical rows; the inner form let
-    # InferFiltersFromGenerate push a size(<sims>) > 0 guard that
-    # re-evaluated every per-query dot once more per row below the
-    # explode (the bm25_topk_multi finding, r12)
-    return (
-        df.withColumn("__rnorm", _norm(F.col(vec_col)))
-        .select(F.col(id_col).alias("id"),
-                F.posexplode_outer(F.expr(sims)).alias("_qi", "cosine_sim"))
-        .select(F.expr(f"element_at({qid_lit}, _qi + 1)")
-                .cast("bigint").alias("query_id"),
-                "id", "cosine_sim")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k).drop("_rn")
-    )
+    return (_multi_sims(df, queries, id_col, vec_col, "cosine_sim")
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k).drop("_rn"))
 
 
 # ------------------------------------------------- product quantization
@@ -1802,6 +1766,22 @@ def pq_encode(df: DataFrame, books: list[list[list[float]]],
         F.expr(f"array({','.join(code_exprs)})").alias(code_col))
 
 
+def _adc_terms(books: list[list[list[float]]], query_vec: list[float],
+               code_col: str) -> list[str]:
+    """The ADC lookup of every subspace: T[s][c] = dot(q_s, codebook[s][c])
+    premultiplied driver-side (m × code_k doubles), indexed per row by the
+    stored code — so scoring a candidate costs m array lookups."""
+    subdim = len(books[0][0])
+    terms = []
+    for s, book in enumerate(books):
+        qs = query_vec[s * subdim:(s + 1) * subdim]
+        table = [sum(float(x) * float(y) for x, y in zip(qs, cv))
+                 for cv in book]
+        terms.append(f"element_at({_lit_vec_sql(table)}, "
+                     f"element_at({code_col}, {s + 1}) + 1)")
+    return terms
+
+
 def pq_topk(encoded: DataFrame, books: list[list[list[float]]],
             query_vec: list[float], k: int = 10, rerank: int = 100,
             id_col: str = "vec_id", vec_col: str = "embedding",
@@ -1812,22 +1792,10 @@ def pq_topk(encoded: DataFrame, books: list[list[list[float]]],
     instead of `dim` multiplies; the top `rerank` by ADC score are then
     re-ranked by exact cosine on the float column. Standard IVF-PQ probe
     economics: the cheap pass bounds the expensive pass."""
-    m = len(books)
-    subdim = len(books[0][0])
-    terms = []
-    for s in range(m):
-        table = [sum(float(query_vec[s * subdim + i]) * float(cv[i])
-                     for i in range(subdim)) for cv in books[s]]
-        terms.append(f"element_at({_lit_vec_sql(table)}, "
-                     f"element_at({code_col}, {s + 1}) + 1)")
-    adc = F.expr(" + ".join(terms))
+    adc = F.expr(" + ".join(_adc_terms(books, query_vec, code_col)))
     cand = (encoded.withColumn("_adc", adc)
             .orderBy(F.desc("_adc"), F.asc(id_col)).limit(rerank))
-    scored = cand.select(
-        F.col(id_col).alias("id"),
-        cosine_to_literal(vec_col, query_vec).alias("cosine_sim"),
-    )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc("id")).limit(k)
+    return cosine_topk_bruteforce(cand, query_vec, k, id_col, vec_col)
 
 
 def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.95,
@@ -1920,36 +1888,16 @@ def ivfpq_topk(spark, path: str, cents: list[list[float]],
     cosine on the float column. Cheap pass bounds the expensive pass;
     non-probed cells are never read (partition pruning, plan-asserted in
     units)."""
-    def dot(a, b):
-        return sum(float(x) * float(y) for x, y in zip(a, b))
-
-    def cos(a, b):
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(y * y for y in b) ** 0.5
-        return dot(a, b) / (na * nb) if na and nb else 0.0
-
-    ranked = sorted(range(len(cents)), key=lambda i: -cos(query_vec, cents[i]))
-    probe = [i + 1 for i in ranked[:n_probe]]
-    m = len(books)
-    subdim = len(books[0][0])
-    qdotc = [dot(query_vec, c) for c in cents]
-    terms = []
-    for s in range(m):
-        qs = [float(query_vec[s * subdim + i]) for i in range(subdim)]
-        table = [dot(qs, cv) for cv in books[s]]
-        terms.append(f"element_at({_lit_vec_sql(table)}, "
-                     f"element_at(pq_code, {s + 1}) + 1)")
-    adc = F.expr(
-        f"element_at({_lit_vec_sql(qdotc)}, ivf_cell) + " + " + ".join(terms))
+    qdotc = [sum(float(x) * float(y) for x, y in zip(query_vec, c))
+             for c in cents]
+    adc = F.expr(f"element_at({_lit_vec_sql(qdotc)}, ivf_cell) + "
+                 + " + ".join(_adc_terms(books, query_vec, "pq_code")))
     cand = (spark.read.parquet(path)
-            .filter(F.col("ivf_cell").isin(probe))
+            .filter(F.col("ivf_cell").isin(
+                _probe_cells(cents, query_vec, n_probe)))
             .withColumn("_adc", adc)
             .orderBy(F.desc("_adc"), F.asc(id_col)).limit(rerank))
-    scored = cand.select(
-        F.col(id_col).alias("id"),
-        cosine_to_literal(vec_col, query_vec).alias("cosine_sim"),
-    )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc("id")).limit(k)
+    return cosine_topk_bruteforce(cand, query_vec, k, id_col, vec_col)
 
 
 # ------------------------------------------------- contrastive mining

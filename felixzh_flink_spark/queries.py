@@ -4170,9 +4170,10 @@ def rp_rerank_upsert_indexed(spark, sf_dir):
     crash-safe fold — the round-10 verdict's top ask: serving an
     uncompacted index paid a latest-wins resolution per read, measured
     8.8→87.8 MB of shuffle linear sf1→sf10). Serving
-    (`rp_index_latest`) detects the single generation from a DIRECTORY
-    LISTING and reads join-free — the same narrow-scan plan as the
-    bulk index, KB-grade shuffle at any corpus size. HARD oracle: the
+    (`rp_rerank_topk_from_index`, through `rp_index_latest`'s alive
+    rule) detects the single generation from a DIRECTORY LISTING and
+    reads join-free — the same narrow-scan plan as the bulk index,
+    KB-grade shuffle at any corpus size. HARD oracle: the
     full-corpus two-stage replay over the TRUE vectors — a superseded
     row leaking through compaction into stage 1's candidate ranking or
     stage 2's re-score fails the hash (the stale vectors are reversed
@@ -4180,10 +4181,9 @@ def rp_rerank_upsert_indexed(spark, sf_dir):
     row proves upsert + auto-compaction END-TO-END; the uncompacted
     merge-on-read path is driver-proven by
     `rp_rerank_tombstone_indexed` and unit-pinned equivalent."""
-    idx = SIM.rp_index_latest(spark, _rp_upsert_index_path(spark, sf_dir))
-    return SIM.rp_rerank_topk_from_df(
-        idx, _query_vec(spark, sf_dir), k=10, prek=50,
-        out_dim=16, in_dim=64)
+    return SIM.rp_rerank_topk_from_index(
+        spark, _rp_upsert_index_path(spark, sf_dir),
+        _query_vec(spark, sf_dir), k=10, prek=50, out_dim=16, in_dim=64)
 
 
 #: per-sf_dir path of a TOMBSTONE-carrying rp index: epoch-0 bulk over
@@ -4222,11 +4222,9 @@ def rp_rerank_tombstone_indexed(spark, sf_dir):
     candidates and fails the hash. Compaction applying tombstones
     physically, and re-insert resurrection, are unit-pinned
     (tests/test_similarity_rp.py)."""
-    idx = SIM.rp_index_latest(spark,
-                              _rp_tombstone_index_path(spark, sf_dir))
-    return SIM.rp_rerank_topk_from_df(
-        idx, _query_vec(spark, sf_dir), k=10, prek=50,
-        out_dim=16, in_dim=64)
+    return SIM.rp_rerank_topk_from_index(
+        spark, _rp_tombstone_index_path(spark, sf_dir),
+        _query_vec(spark, sf_dir), k=10, prek=50, out_dim=16, in_dim=64)
 
 
 _RP_FILTER_SOURCES = "('src0','src1','src2','src3','src4')"

@@ -23,7 +23,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: local[N] width: $SPARK_GRAFT_CPUS, else the CPUs this process may run on
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS")
+                   or len(os.sched_getaffinity(0)))
 
 
 def get_spark(

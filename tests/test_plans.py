@@ -253,6 +253,36 @@ def test_rp_index_stage1_scan_is_narrow(spark):
     assert "BroadcastHashJoin" in p and "LeftSemi" in p
 
 
+def test_rp_index_reads_stay_narrow_on_multi_generation_index(spark,
+                                                             tmp_path):
+    """`test_rp_index_stage1_scan_is_narrow`'s three conditions for both
+    path-based rp serving reads over an UNCOMPACTED index (bulk + upsert
+    + delete): the alive rule's newest-epoch join and the (id, epoch)
+    keyed fetch never put `proj` and `embedding` in one scan."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from felixzh_flink_spark.operators import similarity as SIM
+    e = spark.read.parquet(f"{SF}/embeddings.parquet")
+    changed = e.filter(F.col("vec_id") % 7 == 3)
+    path = str(tmp_path / "rp")
+    SIM.write_rp_index(e, path, epoch=0)
+    SIM.append_rp_index(changed, path, epoch=1, compact_after=100)
+    SIM.delete_from_rp_index(changed.select("vec_id"), path, epoch=2)
+    qv = [float(x)
+          for x in e.filter(F.col("vec_id") == 0).head()["embedding"]]
+    for df in (SIM.rp_rerank_topk_from_index(spark, path, qv),
+               SIM.rp_rerank_topk_multi_from_index(spark, path,
+                                                   {0: qv, 1: qv[::-1]})):
+        p = df._jdf.queryExecution().executedPlan().toString()
+        schemas = re.findall(r"ReadSchema: struct<([^>]*)>", p)
+        assert [s for s in schemas if "proj" in s and "embedding" not in s]
+        assert [s for s in schemas if "embedding" in s and "proj" not in s]
+        assert not [s for s in schemas if "embedding" in s and "proj" in s]
+        assert "BroadcastHashJoin" in p and "LeftSemi" in p
+
+
 def test_uncompacted_ivf_probe_keeps_cell_partition_filter(spark, tmp_path):
     """Over an UNCOMPACTED IVF index (bulk + cross-cell upsert +
     delete) the probe's index scan still prunes on ivf_cell: the

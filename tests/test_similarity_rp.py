@@ -850,3 +850,91 @@ def test_decontaminate_semantic_matches_bruteforce(spark):
     plan = surv._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert "Exchange" not in plan
+
+
+def _multi_generation_rp_index(spark, path):
+    """(embeddings, live corpus, path): an rp index left UNCOMPACTED over
+    three generations — epoch 0 stores stale (reversed) vectors for ids
+    ≡ 3 (mod 7), epoch 1 re-embeds exactly those ids, epoch 2 deletes
+    id 0."""
+    from felixzh_flink_spark.operators.similarity import (
+        append_rp_index,
+        delete_from_rp_index,
+        write_rp_index,
+    )
+    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    stale = e.withColumn(
+        "embedding",
+        F.when(F.col("vec_id") % 7 == 3, F.reverse("embedding"))
+        .otherwise(F.col("embedding")))
+    write_rp_index(stale, path, OUT, IN, epoch=0)
+    append_rp_index(e.filter(F.col("vec_id") % 7 == 3), path, OUT, IN,
+                    epoch=1, compact_after=100)
+    delete_from_rp_index(e.filter(F.col("vec_id") == 0).select("vec_id"),
+                         path, epoch=2)
+    return e, e.filter(F.col("vec_id") != 0), path
+
+
+def test_index_reads_serve_only_alive_rows(spark, tmp_path):
+    """Both path-based serving reads go through the alive rule: over an
+    upserted, deleted and uncompacted index they return exactly the
+    inline two-stage result over the live corpus — ids, order and
+    double-exact scores — never the deleted id, a superseded vector or
+    an id twice."""
+    from felixzh_flink_spark.operators.similarity import (
+        _index_epochs,
+        rp_rerank_topk_from_index,
+        rp_rerank_topk_multi_from_index,
+    )
+    e, live, path = _multi_generation_rp_index(spark,
+                                               str(tmp_path / "rp"))
+    assert _index_epochs(spark, path) == [0, 1, 2]
+    vecs = {r.vec_id: [float(x) for x in r.embedding]
+            for r in e.filter(F.col("vec_id") < 3).collect()}
+    inline = {q: [(r.id, r.cosine_sim)
+                  for r in rp_rerank_topk(live, v, k=10, prek=50).collect()]
+              for q, v in vecs.items()}
+    got = [(r.id, r.cosine_sim)
+           for r in rp_rerank_topk_from_index(
+               spark, path, vecs[0], k=10, prek=50).collect()]
+    assert got == inline[0]
+    multi = rp_rerank_topk_multi_from_index(spark, path, vecs, k=10,
+                                            prek=50).collect()
+    for q in vecs:
+        rows = sorted((r for r in multi if r.query_id == q),
+                      key=lambda r: (-r.cosine_sim, r.id))
+        assert [(r.id, r.cosine_sim) for r in rows] == inline[q]
+
+
+def test_zero_and_null_vectors_score_null_and_rank_last(spark):
+    """A zero-norm and a NULL vector score NULL in every exact cosine
+    kernel (no DIVIDE_BY_ZERO under ANSI) and rank after every scored
+    row; a zero query scores every row NULL."""
+    from felixzh_flink_spark.operators.similarity import (
+        cosine_topk_bruteforce,
+        cosine_topk_multi,
+        rp_rerank_topk_from_df,
+    )
+    rows = [(i, [float((i * 7 + j) % 5) - 2.0 for j in range(IN)])
+            for i in range(1, 6)]
+    df = spark.createDataFrame(rows + [(0, [0.0] * IN), (9, None)],
+                               "vec_id long, embedding array<float>")
+    idx = random_projection(df, OUT, IN).join(df, "vec_id")
+    q = rows[0][1]
+
+    def check(ranked):
+        assert [r[0] for r in ranked[-2:]] == [0, 9]
+        assert [r[1] for r in ranked[-2:]] == [None, None]
+        assert all(r[1] is not None for r in ranked[:-2])
+
+    check([(r.id, r.cosine_sim)
+           for r in cosine_topk_bruteforce(df, q, k=7).collect()])
+    check([(r.id, r.cosine_sim)
+           for r in rp_rerank_topk_from_df(idx, q, k=7, prek=7).collect()])
+    multi = cosine_topk_multi(df, {1: q, 2: [0.0] * IN}, k=7).collect()
+    check(sorted(((r.id, r.cosine_sim) for r in multi if r.query_id == 1),
+                 key=lambda t: (t[1] is None, -(t[1] or 0.0), t[0])))
+    zero_q = sorted((r.id, r.cosine_sim) for r in multi if r.query_id == 2)
+    assert zero_q == [(i, None) for i in (0, 1, 2, 3, 4, 5, 9)]
+    zero = cosine_topk_bruteforce(df, [0.0] * IN, k=7).collect()
+    assert [(r.id, r.cosine_sim) for r in zero] == zero_q

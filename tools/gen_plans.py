@@ -11,7 +11,7 @@ checkout with --tag after:
     python tools/gen_plans.py --round r13 --repo /tmp/before --tag before q1 q2
     python tools/gen_plans.py --round r13 --tag after q1 q2
 
-Round-mode plans use a bench.py-shaped session (local[$SPARK_GRAFT_CPUS],
+Round-mode plans use a bench.py-shaped session (local[session.DEFAULT_CPUS],
 data from $SPARK_GRAFT_SF_DIR, default sf0.1).
 """
 
@@ -135,9 +135,10 @@ def dump_round(round_name: str, repo: str, tag: str,
         "__spark_entry__", os.path.join(repo, "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from felixzh_flink_spark.session import DEFAULT_CPUS  # REPO's package
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
+    spark = (SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
              .config("spark.sql.session.timeZone", "UTC")
              .config("spark.ui.enabled", "false")
              # match get_spark's driver sizing: PQ-family plan construction
